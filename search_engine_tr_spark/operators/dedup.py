@@ -451,6 +451,14 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
 # Transitive near-dup clustering (pairs -> components -> keep-list)
 # ---------------------------------------------------------------------------
 
+def _release(ckpt: DataFrame) -> None:
+    """Drop the cached blocks behind a localCheckpoint'd frame.
+    ``DataFrame.unpersist`` only clears cache-manager entries; the
+    checkpoint RDD under the frame's LogicalRDD stays cached for the
+    session's lifetime unless it is unpersisted itself."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                    max_iter: int = 50) -> DataFrame:
     """Connected components of the near-dup pair graph → (id, comp),
@@ -478,6 +486,7 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
            .distinct().localCheckpoint())
     labels = (sym.select(F.col("src").alias("id")).distinct()
               .withColumn("comp", F.col("id")).localCheckpoint())
+    prev = labels  # the checkpoint this round's labels are read from
     for _ in range(max_iter):
         nb = (sym.join(labels.withColumnRenamed("id", "dst"), "dst")
               .groupBy(F.col("src").alias("id"))
@@ -505,7 +514,8 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                           F.least("comp", "_ccomp").alias("comp"))
                   .localCheckpoint(eager=False))
         changed = staged.filter(F.col("comp") != F.col("_old")).count()
-        labels = staged.select("id", "comp")
+        _release(prev)  # staged is materialized: the last round's is spare
+        labels, prev = staged.select("id", "comp"), staged
         if changed == 0:
             return labels
     raise RuntimeError(
@@ -593,6 +603,8 @@ def dup_components_star(pairs: DataFrame, id_a: str = "id_a",
         # into it (one pass per round, not checkpoint + aggregate)
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         nxt_sig = sig(nxt)
+        if cur is not edges:  # edges is read again by the validation
+            _release(cur)
         if nxt_sig == cur_sig:
             # w.h.p. the set is unchanged -> fixed point of both stars
             converged = True
@@ -610,7 +622,9 @@ def dup_components_star(pairs: DataFrame, id_a: str = "id_a",
               .localCheckpoint(eager=False))  # materialized by the count
     # hard validation: exactly one label per node, and both endpoints of
     # every ORIGINAL pair agree (guards the probabilistic signature exit)
-    if labels.count() != nodes.count():
+    n_labels = labels.count()
+    _release(star)
+    if n_labels != nodes.count():
         raise RuntimeError("dup_components_star: non-star fixed point "
                            "(a node carries multiple labels)")
     la = labels.select(F.col("id").alias("src"), F.col("comp").alias("_ca"))

@@ -8,16 +8,25 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
 3. read ONLY the matching ``term_bucket=`` partitions of the blocks table
    (directory-level partition pruning — the scalable replacement for the
    reference's 27-table routing) with a pushed-down term filter
-4. per doc-shard: block-max WAND (or exhaustive) local top-k inside one
-   Arrow-batched applyInPandas group — each head term's postings are split
+4. per doc-shard: block-max WAND (or exhaustive) local top-k. A query
+   whose postings (Σdf, known from step 2) fit under
+   ``BM25Index._DRIVER_MAX_POSTINGS`` fetches its pruned blocks in ONE
+   JVM-only job (Arrow ``toPandas``) and runs the same per-shard kernel on
+   the driver — no Python-worker stage, whose start-up dwarfs a few ms of
+   kernel work. Larger queries run it inside one Arrow-batched
+   applyInPandas group per shard — each head term's postings are split
    across all shards, so no task sees more than df/n_shards postings
-5. global ``orderBy(score desc, doc_id).limit(k)`` → TakeOrderedAndProject
-   (no full sort), then metadata joins AFTER the limit (J3 pattern).
+5. global (score desc, doc_id asc) top-k: a pandas sort of shards × k rows
+   on the driver path, ``orderBy(...).limit(k)`` → TakeOrderedAndProject
+   (no full sort) on the distributed one. Result pages then fetch the k
+   hits' url/title/description with ONE pushed-down ``doc_id IN (...)``
+   read (J3 pattern): k rows, never a broadcast or shuffle of the whole
+   table.
 """
 
 from __future__ import annotations
 
-import json
+from collections import OrderedDict
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +44,19 @@ _RESULT_SCHEMA = T.StructType([
 ])
 
 
+# column types of the frames the reader builds on the driver
+_COL_TYPES = {"query": T.StringType(), "doc_id": T.LongType(),
+              "score": T.DoubleType(), "bm25": T.DoubleType(),
+              "authority": T.DoubleType(), "url": T.StringType(),
+              "title": T.StringType(), "description": T.StringType()}
+
 _TSTATS_SCHEMA = ("term string, df bigint, gen bigint, term_bucket int")
+
+
+def _top_frame(rows: list) -> pd.DataFrame:
+    """(doc_id, score) rows → a typed driver frame, empty included."""
+    return pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
+        {"doc_id": "int64", "score": "float64"})
 
 
 class BM25Index:
@@ -65,8 +86,11 @@ class BM25Index:
           its terms' buckets and reads ONLY those partitions — the df/idf
           lookup cost is bounded by the query's buckets, not the vocabulary.
 
-        ``reader_shuffle_partitions``: reduce-side task count for query
-        jobs (the per-shard WAND stage and top-k windows). Default: HALF
+        ``reader_shuffle_partitions``: reduce-side task count for the
+        DISTRIBUTED query path only — ``search_many`` and single queries
+        above ``_DRIVER_MAX_POSTINGS`` (the per-shard WAND stage and top-k
+        windows); small single queries run their kernel on the driver and
+        shuffle nothing. Default: HALF
         the parent session's shuffle partitions, floor 8 — a top-k
         query's reduce side is shards × k tiny rows plus a ms-scale
         kernel per shard, so two shards per task halves the scheduling
@@ -143,13 +167,15 @@ class BM25Index:
                              F.lit(float(self.meta["avgdl"]))
                              / F.col("avgdl0")))
         self._blocks = blocks
-        self._doc_map = None
-        self._doc_meta = None
+        self._tables: dict[str, DataFrame] = {}  # doc_map / doc_meta readers
         self._domain_scores = None
-        # per-term (df, bucket) memo — a BM25Index is a snapshot reader
+        # per-term (df, bucket) LRU memo — a BM25Index is a snapshot reader
         # (n_docs/avgdl frozen at construction), so term stats are immutable
-        # for its lifetime; repeated terms skip the lookup job entirely
-        self._term_memo: dict[str, tuple[int, int] | None] = {}
+        # for its lifetime; repeated terms skip the lookup job entirely, and
+        # the cap keeps a long run of distinct queries from growing the
+        # driver without bound
+        self._term_memo: OrderedDict[str, tuple[int, int] | None] = \
+            OrderedDict()
 
     def _read_term_stats(self) -> DataFrame:
         """term_stats scan bounded to the committed generation. The
@@ -169,11 +195,22 @@ class BM25Index:
         """Unique engine-mode terms, first-appearance order."""
         return list(dict.fromkeys(t for t in normalize_query(raw_query) if t))
 
-    # above this many lookup terms, switch from isin literals to a
+    # above this many lookup values, switch from isin literals to a
     # broadcast join: a 30k-literal In expression is a pathological
     # Catalyst tree (parse/optimize cost grows with the batch), while a
-    # broadcast hash join of a tiny terms frame is flat
+    # broadcast hash join of a tiny values frame is flat
     _ISIN_MAX = 256
+
+    # a single query whose postings (Σdf over its terms) are at most this
+    # many runs its top-k kernel on the driver (module docstring, step 4).
+    # Measured on 4 vCPU at 5000 pages (CHANGES.md), the driver path is
+    # faster at 59.6k postings (609 vs 730 ms) and slower at 89.3k (960 vs
+    # 893 ms); the cap sits in that crossover interval. It bounds driver
+    # work per query independently of corpus size
+    _DRIVER_MAX_POSTINGS = 1 << 16
+
+    # term memo entries kept (least recently used evicted first)
+    _TERM_MEMO_MAX = 1 << 16
 
     def _buckets_of(self, terms: list[str]) -> list[int]:
         """term_bucket of each query term, computed DRIVER-SIDE with the
@@ -183,20 +220,41 @@ class BM25Index:
         from ..functions.xxh import term_bucket
         return sorted({term_bucket(t, self.term_buckets) for t in terms})
 
-    def _filter_terms(self, df: DataFrame, terms: list[str]) -> DataFrame:
-        """term ∈ terms — isin literals for small sets, broadcast join for
+    def _isin(self, df: DataFrame, col: str, values: list) -> DataFrame:
+        """col ∈ values — isin literals for small sets, broadcast join for
         big batches (10k-query batches union tens of thousands of terms)."""
-        if len(terms) <= self._ISIN_MAX:
-            return df.filter(F.col("term").isin(terms))
-        tdf = self.spark.createDataFrame([(t,) for t in sorted(set(terms))],
-                                         "term string")
-        return df.join(F.broadcast(tdf), "term")
+        if len(values) <= self._ISIN_MAX:
+            return df.filter(F.col(col).isin(values))
+        vdf = self.spark.createDataFrame([(v,) for v in sorted(set(values))],
+                                         [col])
+        return df.join(F.broadcast(vdf), col)
+
+    def _local(self, pdf: pd.DataFrame) -> DataFrame:
+        """Driver rows → a reader-session frame whose collect launches no
+        Spark job. Arrow turns a NON-empty pandas frame into a
+        LocalRelation; an empty one (like a list of rows) would become a
+        Python-RDD scan and cost a job, so an empty result is a one-row
+        range under ``limit(0)``, which the optimizer folds to an empty
+        LocalTableScan."""
+        schema = T.StructType([T.StructField(c, _COL_TYPES[c])
+                               for c in pdf.columns])
+        if len(pdf):
+            return self._qspark.createDataFrame(pdf, schema)
+        return self._qspark.range(1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+        ).limit(0)
 
     def _term_meta(self, terms: list[str]) -> list[tuple[str, int, int]]:
         """[(term, df, term_bucket)] for terms present in the index."""
-        if not terms:
-            return []
-        missing = [t for t in terms if t not in self._term_memo]
+        memo = self._term_memo
+        got: dict[str, tuple[int, int] | None] = {}
+        missing = []
+        for t in terms:
+            if t in memo:
+                memo.move_to_end(t)
+                got[t] = memo[t]
+            else:
+                missing.append(t)
         if missing:
             if self._tstats is not None:
                 scan = self._tstats
@@ -204,7 +262,7 @@ class BM25Index:
                 # pruned mode: directory-level pruning to the query's buckets
                 scan = self._read_term_stats().filter(
                     F.col("term_bucket").isin(self._buckets_of(missing)))
-            rows = self._filter_terms(scan, missing).collect()
+            rows = self._isin(scan, "term", missing).collect()
             # SUM df across rows: an incrementally-refreshed index holds
             # one base row plus one row per delta refresh for a term (same
             # term_bucket — it's a pure hash of the term)
@@ -214,9 +272,10 @@ class BM25Index:
                 found[r["term"]] = (df0 + int(r["df"]),
                                     int(r["term_bucket"]))
             for t in missing:
-                self._term_memo[t] = found.get(t)  # None = absent, memoized
-        return [(t, *self._term_memo[t]) for t in terms
-                if self._term_memo[t] is not None]
+                got[t] = memo[t] = found.get(t)  # None = absent, memoized
+            while len(memo) > self._TERM_MEMO_MAX:
+                memo.popitem(last=False)
+        return [(t, *got[t]) for t in terms if got[t] is not None]
 
     def search(self, raw_query: str, k: int = 10,
                mode: str = "wand") -> DataFrame:
@@ -229,11 +288,24 @@ class BM25Index:
         variant that broadcast-joined a df frame into the block scan was
         tried and REVERTED: the extra agg + broadcast-build stages cost
         more scheduling latency per query than the collect they replaced
-        (p50 533 → 812 ms at sf0.1)."""
-        terms = self.query_terms(raw_query)
-        tmeta = self._term_meta(terms)
+        (p50 533 → 812 ms at sf0.1).
+
+        Queries at most ``_DRIVER_MAX_POSTINGS`` postings long are answered
+        EAGERLY (one block-fetch job, kernel on the driver) and come back as
+        a LocalRelation frame; a query with no indexed term launches no job
+        at all. Larger queries return the lazy distributed plan."""
+        top = self._topk(raw_query, k, mode)
+        if isinstance(top, pd.DataFrame):
+            return self._local(top)
+        return top
+
+    def _topk(self, raw_query: str, k: int,
+              mode: str) -> pd.DataFrame | DataFrame:
+        """The top-k rows: a driver pandas frame for small queries (and for
+        no hit), the lazy distributed frame above the postings cap."""
+        tmeta = self._term_meta(self.query_terms(raw_query))
         if not tmeta:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+            return _top_frame([])
         idfs = {t: bm25_idf(self.n_docs, df) for t, df, _ in tmeta}
         buckets = sorted({b for _, _, b in tmeta})
         term_list = [t for t, _, _ in tmeta]
@@ -260,8 +332,16 @@ class BM25Index:
             top = kernel([(idfs[t], blks) for t, blks in tb], k, avgdl)
             return pd.DataFrame(top, columns=["doc_id", "score"])
 
-        local = blocks.groupBy("shard").applyInPandas(shard_topk, _RESULT_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        if sum(df for _, df, _ in tmeta) > self._DRIVER_MAX_POSTINGS:
+            local = blocks.groupBy("shard").applyInPandas(shard_topk,
+                                                          _RESULT_SCHEMA)
+            return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        pdf = blocks.select("shard", "term", "max_doc_id", "max_tfnorm",
+                            "block").toPandas()
+        rows = [r for _, g in pdf.groupby("shard")
+                for r in shard_topk(g).itertuples(index=False)]
+        rows.sort(key=lambda r: (-r[1], r[0]))  # score desc, doc_id asc
+        return _top_frame(rows[:k])
 
     def search_many(self, raw_queries: list[str], k: int = 10,
                     mode: str = "wand") -> DataFrame:
@@ -297,11 +377,11 @@ class BM25Index:
         schema = T.StructType([T.StructField("query", T.StringType(), False),
                                *_RESULT_SCHEMA.fields])
         if not live:
-            return self.spark.createDataFrame([], schema)
+            return self._local(pd.DataFrame(columns=schema.names))
 
-        blocks = self._filter_terms(
+        blocks = self._isin(
             self._blocks.filter(F.col("term_bucket").isin(buckets)),
-            sorted(present))
+            "term", sorted(present))
         avgdl = self.avgdl
         kernel = wand_topk if mode == "wand" else exhaustive_topk
         batch_bc = self.spark.sparkContext.broadcast(
@@ -335,28 +415,54 @@ class BM25Index:
                 .drop("_rn")
                 .orderBy("query", F.desc("score"), F.asc("doc_id")))
 
+    def _page(self, raw_query: str, k: int, mode: str) -> pd.DataFrame:
+        """The top-k rows on the driver, whichever path computed them."""
+        top = self._topk(raw_query, k, mode)
+        return top if isinstance(top, pd.DataFrame) else top.toPandas()
+
+    def _attach(self, top: pd.DataFrame, table: str,
+                cols: list[str]) -> pd.DataFrame:
+        """Left-join ``cols`` of index table ``table`` onto the page rows
+        ``top`` by doc_id, keeping their order: ONE pushed-down
+        ``doc_id IN (...)`` read of the page's ids — k rows, never a
+        broadcast or shuffle of the whole table. An empty page reads
+        nothing."""
+        if top.empty:
+            return top.assign(**{c: None for c in cols})
+        rows = self._by_ids(table, top["doc_id"].tolist(), cols).toPandas()
+        out = top.merge(rows, on="doc_id", how="left")
+        # a hit without a row gets null, as the outer join gave it
+        out[cols] = out[cols].astype(object).where(out[cols].notna(), None)
+        return out
+
+    def _by_ids(self, table: str, ids: list[int],
+                cols: list[str]) -> DataFrame:
+        """The k-row read behind ``_attach``."""
+        if table not in self._tables:
+            self._tables[table] = self._qspark.read.parquet(
+                getattr(self.paths, table))
+        return self._isin(self._tables[table], "doc_id", ids) \
+            .select("doc_id", *cols)
+
     def search_with_urls(self, raw_query: str, k: int = 10,
                          mode: str = "wand") -> DataFrame:
-        """Top-k + url — metadata join AFTER the limit (tiny broadcast)."""
-        top = self.search(raw_query, k, mode)
-        if self._doc_map is None:
-            self._doc_map = self._qspark.read.parquet(self.paths.doc_map)
-        return (top.join(self._doc_map, "doc_id", "left")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+        """Top-k + url → (doc_id, score, url), (score desc, doc_id asc),
+        as a LocalRelation frame: the url is fetched for the k hits
+        only."""
+        return self._local(self._attach(self._page(raw_query, k, mode),
+                                        "doc_map", ["url"]))
 
     def search_with_meta(self, raw_query: str, k: int = 10,
                          mode: str = "wand") -> DataFrame:
         """Top-k + url + title + description — full J3 parity with the
         reference result page (src/modules/pagerank.py:119-126,
-        document_search_client_CLI.py:57-61). Both joins happen AFTER the
-        ``limit(k)``: k rows against a broadcast lookup, never a wide join."""
-        with_urls = self.search_with_urls(raw_query, k, mode)
-        if self._doc_meta is None:
-            self._doc_meta = self._qspark.read.parquet(self.paths.doc_meta)
-        meta = self._doc_meta.select("doc_id", "title", "description")
-        return (with_urls.join(meta, "doc_id", "left")
-                .select("doc_id", "url", "score", "title", "description")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+        document_search_client_CLI.py:57-61). ``doc_meta`` carries the url
+        too, so the whole page is one k-row read of it after the top-k; a
+        memo-hit query costs two Spark jobs, a no-hit one none."""
+        page = self._attach(self._page(raw_query, k, mode), "doc_meta",
+                            ["url", "title", "description"])
+        return self._local(
+            page[["doc_id", "url", "score", "title", "description"]])
 
     def search_blended(self, raw_query: str, k: int = 10,
                        mode: str = "wand", alpha: float = 0.1,
@@ -423,10 +529,5 @@ class BM25Index:
         if not with_meta:
             return out
         # title/description AFTER the limit, like search_with_meta
-        if self._doc_meta is None:
-            self._doc_meta = self._qspark.read.parquet(self.paths.doc_meta)
-        meta = self._doc_meta.select("doc_id", "title", "description")
-        return (out.join(meta, "doc_id", "left")
-                .select("doc_id", "url", "score", "bm25", "authority",
-                        "title", "description")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
+        return self._local(self._attach(out.toPandas(), "doc_meta",
+                                        ["title", "description"]))

@@ -466,9 +466,17 @@ def test_dup_components_long_chain_converges_fast(spark):
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(0, 200)],
                                   "id_a long, id_b long")
+    cached = _persistent_rdds(spark)
     got = dup_components(chain, max_iter=12).collect()
     assert {r["comp"] for r in got} == {0}
     assert len(got) == 201
+    # each round's checkpoint is released: the edges and the final labels
+    # stay cached, not one frame per round
+    assert _persistent_rdds(spark) - cached <= 2
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def test_dup_components_star_vs_union_find(spark):
@@ -517,9 +525,12 @@ def test_dup_components_star_long_chain(spark):
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(0, 200)],
                                   "id_a long, id_b long")
+    cached = _persistent_rdds(spark)
     got = dup_components_star(chain, max_iter=12).collect()
     assert {r["comp"] for r in got} == {0}
     assert len(got) == 201
+    # edges, nodes and labels stay cached; no per-round edge set does
+    assert _persistent_rdds(spark) - cached <= 3
 
 
 def test_dup_components_star_edge_set_contracts(spark):

@@ -125,19 +125,24 @@ def test_phrase_chain_join_has_no_explode(spark, tiny_index):
     assert pushed and any("term" in ln for ln in pushed)
 
 
-def test_sequential_search_plan_is_aqe_free_and_pruned(spark, tiny_index):
+def test_sequential_search_plan_is_aqe_free_and_pruned(spark, tiny_index,
+                                                      monkeypatch):
     """The round-4 latency fix: per-query jobs run in the reader's sibling
     session with AQE disabled (measured ~30% p50 / 2x p95 win — AQE's
     per-stage re-plan dominates small pruned queries), while the parent
     session keeps AQE for builds. The plan must show no AdaptiveSparkPlan
-    node and still prune block partitions."""
+    node and still prune block partitions. Checked on the distributed
+    path (a query above the driver postings cap): small queries answer
+    on the driver and return a local frame."""
     out, _ = tiny_index
+    monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", -1)
     idx = BM25Index(spark, out)
     assert idx._qspark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     p = _plan(idx.search("haber spor", k=5))
     assert "AdaptiveSparkPlan" not in p
     assert "TakeOrderedAndProject" in p
+    assert "PartitionFilters" in p and "term_bucket" in p
 
 
 def test_ntile_is_distributed_and_matches_window(spark):
