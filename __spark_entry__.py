@@ -1060,11 +1060,12 @@ _BM25_TERMS_2 = ("spark", "group", "window")
 
 
 def q_bm25_blocks_batch(spark, sf_dir):
-    """The BATCHED production path (search_many: one job, broadcast query
-    map, per-shard multi-query WAND) against two per-query BM25 SQL
-    replays UNION'd with a query label — proving the batch returns exactly
-    what two single-query runs (and DuckDB) would, per query. Same
-    top-50 → re-rank-on-original-doc_id trick as q_bm25_blocks."""
+    """The BATCHED production path (search_many: broadcast query map,
+    per-shard multi-query WAND, per-query merge of the shard candidates)
+    against two per-query BM25 SQL replays UNION'd with a query label —
+    proving the batch returns exactly what two single-query runs (and
+    DuckDB) would, per query. Same top-50 → re-rank-on-original-doc_id
+    trick as q_bm25_blocks."""
     from pyspark.sql import Window
 
     idx = _blocks_index(spark, sf_dir)

@@ -18,10 +18,14 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
    across all shards, so no task sees more than df/n_shards postings
 5. global (score desc, doc_id asc) top-k: a pandas sort of shards × k rows
    on the driver path, ``orderBy(...).limit(k)`` → TakeOrderedAndProject
-   (no full sort) on the distributed one. Result pages then fetch the k
-   hits' url/title/description with ONE pushed-down ``doc_id IN (...)``
-   read (J3 pattern): k rows, never a broadcast or shuffle of the whole
-   table.
+   (no full sort) on the distributed one. ``search_many`` merges the same
+   way per query: the union of every shard's exact top-k holds the global
+   top-k, so when that union is bounded by ``_DRIVER_MAX_POSTINGS`` rows
+   it is collected and merged by a pandas sort on the driver; above the
+   bound a per-query Window top-k and an ``orderBy`` do it in Spark.
+   Result pages then fetch the k hits' url/title/description with ONE
+   pushed-down ``doc_id IN (...)`` read (J3 pattern): k rows, never a
+   broadcast or shuffle of the whole table.
 """
 
 from __future__ import annotations
@@ -87,10 +91,11 @@ class BM25Index:
           lookup cost is bounded by the query's buckets, not the vocabulary.
 
         ``reader_shuffle_partitions``: reduce-side task count for the
-        DISTRIBUTED query path only — ``search_many`` and single queries
-        above ``_DRIVER_MAX_POSTINGS`` (the per-shard WAND stage and top-k
-        windows); small single queries run their kernel on the driver and
-        shuffle nothing. Default: HALF
+        DISTRIBUTED query path only — the per-shard WAND stage of
+        ``search_many`` and of single queries above
+        ``_DRIVER_MAX_POSTINGS``, and the top-k windows of batches whose
+        candidate rows exceed that bound; small single queries run their
+        kernel on the driver and shuffle nothing. Default: HALF
         the parent session's shuffle partitions, floor 8 — a top-k
         query's reduce side is shards × k tiny rows plus a ms-scale
         kernel per shard, so two shards per task halves the scheduling
@@ -201,12 +206,15 @@ class BM25Index:
     # broadcast hash join of a tiny values frame is flat
     _ISIN_MAX = 256
 
-    # a single query whose postings (Σdf over its terms) are at most this
-    # many runs its top-k kernel on the driver (module docstring, step 4).
-    # Measured on 4 vCPU at 5000 pages (CHANGES.md), the driver path is
-    # faster at 59.6k postings (609 vs 730 ms) and slower at 89.3k (960 vs
-    # 893 ms); the cap sits in that crossover interval. It bounds driver
-    # work per query independently of corpus size
+    # rows the driver handles per call: a single query whose postings (Σdf
+    # over its terms) are at most this many runs its top-k kernel on the
+    # driver (module docstring, step 4), and a batch whose per-shard
+    # candidates (Σ_q min(n_shards·k, Σdf_q)) are at most this many is
+    # merged on the driver (step 5). Measured on 4 vCPU at 5000 pages
+    # (CHANGES.md), the single-query driver path is faster at 59.6k
+    # postings (609 vs 730 ms) and slower at 89.3k (960 vs 893 ms); the
+    # cap sits in that crossover interval. It bounds driver work per call
+    # independently of corpus size
     _DRIVER_MAX_POSTINGS = 1 << 16
 
     # term memo entries kept (least recently used evicted first)
@@ -222,11 +230,15 @@ class BM25Index:
 
     def _isin(self, df: DataFrame, col: str, values: list) -> DataFrame:
         """col ∈ values — isin literals for small sets, broadcast join for
-        big batches (10k-query batches union tens of thousands of terms)."""
+        big batches (10k-query batches union tens of thousands of terms).
+        The broadcast side is built from pandas in the reader session, so
+        it is a LocalRelation: a list of rows would be a Python-RDD scan
+        and cost a job of its own."""
         if len(values) <= self._ISIN_MAX:
             return df.filter(F.col(col).isin(values))
-        vdf = self.spark.createDataFrame([(v,) for v in sorted(set(values))],
-                                         [col])
+        vdf = self._qspark.createDataFrame(
+            pd.DataFrame({col: sorted(set(values))}),
+            T.StructType([df.schema[col]]))
         return df.join(F.broadcast(vdf), col)
 
     def _local(self, pdf: pd.DataFrame) -> DataFrame:
@@ -345,9 +357,8 @@ class BM25Index:
 
     def search_many(self, raw_queries: list[str], k: int = 10,
                     mode: str = "wand") -> DataFrame:
-        """Batched top-k for MANY queries in ONE Spark job →
-        (query, doc_id, score), per query (score desc, doc_id asc), ≤ k rows
-        each.
+        """Batched top-k for MANY queries → (query, doc_id, score), per
+        query (score desc, doc_id asc), ≤ k rows each, queries ascending.
 
         Duplicate raw queries are deduplicated: the result has ONE group per
         DISTINCT query string (callers fan results back out by joining on
@@ -356,13 +367,25 @@ class BM25Index:
 
         Throughput path: a 1000-executor cluster amortizes scheduling and
         the block scan across the whole batch — one term_stats lookup for
-        the union of terms, one pruned block read for the union of
-        (bucket, term), one applyInPandas pass per shard running every
-        query's WAND against the blocks it already holds, then a per-query
-        window top-k over shards × k × queries rows (tiny). The
-        query→terms map and idf table ride a Spark broadcast variable, not
-        closure capture, so a 10k-query batch is shipped to each executor
-        once instead of being pickled into every task."""
+        the union of terms (memo misses only), one pruned block read for
+        the union of (bucket, term), one applyInPandas pass per shard
+        running every query's WAND against the blocks it already holds.
+        The query→terms map and idf table ride a Spark broadcast variable,
+        not closure capture, so a 10k-query batch is shipped to each
+        executor once instead of being pickled into every task.
+
+        Merge (module docstring, step 5): each shard returns at most
+        min(k, Σdf_q) rows per query, so the candidates number at most
+        Σ_q min(n_shards·k, Σdf_q) — known before any job runs. Up to
+        ``_DRIVER_MAX_POSTINGS`` of them, the batch runs EAGERLY: the
+        per-shard output is collected with Arrow, merged by a pandas
+        sort and returned as a LocalRelation frame, and the broadcast
+        variable is destroyed. That is one Spark job for a memo-hit batch
+        (plus one per broadcast join side of more than ``_ISIN_MAX``
+        terms, and the lookup job for memo misses); Python ``str`` order
+        is code-point order, the same as Spark's UTF-8 binary order.
+        Above the bound the lazy plan ranks per query with a Window over
+        the shuffled candidates and sorts the result with ``orderBy``."""
         from pyspark.sql import Window
 
         per_query = {q: self.query_terms(q) for q in raw_queries}
@@ -408,12 +431,25 @@ class BM25Index:
             return pd.DataFrame(out, columns=["query", "doc_id", "score"])
 
         local = blocks.groupBy("shard").applyInPandas(shard_topk_many, schema)
-        w = Window.partitionBy("query").orderBy(F.desc("score"),
-                                                F.asc("doc_id"))
-        return (local.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k)
-                .drop("_rn")
-                .orderBy("query", F.desc("score"), F.asc("doc_id")))
+        n_shards = int(self.meta["n_shards"])
+        df_of = {t: df for t, df, _ in tmeta}
+        bound = sum(min(n_shards * k, sum(df_of[t] for t in ts))
+                    for ts in live.values())
+        if bound > self._DRIVER_MAX_POSTINGS:
+            w = Window.partitionBy("query").orderBy(F.desc("score"),
+                                                    F.asc("doc_id"))
+            return (local.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") <= k)
+                    .drop("_rn")
+                    .orderBy("query", F.desc("score"), F.asc("doc_id")))
+        try:
+            pdf = local.toPandas()
+        finally:
+            batch_bc.destroy()
+        top = (pdf.sort_values(["query", "score", "doc_id"],
+                               ascending=[True, False, True])
+               .groupby("query").head(k))
+        return self._local(top.reset_index(drop=True))
 
     def _page(self, raw_query: str, k: int, mode: str) -> pd.DataFrame:
         """The top-k rows on the driver, whichever path computed them."""

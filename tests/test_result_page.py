@@ -2,7 +2,8 @@
 on the driver and return rows identical to the distributed plan's; pages
 attach metadata with one k-row ``doc_id IN (...)`` read; memo-hit pages
 cost at most two Spark jobs and no-hit pages none; the per-term memo is a
-bounded LRU."""
+bounded LRU. Batches (``search_many``) whose per-shard candidates fit under
+the same cap are merged on the driver, identically to the Window plan."""
 
 import contextlib
 import io
@@ -18,10 +19,10 @@ DISTRIBUTED = -1   # no query fits: the applyInPandas path
 NO_HIT = "zzzzz qqqqq"
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
+        df.explain(mode=mode)
     return buf.getvalue()
 
 
@@ -211,3 +212,134 @@ def test_term_memo_is_a_bounded_lru(spark, tiny_index, monkeypatch):
     idx._term_meta([terms[0]])
     idx._term_meta(terms[20:27])
     assert terms[0] in idx._term_memo
+
+
+# duplicates, a no-hit query and non-ASCII queries whose code-point order
+# ("ç" < "ö" < "İ", all after ASCII) pins the order of the query groups
+BATCH = QUERIES + ["istanbul", "haber spor", NO_HIT, "öğrenci",
+                   "öğrenci haber", "İZMİR haber"]
+
+
+def _batch(spark, ix, cap, monkeypatch):
+    monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
+    idx = BM25Index(spark, ix)
+    return idx, {(mode, k): [tuple(r) for r in
+                             idx.search_many(BATCH, k=k, mode=mode).collect()]
+                 for mode in ("wand", "exhaustive") for k in (3, 10)}
+
+
+@pytest.mark.parametrize("which", ["tiny", "delta"])
+def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
+                                                delta_index, monkeypatch,
+                                                which):
+    """The driver merge of the per-shard candidates returns the Window
+    plan's rows in the Window plan's order — wand and exhaustive, k = 3
+    cutting tie groups that span shards — and each query's rows are
+    exactly what ``search`` returns for it."""
+    ix = tiny_index[0] if which == "tiny" else delta_index
+    idx, driver = _batch(spark, ix, DRIVER, monkeypatch)
+    _, window = _batch(spark, ix, DISTRIBUTED, monkeypatch)
+    assert driver == window
+    for (mode, k), rows in driver.items():
+        queries = [q for q, _, _ in rows]
+        assert queries == sorted(queries)
+        assert set(queries) == {q for q in BATCH
+                                if idx.search(q, k=1).collect()}
+        for q in set(BATCH):
+            want = [tuple(r) for r in idx.search(q, k=k, mode=mode).collect()]
+            assert [(d, s) for g, d, s in rows if g == q] == want, (q, mode)
+    got = {q for q, _, _ in driver[("wand", 10)]}
+    assert NO_HIT not in got and {"çocuk", "İZMİR haber"} <= got
+    if which == "delta":
+        # some k = 3 cut falls inside a tie group of twins on several shards
+        cut = [[tuple(r) for r in idx.search(q, k=10).collect()]
+               for q in set(BATCH)]
+        assert any(len(b) > 3 and b[2][1] == b[3][1] for b in cut)
+
+
+def test_batch_merge_plan_shapes(spark, tiny_index, monkeypatch):
+    """The broadcast side of a big lookup is a LocalRelation (no
+    Python-RDD scan); the driver-merged batch is a LocalTableScan with no
+    Window or Sort; above the candidate bound the batch keeps its Window
+    and global sort."""
+    monkeypatch.setattr(BM25Index, "_ISIN_MAX", 0)
+    idx = BM25Index(spark, tiny_index[0])
+    for col, values, df in (("term", ["haber", "spor"], idx._blocks),
+                            ("doc_id", [1, 2, 3],
+                             spark.read.parquet(idx.paths.doc_map))):
+        p = _plan(idx._isin(df, col, values), "extended")
+        assert "LocalRelation" in p and "LogicalRDD" not in p, col
+    qs = ["haber spor", "istanbul", NO_HIT]
+    for cap in (DRIVER, DISTRIBUTED):
+        monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
+        p = _plan(idx.search_many(qs, k=5), "extended")
+        assert "LogicalRDD" not in p
+        if cap == DRIVER:
+            assert "LocalTableScan" in p
+            assert "Window" not in p and "Sort" not in p
+        else:
+            assert "Window" in p and "Sort" in p and "LocalRelation" in p
+
+
+def test_batch_merge_rows_stay_under_the_cap(spark, tiny_index, monkeypatch):
+    """The driver never collects more candidate rows than the cap: small
+    caps send the batch to the Window plan, large ones merge it on the
+    driver, and the answer is the same either way."""
+    idx = BM25Index(spark, tiny_index[0])
+    qs = [q for q in BATCH if q != NO_HIT]
+    cls = type(idx._blocks)
+    to_pandas = cls.toPandas
+    sizes = []
+
+    def spy(df):
+        out = to_pandas(df)
+        sizes.append(len(out))
+        return out
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+    answers, eager = set(), []
+    for cap in (10, 200, 2000, DRIVER):
+        monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
+        sizes.clear()
+        rows = idx.search_many(qs, k=10)
+        eager.append(bool(sizes))
+        assert all(n <= cap for n in sizes), (cap, sizes)
+        answers.add(tuple(map(tuple, rows.collect())))
+    assert len(answers) == 1
+    assert eager[0] is False and eager[-1] is True
+
+
+def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
+                                                monkeypatch):
+    """A memo-hit batch over more than ``_ISIN_MAX`` terms runs at most two
+    Spark jobs (the broadcast build of its block filter and the per-shard
+    kernel), and every batch destroys its query broadcast once the call
+    returns — also when the call raises."""
+    out, _ = tiny_index
+    idx = BM25Index(spark, out)
+    terms = [r["term"] for r in spark.read.parquet(out + "/term_stats")
+             .select("term").distinct().orderBy("term").collect()]
+    terms = [t for t in terms
+             if idx.query_terms(t) == [t]][:2 * BM25Index._ISIN_MAX + 2]
+    assert len(terms) > BM25Index._ISIN_MAX
+    qs = [" ".join(terms[i:i + 2]) for i in range(0, len(terms), 2)]
+    idx.search_many(qs, k=10).collect()  # fill the term memo
+    sc = type(spark.sparkContext)
+    broadcast = sc.broadcast
+    made = []
+
+    def spy(self, value):
+        made.append(broadcast(self, value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    rows, n = _jobs(spark, "batch-hit",
+                    lambda: idx.search_many(qs, k=10).collect())
+    assert rows and n <= 2
+    assert len(made) == 1 and not made[0]._jbroadcast.isValid()
+    # a failing collect still releases the broadcast
+    monkeypatch.setattr(type(idx._blocks), "toPandas",
+                        lambda df: 1 / 0)
+    with pytest.raises(ZeroDivisionError):
+        idx.search_many(qs[:3], k=10)
+    assert len(made) == 2 and not made[1]._jbroadcast.isValid()
