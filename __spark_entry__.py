@@ -1060,8 +1060,9 @@ _BM25_TERMS_2 = ("spark", "group", "window")
 
 
 def q_bm25_blocks_batch(spark, sf_dir):
-    """The BATCHED production path (search_many: broadcast query map,
-    per-shard multi-query WAND, per-query merge of the shard candidates)
+    """The BATCHED production path (search_many: a small batch is decoded
+    and scored on the driver in one vectorized pass, a larger one runs
+    per-shard multi-query WAND and merges the shard candidates per query)
     against two per-query BM25 SQL replays UNION'd with a query label —
     proving the batch returns exactly what two single-query runs (and
     DuckDB) would, per query. Same top-50 → re-rank-on-original-doc_id

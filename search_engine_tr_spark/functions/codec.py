@@ -105,3 +105,33 @@ def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         off += ln
     doc_ids = delta_decode(streams[0])
     return doc_ids, streams[1], streams[2]
+
+
+def decode_blocks(bufs) -> tuple[np.ndarray, np.ndarray, np.ndarray,
+                                 np.ndarray]:
+    """Many blocks at once → (doc_ids, tfs, dls, counts): the concatenated
+    ``decode_block`` outputs, in ``bufs`` order, and each block's posting
+    count. Headers are parsed per block; each of the three varint streams
+    is concatenated over all blocks and decoded in ONE ``varint_decode``
+    call, and the doc-id deltas are prefix-summed per block by one global
+    cumsum minus each block's starting offset (uint64 arithmetic wraps
+    modulo 2^64, so the difference is exact whenever the ids fit)."""
+    counts = []
+    streams: tuple[list, list, list] = ([], [], [])
+    for buf in bufs:
+        counts.append(struct.unpack_from("<H", buf, 0)[0])
+        off = 2
+        for parts in streams:
+            ln = struct.unpack_from("<I", buf, off)[0]
+            off += 4
+            parts.append(buf[off:off + ln])
+            off += ln
+    counts = np.array(counts, dtype=np.int64)
+    n = int(counts.sum())
+    deltas, tfs, dls = (varint_decode(b"".join(parts), count=n)
+                        for parts in streams)
+    csum = np.concatenate((np.zeros(1, np.uint64),
+                           np.cumsum(deltas, dtype=np.uint64)))
+    starts = np.cumsum(counts) - counts
+    doc_ids = csum[1:] - np.repeat(csum[starts], counts)
+    return doc_ids, tfs, dls, counts

@@ -15,14 +15,22 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
    the driver — no Python-worker stage, whose start-up dwarfs a few ms of
    kernel work. Larger queries run it inside one Arrow-batched
    applyInPandas group per shard — each head term's postings are split
-   across all shards, so no task sees more than df/n_shards postings
+   across all shards, so no task sees more than df/n_shards postings.
+   ``search_many`` scores a batch whose scored rows (Σ over its queries of
+   Σdf) fit under the same bound on the driver too: one JVM-only fetch of
+   the batch's blocks, one vectorized decode of them all, one impact per
+   posting and one vectorized exact scoring pass for every query
+   (``wand.batch_topk``) — each block is decoded once per batch, not once
+   per query that uses it. Larger batches run every query's kernel in one
+   applyInPandas pass per shard
 5. global (score desc, doc_id asc) top-k: a pandas sort of shards × k rows
    on the driver path, ``orderBy(...).limit(k)`` → TakeOrderedAndProject
-   (no full sort) on the distributed one. ``search_many`` merges the same
-   way per query: the union of every shard's exact top-k holds the global
-   top-k, so when that union is bounded by ``_DRIVER_MAX_POSTINGS`` rows
-   it is collected and merged by a pandas sort on the driver; above the
-   bound a per-query Window top-k and an ``orderBy`` do it in Spark.
+   (no full sort) on the distributed one. ``batch_topk`` ranks every query
+   of a driver-scored batch itself; a per-shard batch is merged per query:
+   the union of every shard's exact top-k holds the global top-k, so when
+   that union is bounded by ``_DRIVER_MAX_POSTINGS`` rows it is collected
+   and merged by a pandas sort on the driver; above the bound a per-query
+   Window top-k and an ``orderBy`` do it in Spark.
    Result pages then fetch the k hits' url/title/description with ONE
    pushed-down ``doc_id IN (...)`` read (J3 pattern): k rows, never a
    broadcast or shuffle of the whole table.
@@ -37,10 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import numpy as np
+
+from ..functions.codec import decode_blocks
 from ..functions.text import normalize_query
 from ..oracle.refscore import bm25_idf
 from ..plans.index_build import IndexPaths
-from .wand import exhaustive_topk, wand_topk
+from .wand import batch_topk, exhaustive_topk, impacts_for, wand_topk
 
 _RESULT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -55,6 +66,15 @@ _COL_TYPES = {"query": T.StringType(), "doc_id": T.LongType(),
               "title": T.StringType(), "description": T.StringType()}
 
 _TSTATS_SCHEMA = ("term string, df bigint, gen bigint, term_bucket int")
+
+
+def _kernel(mode: str):
+    """The per-shard top-k kernel of a search ``mode``."""
+    if mode == "wand":
+        return wand_topk
+    if mode == "exhaustive":
+        return exhaustive_topk
+    raise ValueError(f"unknown mode {mode!r}")
 
 
 def _top_frame(rows: list) -> pd.DataFrame:
@@ -91,11 +111,12 @@ class BM25Index:
           lookup cost is bounded by the query's buckets, not the vocabulary.
 
         ``reader_shuffle_partitions``: reduce-side task count for the
-        DISTRIBUTED query path only — the per-shard WAND stage of
-        ``search_many`` and of single queries above
-        ``_DRIVER_MAX_POSTINGS``, and the top-k windows of batches whose
-        candidate rows exceed that bound; small single queries run their
-        kernel on the driver and shuffle nothing. Default: HALF
+        DISTRIBUTED query path only — the per-shard WAND stage of single
+        queries and of ``search_many`` batches above
+        ``_DRIVER_MAX_POSTINGS`` (postings, resp. scored rows), and the
+        top-k windows of batches whose candidate rows exceed that bound;
+        small queries and batches are scored on the driver and shuffle
+        nothing. Default: HALF
         the parent session's shuffle partitions, floor 8 — a top-k
         query's reduce side is shards × k tiny rows plus a ms-scale
         kernel per shard, so two shards per task halves the scheduling
@@ -208,13 +229,15 @@ class BM25Index:
 
     # rows the driver handles per call: a single query whose postings (Σdf
     # over its terms) are at most this many runs its top-k kernel on the
-    # driver (module docstring, step 4), and a batch whose per-shard
-    # candidates (Σ_q min(n_shards·k, Σdf_q)) are at most this many is
-    # merged on the driver (step 5). Measured on 4 vCPU at 5000 pages
-    # (CHANGES.md), the single-query driver path is faster at 59.6k
-    # postings (609 vs 730 ms) and slower at 89.3k (960 vs 893 ms); the
-    # cap sits in that crossover interval. It bounds driver work per call
-    # independently of corpus size
+    # driver (module docstring, step 4), a batch whose scored rows (Σ_q
+    # Σdf_q, which also bounds its distinct terms' postings) are at most
+    # this many is decoded and scored on the driver (step 4), and a larger
+    # batch whose per-shard candidates (Σ_q min(n_shards·k, Σdf_q)) are at
+    # most this many is merged on the driver (step 5). Measured on 4 vCPU
+    # at 5000 pages (CHANGES.md), the single-query driver path is faster at
+    # 59.6k postings (609 vs 730 ms) and slower at 89.3k (960 vs 893 ms);
+    # the cap sits in that crossover interval. It bounds driver work per
+    # call independently of corpus size
     _DRIVER_MAX_POSTINGS = 1 << 16
 
     # term memo entries kept (least recently used evicted first)
@@ -315,6 +338,7 @@ class BM25Index:
               mode: str) -> pd.DataFrame | DataFrame:
         """The top-k rows: a driver pandas frame for small queries (and for
         no hit), the lazy distributed frame above the postings cap."""
+        kernel = _kernel(mode)
         tmeta = self._term_meta(self.query_terms(raw_query))
         if not tmeta:
             return _top_frame([])
@@ -327,7 +351,6 @@ class BM25Index:
                   .filter(F.col("term").isin(term_list)))
 
         avgdl = self.avgdl
-        kernel = wand_topk if mode == "wand" else exhaustive_topk
         term_order = {t: i for i, t in enumerate(term_list)}
 
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -365,29 +388,36 @@ class BM25Index:
         the query column) — len(set(raw_queries)) groups, not
         len(raw_queries).
 
-        Throughput path: a 1000-executor cluster amortizes scheduling and
-        the block scan across the whole batch — one term_stats lookup for
-        the union of terms (memo misses only), one pruned block read for
-        the union of (bucket, term), one applyInPandas pass per shard
-        running every query's WAND against the blocks it already holds.
-        The query→terms map and idf table ride a Spark broadcast variable,
-        not closure capture, so a 10k-query batch is shipped to each
-        executor once instead of being pickled into every task.
+        One term_stats lookup for the union of terms (memo misses only)
+        and one pruned block read for the union of (bucket, term) serve the
+        whole batch. The memoized dfs then pick one of three regimes before
+        any job runs (module docstring, steps 4–5):
 
-        Merge (module docstring, step 5): each shard returns at most
-        min(k, Σdf_q) rows per query, so the candidates number at most
-        Σ_q min(n_shards·k, Σdf_q) — known before any job runs. Up to
-        ``_DRIVER_MAX_POSTINGS`` of them, the batch runs EAGERLY: the
-        per-shard output is collected with Arrow, merged by a pandas
-        sort and returned as a LocalRelation frame, and the broadcast
-        variable is destroyed. That is one Spark job for a memo-hit batch
-        (plus one per broadcast join side of more than ``_ISIN_MAX``
-        terms, and the lookup job for memo misses); Python ``str`` order
-        is code-point order, the same as Spark's UTF-8 binary order.
-        Above the bound the lazy plan ranks per query with a Window over
-        the shuffled candidates and sorts the result with ``orderBy``."""
+        1. the batch's scored rows Σ_q Σdf_q are at most
+           ``_DRIVER_MAX_POSTINGS``: the pruned blocks are fetched with one
+           JVM-only Arrow ``toPandas``, decoded in one vectorized pass,
+           weighed once per posting, and every query is scored exactly in
+           one vectorized pass (``wand.batch_topk``) — both modes share
+           this exact scorer, as WAND is exact too. No broadcast variable,
+           no Python worker; the result is a LocalRelation frame.
+        2. above that, while the per-shard candidates Σ_q min(n_shards·k,
+           Σdf_q) fit under the same bound: one applyInPandas pass per shard
+           runs every query's kernel against the blocks it holds, its
+           output is collected with Arrow, merged by a pandas sort and
+           returned as a LocalRelation frame.
+        3. above both: the lazy plan ranks per query with a Window over the
+           shuffled candidates and sorts the result with ``orderBy``.
+
+        Regimes 1–2 run eagerly: one Spark job for a memo-hit batch (plus
+        one per broadcast join side of more than ``_ISIN_MAX`` terms, and
+        the lookup job for memo misses). In regimes 2–3 the query→terms
+        map and idf table ride a Spark broadcast variable, not closure
+        capture, so a 10k-query batch is shipped to each executor once;
+        regime 2 destroys it after its collect. Python ``str`` order is
+        code-point order, the same as Spark's UTF-8 binary order."""
         from pyspark.sql import Window
 
+        kernel = _kernel(mode)
         per_query = {q: self.query_terms(q) for q in raw_queries}
         all_terms = sorted({t for ts in per_query.values() for t in ts})
         tmeta = self._term_meta(all_terms)
@@ -405,8 +435,12 @@ class BM25Index:
         blocks = self._isin(
             self._blocks.filter(F.col("term_bucket").isin(buckets)),
             "term", sorted(present))
+        df_of = {t: df for t, df, _ in tmeta}
+        postings = [sum(df_of[t] for t in ts) for ts in live.values()]
+        if sum(postings) <= self._DRIVER_MAX_POSTINGS:
+            return self._local(self._score_batch(blocks, live, idfs, k))
+
         avgdl = self.avgdl
-        kernel = wand_topk if mode == "wand" else exhaustive_topk
         batch_bc = self.spark.sparkContext.broadcast(
             {"live": live, "idfs": idfs})
 
@@ -432,9 +466,7 @@ class BM25Index:
 
         local = blocks.groupBy("shard").applyInPandas(shard_topk_many, schema)
         n_shards = int(self.meta["n_shards"])
-        df_of = {t: df for t, df, _ in tmeta}
-        bound = sum(min(n_shards * k, sum(df_of[t] for t in ts))
-                    for ts in live.values())
+        bound = sum(min(n_shards * k, n) for n in postings)
         if bound > self._DRIVER_MAX_POSTINGS:
             w = Window.partitionBy("query").orderBy(F.desc("score"),
                                                     F.asc("doc_id"))
@@ -450,6 +482,25 @@ class BM25Index:
                                ascending=[True, False, True])
                .groupby("query").head(k))
         return self._local(top.reset_index(drop=True))
+
+    def _score_batch(self, blocks: DataFrame, live: dict[str, list[str]],
+                     idfs: dict[str, float], k: int) -> pd.DataFrame:
+        """``search_many``'s driver regime: the batch's pruned ``blocks``
+        fetched in one job and decoded at once, each posting's impact
+        computed once (the same elementwise ops as per term, so the same
+        bits), every query of ``live`` scored by ``batch_topk``."""
+        pdf = blocks.select("term", "block").toPandas()
+        terms = sorted(idfs)
+        tix = {t: i for i, t in enumerate(terms)}
+        docs, tfs, dls, counts = decode_blocks(pdf["block"])
+        term_ids = np.repeat(pdf["term"].map(tix).to_numpy(np.int64), counts)
+        idf = np.array([idfs[t] for t in terms])[term_ids]
+        names = sorted(live)
+        qi, doc, score = batch_topk(
+            term_ids, docs, impacts_for(tfs, dls, idf, self.avgdl),
+            [[tix[t] for t in live[q]] for q in names], k)
+        return pd.DataFrame({"query": np.array(names, dtype=object)[qi],
+                             "doc_id": doc, "score": score})
 
     def _page(self, raw_query: str, k: int, mode: str) -> pd.DataFrame:
         """The top-k rows on the driver, whichever path computed them."""

@@ -208,3 +208,45 @@ def exhaustive_topk(term_blocks: list[tuple[float, list[tuple[int, float, bytes]
     # uniq is already ascending so equal scores break ties by doc_id
     order = np.lexsort((uniq, -scores))[:k]
     return [(int(uniq[i]), float(scores[i])) for i in order]
+
+
+def batch_topk(term_ids: np.ndarray, docs: np.ndarray, impacts: np.ndarray,
+               queries: list[list[int]], k: int
+               ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact top-k of MANY queries in one vectorized pass over their terms'
+    postings, each posting decoded and weighed once for the whole batch.
+
+    ``term_ids[i]``, ``docs[i]``, ``impacts[i]``: posting i's term index,
+    doc id and impact; ``queries[q]``: query q's term indices in query-term
+    order. → (query index, doc_id, score) arrays ordered by query asc, then
+    (score desc, doc_id asc), ≤ k rows per query: per query what
+    ``exhaustive_topk`` returns, scores bit-identical — every (query, doc)
+    group is summed in query-term order, the oracle's IEEE order. Groups
+    are keyed by (query, doc) pairs, never by one combined integer, which
+    would overflow int64 at 10^12 doc ids."""
+    docs = np.asarray(docs, dtype=np.int64)
+    # expand every (query, term) pair to its postings, in query-term order
+    pair_q = np.array([q for q, ts in enumerate(queries) for _ in ts],
+                      dtype=np.int64)
+    pair_t = np.array([t for ts in queries for t in ts], dtype=np.int64)
+    by_term = np.argsort(term_ids, kind="stable")
+    counts = np.bincount(term_ids, minlength=pair_t.max(initial=-1) + 1)
+    first = np.cumsum(counts) - counts
+    lens = counts[pair_t]
+    rows = by_term[np.repeat(first[pair_t] - (np.cumsum(lens) - lens), lens)
+                   + np.arange(int(lens.sum()))]
+    q, d, imp = np.repeat(pair_q, lens), docs[rows], impacts[rows]
+    # stable: a (query, doc) group keeps its rows in query-term order, and
+    # np.add.at adds them in that order
+    order = np.lexsort((d, q))
+    q, d, imp = q[order], d[order], imp[order]
+    new = np.ones(len(q), dtype=bool)
+    new[1:] = (q[1:] != q[:-1]) | (d[1:] != d[:-1])
+    gid = np.cumsum(new) - 1
+    scores = np.zeros(int(new.sum()))
+    np.add.at(scores, gid, imp)
+    q, d = q[new], d[new]
+    order = np.lexsort((d, -scores, q))
+    q, d, scores = q[order], d[order], scores[order]
+    keep = np.arange(len(q)) - np.searchsorted(q, q) < k
+    return q[keep], d[keep], scores[keep]

@@ -5,7 +5,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from search_engine_tr_spark.functions.codec import (
+    BLOCK_SIZE,
     decode_block,
+    decode_blocks,
     delta_decode,
     delta_encode,
     encode_block,
@@ -50,6 +52,31 @@ def test_block_roundtrip(postings):
     assert np.array_equal(d2, docs)
     assert np.array_equal(t2, tfs)
     assert np.array_equal(l2, dls)
+
+
+@st.composite
+def blocks(draw):
+    """One encoded block: 1…BLOCK_SIZE postings, doc ids up to 2^40,
+    multi-byte tfs and dls."""
+    docs = sorted(draw(st.sets(st.integers(0, 2**40), min_size=1,
+                               max_size=BLOCK_SIZE)))
+    n = len(docs)
+    tfs = draw(st.lists(st.integers(1, 2**20), min_size=n, max_size=n))
+    dls = draw(st.lists(st.integers(1, 2**30), min_size=n, max_size=n))
+    return encode_block(*(np.array(a, dtype=np.uint64)
+                          for a in (docs, tfs, dls)))
+
+
+@given(st.lists(blocks(), max_size=12))
+@settings(max_examples=100, deadline=None)
+def test_decode_blocks_equals_per_block_decode(bufs):
+    ids, tfs, dls, counts = decode_blocks(bufs)
+    one = [decode_block(b) for b in bufs]
+    for got, i in ((ids, 0), (tfs, 1), (dls, 2)):
+        want = (np.concatenate([d[i] for d in one]) if one
+                else np.empty(0, dtype=np.uint64))
+        assert got.dtype == np.uint64 and np.array_equal(got, want)
+    assert counts.tolist() == [len(d[0]) for d in one]
 
 
 def test_empty_streams():

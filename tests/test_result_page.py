@@ -2,12 +2,14 @@
 on the driver and return rows identical to the distributed plan's; pages
 attach metadata with one k-row ``doc_id IN (...)`` read; memo-hit pages
 cost at most two Spark jobs and no-hit pages none; the per-term memo is a
-bounded LRU. Batches (``search_many``) whose per-shard candidates fit under
-the same cap are merged on the driver, identically to the Window plan."""
+bounded LRU. Batches (``search_many``) take one of three regimes by the
+same cap — driver scoring, a driver merge of per-shard candidates, or the
+Window plan — and all three return the same rows."""
 
 import contextlib
 import io
 
+import numpy as np
 import pytest
 
 from search_engine_tr_spark.operators.query_bm25 import BM25Index
@@ -170,18 +172,10 @@ def test_driver_block_fetch_is_aqe_free_and_pruned(spark, tiny_index,
     monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", DRIVER)
     idx = BM25Index(spark, tiny_index[0])
     idx.search("haber spor", k=5)  # fill the term memo
-    cls = type(idx._blocks)
-    to_pandas = cls.toPandas
-    plans = []
-
-    def spy(df):
-        plans.append(_plan(df))
-        return to_pandas(df)
-
-    monkeypatch.setattr(cls, "toPandas", spy)
+    seen = _spy_to_pandas(monkeypatch, idx)
     assert idx.search("haber spor", k=5).collect()
-    assert len(plans) == 1
-    p = plans[0]
+    assert len(seen) == 1
+    p = seen[0][0]
     assert "AdaptiveSparkPlan" not in p and "Exchange" not in p
     parts = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
     assert parts and "term_bucket" in parts[0]
@@ -220,27 +214,73 @@ BATCH = QUERIES + ["istanbul", "haber spor", NO_HIT, "öğrenci",
                    "öğrenci haber", "İZMİR haber"]
 
 
-def _batch(spark, ix, cap, monkeypatch):
-    monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
-    idx = BM25Index(spark, ix)
-    return idx, {(mode, k): [tuple(r) for r in
-                             idx.search_many(BATCH, k=k, mode=mode).collect()]
-                 for mode in ("wand", "exhaustive") for k in (3, 10)}
+def _bounds(idx, queries, k):
+    """(candidate bound, scored-row bound) of a batch, from the memoized
+    dfs: Σ_q min(n_shards·k, Σdf_q) and Σ_q Σdf_q."""
+    n_shards = int(idx.meta["n_shards"])
+    sums = [sum(df for _, df, _ in idx._term_meta(idx.query_terms(q)))
+            for q in set(queries)]
+    return sum(min(n_shards * k, n) for n in sums), sum(sums)
+
+
+def _regime_caps(idx, queries, k):
+    """A cap that sends the batch to each regime of ``search_many``."""
+    cand, scored = _bounds(idx, queries, k)
+    assert cand < scored
+    return {"driver": scored, "merge": cand, "window": cand - 1}
+
+
+def _spy_to_pandas(monkeypatch, idx) -> list:
+    """Record (plan, row count) of every ``toPandas`` from now on."""
+    cls = type(idx._blocks)
+    to_pandas = cls.toPandas
+    seen = []
+
+    def spy(df):
+        out = to_pandas(df)
+        seen.append((_plan(df), len(out)))
+        return out
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+    return seen
+
+
+def _regime(seen) -> str:
+    """Which regime a ``search_many`` call took, from its collects: none
+    (the lazy Window plan), the per-shard applyInPandas merge, or the block
+    fetch of driver scoring."""
+    if not seen:
+        return "window"
+    assert len(seen) == 1
+    return "merge" if "FlatMapGroupsInPandas" in seen[0][0] else "driver"
 
 
 @pytest.mark.parametrize("which", ["tiny", "delta"])
 def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
                                                 delta_index, monkeypatch,
                                                 which):
-    """The driver merge of the per-shard candidates returns the Window
-    plan's rows in the Window plan's order — wand and exhaustive, k = 3
-    cutting tie groups that span shards — and each query's rows are
-    exactly what ``search`` returns for it."""
+    """The three regimes of ``search_many`` — driver scoring, the driver
+    merge of the per-shard applyInPandas candidates, and the Window plan —
+    return the same rows in the same order, for wand and exhaustive, k = 3
+    cutting tie groups that span shards; each query's rows are exactly
+    what ``search`` returns for it."""
     ix = tiny_index[0] if which == "tiny" else delta_index
-    idx, driver = _batch(spark, ix, DRIVER, monkeypatch)
-    _, window = _batch(spark, ix, DISTRIBUTED, monkeypatch)
-    assert driver == window
-    for (mode, k), rows in driver.items():
+    idx = BM25Index(spark, ix)
+    idx.search_many(BATCH, k=1).collect()  # fill the term memo
+    seen = _spy_to_pandas(monkeypatch, idx)
+    got = {}
+    for mode in ("wand", "exhaustive"):
+        for k in (3, 10):
+            per = {}
+            for regime, cap in _regime_caps(idx, BATCH, k).items():
+                monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
+                seen.clear()
+                df = idx.search_many(BATCH, k=k, mode=mode)
+                assert _regime(seen) == regime
+                per[regime] = [tuple(r) for r in df.collect()]
+            assert per["driver"] == per["merge"] == per["window"], (mode, k)
+            got[(mode, k)] = per["driver"]
+    for (mode, k), rows in got.items():
         queries = [q for q, _, _ in rows]
         assert queries == sorted(queries)
         assert set(queries) == {q for q in BATCH
@@ -248,7 +288,7 @@ def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
         for q in set(BATCH):
             want = [tuple(r) for r in idx.search(q, k=k, mode=mode).collect()]
             assert [(d, s) for g, d, s in rows if g == q] == want, (q, mode)
-    got = {q for q, _, _ in driver[("wand", 10)]}
+    got = {q for q, _, _ in got[("wand", 10)]}
     assert NO_HIT not in got and {"çocuk", "İZMİR haber"} <= got
     if which == "delta":
         # some k = 3 cut falls inside a tie group of twins on several shards
@@ -259,9 +299,9 @@ def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
 
 def test_batch_merge_plan_shapes(spark, tiny_index, monkeypatch):
     """The broadcast side of a big lookup is a LocalRelation (no
-    Python-RDD scan); the driver-merged batch is a LocalTableScan with no
-    Window or Sort; above the candidate bound the batch keeps its Window
-    and global sort."""
+    Python-RDD scan); a batch answered on the driver is a LocalTableScan
+    with no Window or Sort; above the candidate bound the batch keeps its
+    Window and global sort."""
     monkeypatch.setattr(BM25Index, "_ISIN_MAX", 0)
     idx = BM25Index(spark, tiny_index[0])
     for col, values, df in (("term", ["haber", "spor"], idx._blocks),
@@ -282,38 +322,48 @@ def test_batch_merge_plan_shapes(spark, tiny_index, monkeypatch):
 
 
 def test_batch_merge_rows_stay_under_the_cap(spark, tiny_index, monkeypatch):
-    """The driver never collects more candidate rows than the cap: small
-    caps send the batch to the Window plan, large ones merge it on the
-    driver, and the answer is the same either way."""
+    """The driver never collects, nor scores, more rows than the cap:
+    small caps send the batch to the Window plan, larger ones to the
+    applyInPandas merge or to driver scoring, and the answer is the same
+    either way."""
+    from search_engine_tr_spark.operators import query_bm25
+
     idx = BM25Index(spark, tiny_index[0])
     qs = [q for q in BATCH if q != NO_HIT]
-    cls = type(idx._blocks)
-    to_pandas = cls.toPandas
-    sizes = []
+    seen = _spy_to_pandas(monkeypatch, idx)
+    batch_topk = query_bm25.batch_topk
+    scored = []
 
-    def spy(df):
-        out = to_pandas(df)
-        sizes.append(len(out))
-        return out
+    def spy(term_ids, docs, impacts, queries, k):
+        per_term = np.bincount(term_ids)
+        scored.append(sum(int(per_term[t]) for ts in queries for t in ts))
+        return batch_topk(term_ids, docs, impacts, queries, k)
 
-    monkeypatch.setattr(cls, "toPandas", spy)
-    answers, eager = set(), []
-    for cap in (10, 200, 2000, DRIVER):
+    monkeypatch.setattr(query_bm25, "batch_topk", spy)
+    answers, regimes = set(), []
+    caps = sorted({10, 200, 2000, DRIVER, *_regime_caps(idx, qs, 10).values()})
+    for cap in caps:
         monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
-        sizes.clear()
+        seen.clear()
+        scored.clear()
         rows = idx.search_many(qs, k=10)
-        eager.append(bool(sizes))
-        assert all(n <= cap for n in sizes), (cap, sizes)
+        regimes.append(_regime(seen))
+        assert all(n <= cap for _, n in seen), (cap, seen)
+        assert all(0 < n <= cap for n in scored), (cap, scored)
+        assert bool(scored) == (regimes[-1] == "driver")
         answers.add(tuple(map(tuple, rows.collect())))
     assert len(answers) == 1
-    assert eager[0] is False and eager[-1] is True
+    assert regimes[0] == "window" and regimes[-1] == "driver"
+    assert "merge" in regimes
 
 
 def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
                                                 monkeypatch):
-    """A memo-hit batch over more than ``_ISIN_MAX`` terms runs at most two
-    Spark jobs (the broadcast build of its block filter and the per-shard
-    kernel), and every batch destroys its query broadcast once the call
+    """A memo-hit batch over more than ``_ISIN_MAX`` terms scored on the
+    driver runs at most two Spark jobs (the broadcast build of its block
+    filter and the block fetch), makes no broadcast variable, and fetches
+    with a JVM-only plan: no Python-worker stage, no shuffle. A batch on
+    the applyInPandas regime destroys its query broadcast once the call
     returns — also when the call raises."""
     out, _ = tiny_index
     idx = BM25Index(spark, out)
@@ -333,13 +383,41 @@ def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
         return made[-1]
 
     monkeypatch.setattr(sc, "broadcast", spy)
+    seen = _spy_to_pandas(monkeypatch, idx)
     rows, n = _jobs(spark, "batch-hit",
                     lambda: idx.search_many(qs, k=10).collect())
-    assert rows and n <= 2
+    assert rows and n <= 2 and made == []
+    assert _regime(seen) == "driver"
+    p = seen[0][0]
+    assert "FlatMapGroupsInPandas" not in p and "ArrowEvalPython" not in p
+    assert "BroadcastExchange" in p
+    assert not [ln for ln in p.splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln]
+    monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS",
+                        _regime_caps(idx, qs, 1)["merge"])
+    seen.clear()
+    assert idx.search_many(qs, k=1).collect()
+    assert _regime(seen) == "merge"
     assert len(made) == 1 and not made[0]._jbroadcast.isValid()
     # a failing collect still releases the broadcast
     monkeypatch.setattr(type(idx._blocks), "toPandas",
                         lambda df: 1 / 0)
     with pytest.raises(ZeroDivisionError):
-        idx.search_many(qs[:3], k=10)
+        idx.search_many(qs, k=1)
     assert len(made) == 2 and not made[1]._jbroadcast.isValid()
+
+
+def test_unknown_mode_is_rejected(spark, tiny_index):
+    """A mode other than "wand" or "exhaustive" raises before any job
+    runs, on every entry point, instead of silently picking a kernel."""
+    idx = BM25Index(spark, tiny_index[0])
+    for name, fn in (
+            ("search", lambda: idx.search("haber", mode="WAND")),
+            ("many", lambda: idx.search_many(["haber"], mode="WAND")),
+            ("meta", lambda: idx.search_with_meta("haber", mode="wnad")),
+            ("urls", lambda: idx.search_with_urls(NO_HIT, mode="")),
+            ("no-hit many", lambda: idx.search_many([NO_HIT], mode="x"))):
+        with pytest.raises(ValueError, match="unknown mode"):
+            _jobs(spark, "bad-mode-" + name, fn)
+        assert not spark.sparkContext.statusTracker().getJobIdsForGroup(
+            "bad-mode-" + name), name

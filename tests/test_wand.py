@@ -1,5 +1,5 @@
-"""WAND == exhaustive top-k (property test, SURVEY.md §5.5) + BM25 parity
-with the scalar oracle."""
+"""WAND == exhaustive top-k (property test, SURVEY.md §5.5), the batch
+scorer == exhaustive per query, + BM25 parity with the scalar oracle."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -7,6 +7,7 @@ from hypothesis import strategies as st
 
 from search_engine_tr_spark.functions.codec import BLOCK_SIZE, encode_block
 from search_engine_tr_spark.operators.wand import (
+    batch_topk,
     exhaustive_topk,
     impacts_for,
     wand_topk,
@@ -86,3 +87,77 @@ def test_wand_multiblock_skipping():
 def test_empty_and_zero_k():
     assert wand_topk([], 10, 1.0) == []
     assert wand_topk([(1.0, [])], 10, 1.0) == []
+
+
+def _batch_vs_exhaustive(terms, queries, avgdl, k, perm=None):
+    """batch_topk over ``terms`` ([(postings, idf)], postings fed in
+    ``perm`` order, idf per posting as the query path passes it) must equal
+    exhaustive_topk per query, scores compared with ==."""
+    rows = [(i, d, tf, dl, idf) for i, (p, idf) in enumerate(terms)
+            for d, tf, dl in p]
+    if perm is not None:
+        rows = [rows[i] for i in perm]
+    tid, docs, tfs, dls, idf = (np.array(c) for c in zip(*rows)) if rows \
+        else (np.empty(0, dtype=np.int64),) * 5
+    qi, d, s = batch_topk(tid.astype(np.int64), docs.astype(np.uint64),
+                          impacts_for(tfs.astype(np.uint64),
+                                      dls.astype(np.uint64),
+                                      idf.astype(np.float64), avgdl),
+                          queries, k)
+    assert qi.tolist() == sorted(qi.tolist())
+    out = []
+    for q, ts in enumerate(queries):
+        want = exhaustive_topk([_pack_term(terms[t][0], avgdl, terms[t][1])
+                                for t in ts], k, avgdl)
+        got = list(zip(d[qi == q].tolist(), s[qi == q].tolist()))
+        assert got == want, (q, got, want)
+        out.append(got)
+    return out
+
+
+@st.composite
+def batches(draw):
+    """Terms shared across queries, some with no postings; small tf/dl
+    ranges, so equal impacts on several docs are common; doc ids from 0 or
+    from 2^40; k from 1 to past every query's hits."""
+    n_docs = draw(st.integers(2, 40))
+    base = draw(st.sampled_from([0, 2**40]))
+    dls = {d: draw(st.integers(1, 6)) for d in range(n_docs)}
+    avgdl = sum(dls.values()) / n_docs
+    terms = []
+    for _ in range(draw(st.integers(1, 6))):
+        docs = sorted(draw(st.sets(st.integers(0, n_docs - 1))))
+        postings = [(base + d, draw(st.integers(1, min(3, dls[d]))), dls[d])
+                    for d in docs]
+        terms.append((postings, bm25_idf(n_docs, max(1, len(docs)))))
+    queries = draw(st.lists(st.lists(st.integers(0, len(terms) - 1),
+                                     unique=True, max_size=len(terms)),
+                            min_size=1, max_size=6))
+    perm = draw(st.permutations(range(sum(len(p) for p, _ in terms))))
+    return terms, queries, avgdl, draw(st.integers(1, 2 * n_docs)), perm
+
+
+@given(batches())
+@settings(max_examples=150, deadline=None)
+def test_batch_topk_equals_exhaustive_per_query(case):
+    _batch_vs_exhaustive(*case)
+
+
+def test_batch_topk_ties_shared_terms_and_empty_queries():
+    """Twin docs tie on every term: k cuts inside the tie group and doc_id
+    orders it; a shared term scores in both queries; a query whose only
+    term has no postings, and one with no terms, return nothing; k past
+    the hits returns them all."""
+    base = 2**40
+    twins = [(base + d, 2, 5) for d in range(8)]
+    other = [(base + d, 1, 5) for d in range(4, 12)]
+    terms = [(twins, 1.5), (other, 0.75), ([], 2.0)]
+    queries = [[0], [1, 0], [2], [], [0, 1]]
+    got = _batch_vs_exhaustive(terms, queries, 5.0, 3)
+    assert [d for d, _ in got[0]] == [base, base + 1, base + 2]
+    assert len({s for _, s in got[0]}) == 1
+    assert got[2] == got[3] == []
+    assert [d for d, _ in got[1]] == [d for d, _ in got[4]] == \
+        [base + 4, base + 5, base + 6]
+    wide = _batch_vs_exhaustive(terms, queries, 5.0, 100)
+    assert len(wide[1]) == 12 and wide[2] == []
