@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
-"""Per-operation Spark job breakdown of a traced perfbench run.
+"""Per-span Spark job breakdown of a traced perfbench run.
 
-    python3 scripts/trace_jobs.py .perfbench_out/trace-serve-batch-5.json
+    python3 scripts/trace_jobs.py .perfbench_out/trace-serve-batch-5.json \
+        [--span op]
 
 A traced run (``perfbench/run.py --trace 1``) dumps its spans and the
-Spark status API's job list. For each ``op`` span (one result page or one
-batch) this prints the jobs submitted inside it: start offset from the
-op's start, duration, task count and call site. It closes with the
-median jobs per op and, per call site and occurrence within an op (a
-broadcast join side and the scan it feeds share a call site), the number
-of jobs and their median duration.
+Spark status API's job list. For each span named ``--span`` (default
+``op``: one result page or one batch; others are e.g.
+``query_bm25.open``, ``ingest`` and ``build``) this prints the jobs
+submitted inside it: start offset from the span's start, duration, task
+count and call site. It closes with the median jobs per span and, per
+call site and occurrence within a span (a broadcast join side and the
+scan it feeds share a call site), the number of jobs and their median
+duration.
 """
 
 from __future__ import annotations
@@ -25,13 +28,14 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
 from spans import _rest_time  # noqa: E402
 
 
-def op_jobs(trace: dict) -> list[tuple[dict, list[dict]]]:
-    """[(op span, [jobs submitted inside it, by submission time])]."""
+def span_jobs(trace: dict, name: str) -> list[tuple[dict, list[dict]]]:
+    """[(span named ``name``, [jobs submitted inside it, by submission
+    time])]."""
     jobs = sorted((j for j in trace["jobs"] if j.get("t") is not None),
                   key=lambda j: j["t"])
-    return [(op, [j for j in jobs if op["start"] <= j["t"] <= op["end"]])
-            for op in sorted(trace["spans"], key=lambda s: s["start"])
-            if op["name"] == "op"]
+    return [(sp, [j for j in jobs if sp["start"] <= j["t"] <= sp["end"]])
+            for sp in sorted(trace["spans"], key=lambda s: s["start"])
+            if sp["name"] == name]
 
 
 def job_ms(job: dict) -> float | None:
@@ -42,30 +46,33 @@ def job_ms(job: dict) -> float | None:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("trace", help="a .perfbench_out/trace-*.json file")
+    ap.add_argument("--span", default="op",
+                    help="span name to break down (default: op)")
     args = ap.parse_args(argv)
     with open(args.trace) as f:
         trace = json.load(f)
     by_site: dict[tuple[str, int], list[float]] = {}
-    ops = op_jobs(trace)
-    for i, (op, jobs) in enumerate(ops):
-        print(f"op {i}: {op['dur'] * 1000:.0f} ms, {len(jobs)} jobs")
+    spans = span_jobs(trace, args.span)
+    for i, (sp, jobs) in enumerate(spans):
+        print(f"{args.span} {i}: {sp['dur'] * 1000:.0f} ms, "
+              f"{len(jobs)} jobs")
         nth: dict[str, int] = {}
         for j in jobs:
             ms, site = job_ms(j), j.get("name", "")
             nth[site] = nth.get(site, 0) + 1
-            print(f"  +{(j['t'] - op['start']) * 1000:6.0f} ms"
+            print(f"  +{(j['t'] - sp['start']) * 1000:6.0f} ms"
                   f"  {'?' if ms is None else f'{ms:.0f}':>6} ms"
                   f"  {j.get('numTasks', '?'):>4} tasks  {site}")
             if ms is not None:
                 by_site.setdefault((site, nth[site]), []).append(ms)
-    if ops:
-        per_op = [len(jobs) for _, jobs in ops]
-        print(f"{len(ops)} ops, jobs per op median "
-              f"{statistics.median(per_op):g} (min {min(per_op)}, "
-              f"max {max(per_op)})")
+    if spans:
+        per = [len(jobs) for _, jobs in spans]
+        print(f"{len(spans)} {args.span} spans, jobs per span median "
+              f"{statistics.median(per):g} (min {min(per)}, "
+              f"max {max(per)})")
     for (site, n), ms in sorted(by_site.items(), key=lambda kv: kv[0]):
         print(f"{len(ms):5d} jobs  median {statistics.median(ms):7.1f} ms"
-              f"  {site} [#{n} in op]")
+              f"  {site} [#{n} in {args.span}]")
     return 0
 
 

@@ -3,8 +3,11 @@
 Query lifecycle (Spark mapping of SURVEY.md §3.1):
 1. normalize the raw query with the SAME function as the oracle
    (functions.text.normalize_query — CLI parity, client_CLI.py:30-32)
-2. look up df/term_bucket for the query terms (tiny scan of term_stats,
-   predicate pushed down) → idf per term, candidate bucket list
+2. look up df/term_bucket for the query terms → idf per term, candidate
+   bucket list. In the default memory mode this is a probe of the driver
+   lexicon the reader read once at construction: zero Spark jobs. In
+   pruned mode, terms missing from the reader's LRU memo cost one tiny
+   term_stats scan (bucket partitions pruned, term predicate pushed down)
 3. read ONLY the matching ``term_bucket=`` partitions of the blocks table
    (directory-level partition pruning — the scalable replacement for the
    reference's 27-table routing) with a pushed-down term filter
@@ -83,6 +86,17 @@ def _top_frame(rows: list) -> pd.DataFrame:
         {"doc_id": "int64", "score": "float64"})
 
 
+def _sum_df(rows) -> dict[str, tuple[int, int]]:
+    """(term, df, term_bucket) term_stats rows → term → (df, term_bucket),
+    df SUMMED across a term's rows: an incrementally-refreshed index holds
+    one base row plus one row per delta refresh for a term (same
+    term_bucket — it is a pure hash of the term)."""
+    found: dict[str, tuple[int, int]] = {}
+    for term, df, bucket in rows:
+        found[term] = (found.get(term, (0, 0))[0] + int(df), int(bucket))
+    return found
+
+
 class BM25Index:
     """Reader over an index directory produced by plans.index_build.
 
@@ -103,12 +117,16 @@ class BM25Index:
                  reader_shuffle_partitions: int | None = None):
         """``tstats_mode``:
 
-        - "memory" (default, single-node/bench): persist the whole
-          term_stats table — hot, one row per term, fine while it fits.
+        - "memory" (default, single-node/bench): the committed term_stats
+          are read ONCE here into a driver dict term → (df, term_bucket),
+          so every term lookup is a dict probe — zero Spark jobs, nothing
+          cached in Spark. Fine while the vocabulary fits on the driver.
         - "pruned" (the 10^12-doc path): term_stats stays on disk
-          (partitioned by term_bucket at build time); each query computes
-          its terms' buckets and reads ONLY those partitions — the df/idf
-          lookup cost is bounded by the query's buckets, not the vocabulary.
+          (partitioned by term_bucket at build time); each query's unseen
+          terms cost one lookup job that reads ONLY their buckets'
+          partitions — the df/idf lookup cost is bounded by the query's
+          buckets, not the vocabulary — and an LRU memo of looked-up terms
+          spares repeated terms that job.
 
         ``reader_shuffle_partitions``: reduce-side task count for the
         DISTRIBUTED query path only — the per-shard WAND stage of single
@@ -158,16 +176,12 @@ class BM25Index:
         # parquet footers are amortized across queries
         self.tstats_mode = tstats_mode
         if tstats_mode == "memory":
-            # coalesce before persisting: the on-disk table has one-plus
-            # partitions per term_bucket, so every df lookup launched ~32
-            # tasks over a vocabulary that fits in memory anyway —
-            # measured p50 of a fresh-term lookup 313 -> 149 ms at sf0.1
-            # with 4 cached partitions (BENCH notes r5). Memory mode is
-            # by definition the fits-in-memory path; "pruned" mode is the
-            # big-vocabulary path and keeps the partitioned layout.
-            self._tstats = self._read_term_stats().coalesce(4).persist()
+            pdf = (self._read_term_stats()
+                   .select("term", "df", "term_bucket").toPandas())
+            self._lexicon: dict[str, tuple[int, int]] | None = \
+                _sum_df(pdf.itertuples(index=False, name=None))
         elif tstats_mode == "pruned":
-            self._tstats = None
+            self._lexicon = None
         else:
             raise ValueError(f"unknown tstats_mode {tstats_mode!r}")
         blocks = self._qspark.read.parquet(self.paths.blocks)
@@ -195,11 +209,11 @@ class BM25Index:
         self._blocks = blocks
         self._tables: dict[str, DataFrame] = {}  # doc_map / doc_meta readers
         self._domain_scores = None
-        # per-term (df, bucket) LRU memo — a BM25Index is a snapshot reader
-        # (n_docs/avgdl frozen at construction), so term stats are immutable
-        # for its lifetime; repeated terms skip the lookup job entirely, and
-        # the cap keeps a long run of distinct queries from growing the
-        # driver without bound
+        # pruned mode's per-term (df, bucket) LRU memo — a BM25Index is a
+        # snapshot reader (n_docs/avgdl frozen at construction), so term
+        # stats are immutable for its lifetime; repeated terms skip the
+        # lookup job entirely, and the cap keeps a long run of distinct
+        # queries from growing the driver without bound
         self._term_memo: OrderedDict[str, tuple[int, int] | None] = \
             OrderedDict()
 
@@ -281,6 +295,9 @@ class BM25Index:
 
     def _term_meta(self, terms: list[str]) -> list[tuple[str, int, int]]:
         """[(term, df, term_bucket)] for terms present in the index."""
+        if self._lexicon is not None:
+            lex = self._lexicon
+            return [(t, *lex[t]) for t in terms if t in lex]
         memo = self._term_memo
         got: dict[str, tuple[int, int] | None] = {}
         missing = []
@@ -291,21 +308,11 @@ class BM25Index:
             else:
                 missing.append(t)
         if missing:
-            if self._tstats is not None:
-                scan = self._tstats
-            else:
-                # pruned mode: directory-level pruning to the query's buckets
-                scan = self._read_term_stats().filter(
-                    F.col("term_bucket").isin(self._buckets_of(missing)))
-            rows = self._isin(scan, "term", missing).collect()
-            # SUM df across rows: an incrementally-refreshed index holds
-            # one base row plus one row per delta refresh for a term (same
-            # term_bucket — it's a pure hash of the term)
-            found: dict[str, tuple[int, int]] = {}
-            for r in rows:
-                df0 = found.get(r["term"], (0, 0))[0]
-                found[r["term"]] = (df0 + int(r["df"]),
-                                    int(r["term_bucket"]))
+            # directory-level pruning to the missing terms' buckets
+            scan = self._read_term_stats().filter(
+                F.col("term_bucket").isin(self._buckets_of(missing)))
+            found = _sum_df(self._isin(scan, "term", missing)
+                            .select("term", "df", "term_bucket").collect())
             for t in missing:
                 got[t] = memo[t] = found.get(t)  # None = absent, memoized
             while len(memo) > self._TERM_MEMO_MAX:
@@ -317,9 +324,10 @@ class BM25Index:
         """→ DataFrame(doc_id, score) — global top-k, (score desc, doc_id asc).
 
         Plan shape (measured in BENCH notes r5): term df/idf comes from the
-        MEMOIZED driver lookup (zero jobs for seen terms, one tiny collect
-        for new ones) and rides the kernel closure; bucket routing is
-        driver-side hashing (functions.xxh — no job). A single-action
+        driver lookup (zero jobs in memory mode; in pruned mode zero for
+        memo hits, one tiny collect for new terms) and rides the kernel
+        closure; bucket routing is driver-side hashing (functions.xxh — no
+        job). A single-action
         variant that broadcast-joined a df frame into the block scan was
         tried and REVERTED: the extra agg + broadcast-build stages cost
         more scheduling latency per query than the collect they replaced
@@ -388,10 +396,11 @@ class BM25Index:
         the query column) — len(set(raw_queries)) groups, not
         len(raw_queries).
 
-        One term_stats lookup for the union of terms (memo misses only)
-        and one pruned block read for the union of (bucket, term) serve the
-        whole batch. The memoized dfs then pick one of three regimes before
-        any job runs (module docstring, steps 4–5):
+        One term lookup for the union of terms (on the driver in memory
+        mode; one term_stats job for memo misses in pruned mode) and one
+        pruned block read for the union of (bucket, term) serve the whole
+        batch. The looked-up dfs then pick one of three regimes before any
+        job runs (module docstring, steps 4–5):
 
         1. the batch's scored rows Σ_q Σdf_q are at most
            ``_DRIVER_MAX_POSTINGS``: the pruned blocks are fetched with one
@@ -408,13 +417,13 @@ class BM25Index:
         3. above both: the lazy plan ranks per query with a Window over the
            shuffled candidates and sorts the result with ``orderBy``.
 
-        Regimes 1–2 run eagerly: one Spark job for a memo-hit batch (plus
-        one per broadcast join side of more than ``_ISIN_MAX`` terms, and
-        the lookup job for memo misses). In regimes 2–3 the query→terms
-        map and idf table ride a Spark broadcast variable, not closure
-        capture, so a 10k-query batch is shipped to each executor once;
-        regime 2 destroys it after its collect. Python ``str`` order is
-        code-point order, the same as Spark's UTF-8 binary order."""
+        Regimes 1–2 run eagerly: one Spark job per batch (plus one per
+        broadcast join side of more than ``_ISIN_MAX`` terms, and in pruned
+        mode the lookup job for memo misses). In regimes 2–3 the
+        query→terms map and idf table ride a Spark broadcast variable, not
+        closure capture, so a 10k-query batch is shipped to each executor
+        once; regime 2 destroys it after its collect. Python ``str`` order
+        is code-point order, the same as Spark's UTF-8 binary order."""
         from pyspark.sql import Window
 
         kernel = _kernel(mode)
@@ -545,7 +554,8 @@ class BM25Index:
         reference result page (src/modules/pagerank.py:119-126,
         document_search_client_CLI.py:57-61). ``doc_meta`` carries the url
         too, so the whole page is one k-row read of it after the top-k; a
-        memo-hit query costs two Spark jobs, a no-hit one none."""
+        page costs two Spark jobs (plus, in pruned mode, the lookup job
+        for memo misses), a no-hit one none."""
         page = self._attach(self._page(raw_query, k, mode), "doc_meta",
                             ["url", "title", "description"])
         return self._local(

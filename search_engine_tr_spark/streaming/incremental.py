@@ -382,7 +382,8 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
     they are folded in as DELTAS:
 
     - **term_stats**: one delta row per touched term, appended;
-      ``BM25Index._term_meta`` sums df across a term's rows.
+      ``BM25Index`` sums df across a term's rows — once, into its driver
+      lexicon, in memory mode; per lookup job in pruned mode.
     - **blocks**: packed from the delta postings only, under the UPDATED
       corpus avgdl, and appended. Readers order a term's blocks by
       max_doc_id (delta ranges sit strictly above base ranges) and restore

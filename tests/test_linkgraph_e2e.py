@@ -4,6 +4,7 @@ query paths (search_with_meta, search_blended) consume them — no
 hand-assembly. Parity checks run against the pure-python oracle."""
 
 import math
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,16 @@ from search_engine_tr_spark.operators.query_bm25 import BM25Index
 from search_engine_tr_spark.oracle.htmltext import (base_url, extract_links,
                                                     parse_document)
 from search_engine_tr_spark.plans.backlinks import refresh_domain_scores
+
+
+@pytest.fixture(scope="module")
+def tiny_index(tiny_index, tmp_path_factory):
+    """This module's own copy of the shared index: its tests write
+    ``domain_scores`` into it, and the shared index must keep no such table
+    (test_engine_e2e checks the missing-table fallback)."""
+    out = str(tmp_path_factory.mktemp("linkgraph") / "index")
+    shutil.copytree(tiny_index[0], out)
+    return out, tiny_index[1]
 
 
 def _decode(b):

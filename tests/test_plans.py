@@ -85,24 +85,22 @@ def test_pruned_tstats_mode_matches_memory_and_prunes(spark, tiny_index):
     assert ([r.asDict() for r in pruned.search("haber spor", k=5).collect()]
             == [r.asDict() for r in mem.search("haber spor", k=5).collect()])
     buckets = pruned._buckets_of(terms)
-    # plan check on a fresh copy of the table: the shared test session has
-    # term_stats persisted (memory mode), and Spark's cache manager swaps
-    # InMemoryRelation into ANY plan over the same path, hiding the scan
-    import tempfile
-
-    fresh = tempfile.mkdtemp() + "/tstats"
-    spark.read.parquet(out + "/term_stats").write \
-        .partitionBy("term_bucket").parquet(fresh)
-    scan = (spark.read.parquet(fresh)
+    # the lookup scan itself: no reader caches term_stats, so Spark's cache
+    # manager has no InMemoryRelation to swap in for it
+    scan = (pruned._read_term_stats()
             .filter(F.col("term_bucket").isin(buckets)))
     p = _plan(scan)
     assert "PartitionFilters" in p and "term_bucket" in p
 
 
-def test_blended_search_joins_broadcast(spark, tiny_index):
-    out, _ = tiny_index
+def test_blended_search_joins_broadcast(spark, tiny_index, tmp_path):
+    import shutil
+
     from search_engine_tr_spark.plans.backlinks import refresh_domain_scores
 
+    # its own copy of the index: the shared one must keep no domain_scores
+    # table (test_engine_e2e checks the missing-table fallback)
+    out = shutil.copytree(tiny_index[0], str(tmp_path / "index"))
     refresh_domain_scores(spark, out, mode="indegree")
     idx = BM25Index(spark, out)
     p = _plan(idx.search_blended("haber spor", k=5))

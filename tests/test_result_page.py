@@ -1,13 +1,16 @@
 """The result-page path of BM25Index: small queries run their top-k kernel
 on the driver and return rows identical to the distributed plan's; pages
-attach metadata with one k-row ``doc_id IN (...)`` read; memo-hit pages
-cost at most two Spark jobs and no-hit pages none; the per-term memo is a
-bounded LRU. Batches (``search_many``) take one of three regimes by the
-same cap — driver scoring, a driver merge of per-shard candidates, or the
-Window plan — and all three return the same rows."""
+attach metadata with one k-row ``doc_id IN (...)`` read; warm pages cost
+at most two Spark jobs and no-hit pages none; a memory-mode reader looks
+terms up on its driver lexicon with no job and caches nothing in Spark;
+pruned mode's per-term memo is a bounded LRU. Batches (``search_many``)
+take one of three regimes by the same cap — driver scoring, a driver
+merge of per-shard candidates, or the Window plan — and all three return
+the same rows."""
 
 import contextlib
 import io
+import shutil
 
 import numpy as np
 import pytest
@@ -126,10 +129,10 @@ def test_page_columns_and_nulls(spark, tiny_index):
 
 
 def test_result_page_job_budget(spark, tiny_index):
-    """A memo-hit result page is one block fetch plus one k-row metadata
+    """A warm result page is one block fetch plus one k-row metadata
     fetch; a page whose terms are all absent launches no job at all."""
     idx = BM25Index(spark, tiny_index[0])
-    for q in ("haber spor", NO_HIT):  # fill the term memo
+    for q in ("haber spor", NO_HIT):  # warm the reader
         idx.search_with_meta(q, k=10).collect()
     rows, n = _jobs(spark, "page-hit",
                     lambda: idx.search_with_meta("haber spor").collect())
@@ -184,11 +187,12 @@ def test_driver_block_fetch_is_aqe_free_and_pruned(spark, tiny_index,
 
 
 def test_term_memo_is_a_bounded_lru(spark, tiny_index, monkeypatch):
-    """A long run of distinct queries keeps the memo at its cap, and a term
-    evicted from it resolves to the same df when it comes back."""
+    """A long run of distinct queries keeps pruned mode's memo at its cap,
+    and a term evicted from it resolves to the same df when it comes
+    back."""
     out, _ = tiny_index
     monkeypatch.setattr(BM25Index, "_TERM_MEMO_MAX", 8)
-    idx = BM25Index(spark, out)
+    idx = BM25Index(spark, out, tstats_mode="pruned")
     terms = [r["term"] for r in spark.read.parquet(out + "/term_stats")
              .select("term").distinct().orderBy("term").limit(400).collect()]
     terms = [t for t in terms if idx.query_terms(t) == [t]][:40]
@@ -206,6 +210,62 @@ def test_term_memo_is_a_bounded_lru(spark, tiny_index, monkeypatch):
     idx._term_meta([terms[0]])
     idx._term_meta(terms[20:27])
     assert terms[0] in idx._term_memo
+
+
+@pytest.mark.parametrize("which", ["tiny", "delta"])
+def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
+                                              which):
+    """A memory-mode reader answers term lookups from its driver lexicon:
+    never-seen terms — an absent one and, on the delta index, terms with a
+    base and a delta row — cost no Spark job and resolve exactly as pruned
+    mode's lookup job resolves them. A page of never-seen terms costs at
+    most two jobs (block fetch, metadata fetch); a batch of them under the
+    cap one block fetch, plus the broadcast side of a block filter over
+    more than ``_ISIN_MAX`` terms."""
+    ix = tiny_index[0] if which == "tiny" else delta_index
+    idx = BM25Index(spark, ix)
+    pruned = BM25Index(spark, ix, tstats_mode="pruned")
+    counts = (idx._read_term_stats().groupBy("term").count()
+              .orderBy("term").collect())
+    vocab = [r["term"] for r in counts
+             if idx.query_terms(r["term"]) == [r["term"]]]
+    multi = [r["term"] for r in counts
+             if r["count"] > 1 and r["term"] in set(vocab)]
+    assert bool(multi) == (which == "delta")
+    terms = multi[:3] + vocab[:3] + ["zzzzz"]
+    got, n = _jobs(spark, "lexicon-" + which, lambda: idx._term_meta(terms))
+    assert n == 0
+    assert len(got) == len(terms) - 1
+    assert got == pruned._term_meta(terms)
+
+    fresh = BM25Index(spark, ix)
+    fresh.search_with_meta(vocab[0]).collect()  # open the doc_meta reader
+    unseen = [t for t in dict.fromkeys(multi + vocab) if t != vocab[0]]
+    page = " ".join(unseen[:2])
+    rows, n = _jobs(spark, "lexicon-page-" + which,
+                    lambda: fresh.search_with_meta(page).collect())
+    assert rows and n <= 2
+    qs = [" ".join(unseen[i:i + 2]) for i in range(2, len(unseen), 2)]
+    batch_terms = {t for q in qs for t in fresh.query_terms(q)}
+    assert _bounds(fresh, qs, 10)[1] <= BM25Index._DRIVER_MAX_POSTINGS
+    rows, n = _jobs(spark, "lexicon-batch-" + which,
+                    lambda: fresh.search_many(qs, k=10).collect())
+    assert rows and n <= 1 + (len(batch_terms) > BM25Index._ISIN_MAX)
+
+
+def test_memory_reader_persists_nothing(spark, delta_index, tmp_path):
+    """Opening a memory-mode reader and serving a page and a batch leaves
+    the session's persistent RDDs as they were: the lexicon is a driver
+    dict, not a cached frame that nothing ever releases. The reader opens
+    a copy of the index no reader has opened yet, so no earlier cache of
+    the same scan can mask a new one."""
+    ix = shutil.copytree(delta_index, str(tmp_path / "index"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    idx = BM25Index(spark, ix)
+    assert idx.search_with_meta("haber spor").collect()
+    assert idx.search_many(["haber spor", "istanbul", NO_HIT]).collect()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 # duplicates, a no-hit query and non-ASCII queries whose code-point order
