@@ -13,19 +13,20 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
    reference's 27-table routing) with a pushed-down term filter
 4. per doc-shard: block-max WAND (or exhaustive) local top-k. A query
    whose postings (Σdf, known from step 2) fit under
-   ``BM25Index._DRIVER_MAX_POSTINGS`` fetches its pruned blocks in ONE
-   JVM-only job (Arrow ``toPandas``) and runs the same per-shard kernel on
-   the driver — no Python-worker stage, whose start-up dwarfs a few ms of
-   kernel work. Larger queries run it inside one Arrow-batched
-   applyInPandas group per shard — each head term's postings are split
-   across all shards, so no task sees more than df/n_shards postings.
-   ``search_many`` scores a batch whose scored rows (Σ over its queries of
-   Σdf) fit under the same bound on the driver too: one JVM-only fetch of
-   the batch's blocks, one vectorized decode of them all, one impact per
-   posting and one vectorized exact scoring pass for every query
-   (``wand.batch_topk``) — each block is decoded once per batch, not once
-   per query that uses it. Larger batches run every query's kernel in one
-   applyInPandas pass per shard
+   ``BM25Index._DRIVER_MAX_POSTINGS`` fetches its pruned blocks with one
+   filtered ``pyarrow.dataset`` read — zero Spark jobs — and runs the same
+   per-shard kernel on the driver: no Spark planning, no job and no
+   Python-worker stage in front of a few ms of kernel work. Larger queries
+   run it inside one Arrow-batched applyInPandas group per shard — each
+   head term's postings are split across all shards, so no task sees more
+   than df/n_shards postings. ``search_many`` scores a batch whose scored
+   rows (Σ over its queries of Σdf) fit under the same bound on the driver
+   too: one pyarrow read of the batch's blocks (zero Spark jobs), one
+   vectorized decode of them all, one impact per posting and one
+   vectorized exact scoring pass for every query (``wand.batch_topk``) —
+   each block is decoded once per batch, not once per query that uses it.
+   Larger batches run every query's kernel in one applyInPandas pass per
+   shard
 5. global (score desc, doc_id asc) top-k: a pandas sort of shards × k rows
    on the driver path, ``orderBy(...).limit(k)`` → TakeOrderedAndProject
    (no full sort) on the distributed one. ``batch_topk`` ranks every query
@@ -35,12 +36,17 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
    and merged by a pandas sort on the driver; above the bound a per-query
    Window top-k and an ``orderBy`` do it in Spark.
    Result pages then fetch the k hits' url/title/description with ONE
-   pushed-down ``doc_id IN (...)`` read (J3 pattern): k rows, never a
-   broadcast or shuffle of the whole table.
+   ``doc_id ∈ ids`` pyarrow read (J3 pattern): k rows, zero Spark jobs,
+   never a broadcast or shuffle of the whole table.
+
+The driver reads go through ``pyarrow.dataset``s opened once per reader.
+An index root pyarrow cannot open (``_arrow_root``) sends every query and
+batch to the distributed regimes and its pages to a Spark k-row read.
 """
 
 from __future__ import annotations
 
+import posixpath
 from collections import OrderedDict
 
 import pandas as pd
@@ -49,10 +55,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 
 from ..functions.codec import decode_blocks
 from ..functions.text import normalize_query
 from ..oracle.refscore import bm25_idf
+from ..plans import fsio
 from ..plans.index_build import IndexPaths
 from .wand import batch_topk, exhaustive_topk, impacts_for, wand_topk
 
@@ -69,6 +79,26 @@ _COL_TYPES = {"query": T.StringType(), "doc_id": T.LongType(),
               "title": T.StringType(), "description": T.StringType()}
 
 _TSTATS_SCHEMA = ("term string, df bigint, gen bigint, term_bucket int")
+
+# the blocks table as the driver reads it. One explicit schema: a file
+# without ``avgdl0`` reads it as null, which rescales by 1.0, as in Spark
+_BLOCKS_ARROW = pa.schema([
+    ("term", pa.string()), ("shard", pa.int32()), ("block_no", pa.int32()),
+    ("n", pa.int32()), ("max_doc_id", pa.int64()),
+    ("max_tfnorm", pa.float64()), ("avgdl0", pa.float64()),
+    ("block", pa.binary()), ("term_bucket", pa.int32())])
+
+
+def _arrow_root(root: str) -> tuple[pafs.FileSystem, str] | None:
+    """(pyarrow filesystem, path) of an index root, or None when pyarrow
+    cannot open it (``s3a://``, or ``hdfs://`` without libhdfs)."""
+    local = fsio.local_path(root)
+    if local is not None:
+        return pafs.LocalFileSystem(), local
+    try:
+        return pafs.FileSystem.from_uri(root)
+    except (pa.ArrowInvalid, OSError):
+        return None
 
 
 def _kernel(mode: str):
@@ -145,7 +175,6 @@ class BM25Index:
         corpora."""
         self.spark = spark
         self.paths = IndexPaths(index_dir)
-        from ..plans import fsio
         self.meta = fsio.read_json(spark, self.paths.meta)
         self.n_docs = int(self.meta["n_docs"])
         self.avgdl = float(self.meta["avgdl"])
@@ -207,7 +236,16 @@ class BM25Index:
                              F.lit(float(self.meta["avgdl"]))
                              / F.col("avgdl0")))
         self._blocks = blocks
-        self._tables: dict[str, DataFrame] = {}  # doc_map / doc_meta readers
+        # the driver regimes' datasets: blocks now, doc_meta / doc_map on
+        # first use. Opening lists the files once, which freezes them as
+        # Spark's file index does
+        self._arrow = _arrow_root(index_dir)
+        self._datasets: dict[str, ds.Dataset] = {}
+        if self._arrow is not None:
+            fs, root = self._arrow
+            self._datasets["blocks"] = ds.dataset(
+                posixpath.join(root, "blocks"), schema=_BLOCKS_ARROW,
+                format="parquet", filesystem=fs, partitioning="hive")
         self._domain_scores = None
         # pruned mode's per-term (df, bucket) LRU memo — a BM25Index is a
         # snapshot reader (n_docs/avgdl frozen at construction), so term
@@ -247,11 +285,14 @@ class BM25Index:
     # Σdf_q, which also bounds its distinct terms' postings) are at most
     # this many is decoded and scored on the driver (step 4), and a larger
     # batch whose per-shard candidates (Σ_q min(n_shards·k, Σdf_q)) are at
-    # most this many is merged on the driver (step 5). Measured on 4 vCPU
-    # at 5000 pages (CHANGES.md), the single-query driver path is faster at
-    # 59.6k postings (609 vs 730 ms) and slower at 89.3k (960 vs 893 ms);
-    # the cap sits in that crossover interval. It bounds driver work per
-    # call independently of corpus size
+    # most this many is merged on the driver (step 5). The driver regimes
+    # read with pyarrow: zero Spark jobs. Measured on 4 vCPU at 5000 pages
+    # (CHANGES.md), the single-query driver path is faster up to 114k
+    # postings (837 vs 1117 ms) and slower from 150k (1954 vs 1396 ms);
+    # with the Spark block fetch that crossover lay between 59.6k and
+    # 89.3k. The cap stays below it until a serve workload with head-term
+    # queries measures it. It bounds driver work per call independently
+    # of corpus size
     _DRIVER_MAX_POSTINGS = 1 << 16
 
     # term memo entries kept (least recently used evicted first)
@@ -292,6 +333,34 @@ class BM25Index:
         return self._qspark.range(1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
         ).limit(0)
+
+    def _read(self, table: str, columns: list[str],
+              where: ds.Expression) -> pd.DataFrame:
+        """The ``columns`` of the ``table`` rows matching ``where``: one
+        filtered pyarrow read, zero Spark jobs. doc_meta and doc_map are
+        opened on first use."""
+        if table not in self._datasets:
+            fs, root = self._arrow
+            self._datasets[table] = ds.dataset(
+                posixpath.join(root, table), format="parquet", filesystem=fs)
+        return self._datasets[table].to_table(columns=columns,
+                                              filter=where).to_pandas()
+
+    def _fetch_blocks(self,
+                      tmeta: list[tuple[str, int, int]]) -> pd.DataFrame:
+        """(shard, term, max_doc_id, max_tfnorm, block) of the committed
+        blocks of the looked-up terms ``tmeta``: the ``term_bucket``
+        directories of their buckets only, filtered on term and on the
+        committed generation. ``max_tfnorm`` comes rescaled by
+        max(1, avgdl/avgdl0), the same IEEE ops as the Spark scan's."""
+        where = (ds.field("term_bucket").isin(sorted({b for *_, b in tmeta}))
+                 & ds.field("term").isin([t for t, *_ in tmeta]))
+        if self._committed_max is not None:
+            where &= ds.field("max_doc_id") <= self._committed_max
+        pdf = self._read("blocks", ["shard", "term", "max_doc_id",
+                                    "max_tfnorm", "avgdl0", "block"], where)
+        pdf["max_tfnorm"] *= np.fmax(1.0, self.avgdl / pdf.pop("avgdl0"))
+        return pdf
 
     def _term_meta(self, terms: list[str]) -> list[tuple[str, int, int]]:
         """[(term, df, term_bucket)] for terms present in the index."""
@@ -334,9 +403,10 @@ class BM25Index:
         (p50 533 → 812 ms at sf0.1).
 
         Queries at most ``_DRIVER_MAX_POSTINGS`` postings long are answered
-        EAGERLY (one block-fetch job, kernel on the driver) and come back as
-        a LocalRelation frame; a query with no indexed term launches no job
-        at all. Larger queries return the lazy distributed plan."""
+        EAGERLY (zero Spark jobs: a pyarrow block read, kernel on the
+        driver) and come back as a LocalRelation frame; so does a query
+        with no indexed term. Larger queries, and every query on a root
+        pyarrow cannot open, return the lazy distributed plan."""
         top = self._topk(raw_query, k, mode)
         if isinstance(top, pd.DataFrame):
             return self._local(top)
@@ -345,19 +415,14 @@ class BM25Index:
     def _topk(self, raw_query: str, k: int,
               mode: str) -> pd.DataFrame | DataFrame:
         """The top-k rows: a driver pandas frame for small queries (and for
-        no hit), the lazy distributed frame above the postings cap."""
+        no hit), the lazy distributed frame above the postings cap or
+        without a pyarrow root."""
         kernel = _kernel(mode)
         tmeta = self._term_meta(self.query_terms(raw_query))
         if not tmeta:
             return _top_frame([])
         idfs = {t: bm25_idf(self.n_docs, df) for t, df, _ in tmeta}
-        buckets = sorted({b for _, _, b in tmeta})
         term_list = [t for t, _, _ in tmeta]
-
-        blocks = (self._blocks
-                  .filter(F.col("term_bucket").isin(buckets))
-                  .filter(F.col("term").isin(term_list)))
-
         avgdl = self.avgdl
         term_order = {t: i for i, t in enumerate(term_list)}
 
@@ -375,12 +440,16 @@ class BM25Index:
             top = kernel([(idfs[t], blks) for t, blks in tb], k, avgdl)
             return pd.DataFrame(top, columns=["doc_id", "score"])
 
-        if sum(df for _, df, _ in tmeta) > self._DRIVER_MAX_POSTINGS:
+        if (self._arrow is None
+                or sum(df for _, df, _ in tmeta) > self._DRIVER_MAX_POSTINGS):
+            blocks = (self._blocks
+                      .filter(F.col("term_bucket").isin(
+                          sorted({b for _, _, b in tmeta})))
+                      .filter(F.col("term").isin(term_list)))
             local = blocks.groupBy("shard").applyInPandas(shard_topk,
                                                           _RESULT_SCHEMA)
             return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        pdf = blocks.select("shard", "term", "max_doc_id", "max_tfnorm",
-                            "block").toPandas()
+        pdf = self._fetch_blocks(tmeta)
         rows = [r for _, g in pdf.groupby("shard")
                 for r in shard_topk(g).itertuples(index=False)]
         rows.sort(key=lambda r: (-r[1], r[0]))  # score desc, doc_id asc
@@ -404,7 +473,7 @@ class BM25Index:
 
         1. the batch's scored rows Σ_q Σdf_q are at most
            ``_DRIVER_MAX_POSTINGS``: the pruned blocks are fetched with one
-           JVM-only Arrow ``toPandas``, decoded in one vectorized pass,
+           pyarrow read (zero Spark jobs), decoded in one vectorized pass,
            weighed once per posting, and every query is scored exactly in
            one vectorized pass (``wand.batch_topk``) — both modes share
            this exact scorer, as WAND is exact too. No broadcast variable,
@@ -417,9 +486,10 @@ class BM25Index:
         3. above both: the lazy plan ranks per query with a Window over the
            shuffled candidates and sorts the result with ``orderBy``.
 
-        Regimes 1–2 run eagerly: one Spark job per batch (plus one per
-        broadcast join side of more than ``_ISIN_MAX`` terms, and in pruned
-        mode the lookup job for memo misses). In regimes 2–3 the
+        On a root pyarrow cannot open, regime 1 is skipped. Regimes 1–2 run
+        eagerly: regime 1 launches no Spark job, regime 2 one (plus one
+        per broadcast join side of more than ``_ISIN_MAX`` terms); pruned
+        mode adds the lookup job for memo misses. In regimes 2–3 the
         query→terms map and idf table ride a Spark broadcast variable, not
         closure capture, so a 10k-query batch is shipped to each executor
         once; regime 2 destroys it after its collect. Python ``str`` order
@@ -432,7 +502,6 @@ class BM25Index:
         tmeta = self._term_meta(all_terms)
         present = {t for t, _, _ in tmeta}
         idfs = {t: bm25_idf(self.n_docs, df) for t, df, _ in tmeta}
-        buckets = sorted({b for _, _, b in tmeta})
         qterms = {q: [t for t in ts if t in present]
                   for q, ts in per_query.items()}
         live = {q: ts for q, ts in qterms.items() if ts}
@@ -441,13 +510,15 @@ class BM25Index:
         if not live:
             return self._local(pd.DataFrame(columns=schema.names))
 
-        blocks = self._isin(
-            self._blocks.filter(F.col("term_bucket").isin(buckets)),
-            "term", sorted(present))
         df_of = {t: df for t, df, _ in tmeta}
         postings = [sum(df_of[t] for t in ts) for ts in live.values()]
-        if sum(postings) <= self._DRIVER_MAX_POSTINGS:
-            return self._local(self._score_batch(blocks, live, idfs, k))
+        if (self._arrow is not None
+                and sum(postings) <= self._DRIVER_MAX_POSTINGS):
+            return self._local(self._score_batch(tmeta, live, idfs, k))
+        blocks = self._isin(
+            self._blocks.filter(F.col("term_bucket").isin(
+                sorted({b for _, _, b in tmeta}))),
+            "term", sorted(present))
 
         avgdl = self.avgdl
         batch_bc = self.spark.sparkContext.broadcast(
@@ -492,13 +563,15 @@ class BM25Index:
                .groupby("query").head(k))
         return self._local(top.reset_index(drop=True))
 
-    def _score_batch(self, blocks: DataFrame, live: dict[str, list[str]],
-                     idfs: dict[str, float], k: int) -> pd.DataFrame:
-        """``search_many``'s driver regime: the batch's pruned ``blocks``
-        fetched in one job and decoded at once, each posting's impact
-        computed once (the same elementwise ops as per term, so the same
-        bits), every query of ``live`` scored by ``batch_topk``."""
-        pdf = blocks.select("term", "block").toPandas()
+    def _score_batch(self, tmeta: list[tuple[str, int, int]],
+                     live: dict[str, list[str]], idfs: dict[str, float],
+                     k: int) -> pd.DataFrame:
+        """``search_many``'s driver regime: the blocks of the batch's terms
+        ``tmeta`` fetched in one pyarrow read and decoded at once, each
+        posting's impact computed once (the same elementwise ops as per
+        term, so the same bits), every query of ``live`` scored by
+        ``batch_topk``."""
+        pdf = self._fetch_blocks(tmeta)
         terms = sorted(idfs)
         tix = {t: i for i, t in enumerate(terms)}
         docs, tfs, dls, counts = decode_blocks(pdf["block"])
@@ -519,26 +592,24 @@ class BM25Index:
     def _attach(self, top: pd.DataFrame, table: str,
                 cols: list[str]) -> pd.DataFrame:
         """Left-join ``cols`` of index table ``table`` onto the page rows
-        ``top`` by doc_id, keeping their order: ONE pushed-down
-        ``doc_id IN (...)`` read of the page's ids — k rows, never a
-        broadcast or shuffle of the whole table. An empty page reads
-        nothing."""
+        ``top`` by doc_id, keeping their order: ONE ``doc_id ∈ ids`` pyarrow
+        read of the page's ids — k rows, zero Spark jobs. On a root pyarrow
+        cannot open, the same k rows come from a pushed-down Spark
+        ``doc_id IN (...)`` read. An empty page reads nothing."""
         if top.empty:
             return top.assign(**{c: None for c in cols})
-        rows = self._by_ids(table, top["doc_id"].tolist(), cols).toPandas()
+        ids = top["doc_id"].tolist()
+        if self._arrow is not None:
+            rows = self._read(table, ["doc_id", *cols],
+                              ds.field("doc_id").isin(ids))
+        else:
+            rows = self._isin(
+                self._qspark.read.parquet(getattr(self.paths, table)),
+                "doc_id", ids).select("doc_id", *cols).toPandas()
         out = top.merge(rows, on="doc_id", how="left")
         # a hit without a row gets null, as the outer join gave it
         out[cols] = out[cols].astype(object).where(out[cols].notna(), None)
         return out
-
-    def _by_ids(self, table: str, ids: list[int],
-                cols: list[str]) -> DataFrame:
-        """The k-row read behind ``_attach``."""
-        if table not in self._tables:
-            self._tables[table] = self._qspark.read.parquet(
-                getattr(self.paths, table))
-        return self._isin(self._tables[table], "doc_id", ids) \
-            .select("doc_id", *cols)
 
     def search_with_urls(self, raw_query: str, k: int = 10,
                          mode: str = "wand") -> DataFrame:
@@ -553,9 +624,10 @@ class BM25Index:
         """Top-k + url + title + description — full J3 parity with the
         reference result page (src/modules/pagerank.py:119-126,
         document_search_client_CLI.py:57-61). ``doc_meta`` carries the url
-        too, so the whole page is one k-row read of it after the top-k; a
-        page costs two Spark jobs (plus, in pruned mode, the lookup job
-        for memo misses), a no-hit one none."""
+        too, so the whole page is one k-row pyarrow read of it after the
+        top-k; a page under ``_DRIVER_MAX_POSTINGS`` costs zero Spark jobs
+        (in pruned mode, plus the lookup job for memo misses), and so does
+        a no-hit one."""
         page = self._attach(self._page(raw_query, k, mode), "doc_meta",
                             ["url", "title", "description"])
         return self._local(

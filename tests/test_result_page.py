@@ -1,20 +1,25 @@
-"""The result-page path of BM25Index: small queries run their top-k kernel
-on the driver and return rows identical to the distributed plan's; pages
-attach metadata with one k-row ``doc_id IN (...)`` read; warm pages cost
-at most two Spark jobs and no-hit pages none; a memory-mode reader looks
-terms up on its driver lexicon with no job and caches nothing in Spark;
-pruned mode's per-term memo is a bounded LRU. Batches (``search_many``)
-take one of three regimes by the same cap — driver scoring, a driver
-merge of per-shard candidates, or the Window plan — and all three return
-the same rows."""
+"""The result-page path of BM25Index: small queries read their blocks with
+pyarrow, run their top-k kernel on the driver and return rows identical to
+the distributed plan's; pages attach metadata with one k-row ``doc_id ∈
+ids`` pyarrow read; such pages and no-hit pages launch no Spark job; a
+memory-mode reader looks terms up on its driver lexicon with no job and
+caches nothing in Spark; pruned mode's per-term memo is a bounded LRU.
+Batches (``search_many``) take one of three regimes by the same cap —
+driver scoring, a driver merge of per-shard candidates, or the Window plan
+— and all three return the same rows. A root pyarrow cannot open sends
+every query to the distributed regimes."""
 
 import contextlib
 import io
+import re
 import shutil
 
 import numpy as np
+import pyarrow.fs as pafs
 import pytest
+from pyspark.sql import functions as F
 
+from search_engine_tr_spark.operators import query_bm25
 from search_engine_tr_spark.operators.query_bm25 import BM25Index
 from search_engine_tr_spark.sources.synth import (gen_pages, pages_schema,
                                                   reference_queries)
@@ -129,14 +134,14 @@ def test_page_columns_and_nulls(spark, tiny_index):
 
 
 def test_result_page_job_budget(spark, tiny_index):
-    """A warm result page is one block fetch plus one k-row metadata
-    fetch; a page whose terms are all absent launches no job at all."""
+    """A result page under the cap — its block fetch and its k-row
+    metadata fetch are pyarrow reads — launches no Spark job, on a reader
+    that has served nothing yet; nor does a page whose terms are all
+    absent."""
     idx = BM25Index(spark, tiny_index[0])
-    for q in ("haber spor", NO_HIT):  # warm the reader
-        idx.search_with_meta(q, k=10).collect()
     rows, n = _jobs(spark, "page-hit",
                     lambda: idx.search_with_meta("haber spor").collect())
-    assert rows and n <= 2
+    assert rows and n == 0
     for name, fn in (
             ("page", lambda: idx.search_with_meta(NO_HIT).collect()),
             ("urls", lambda: idx.search_with_urls(NO_HIT).collect()),
@@ -147,43 +152,162 @@ def test_result_page_job_budget(spark, tiny_index):
 
 
 def test_page_path_reads_k_rows_not_tables(spark, tiny_index, monkeypatch):
-    """No Exchange, BroadcastExchange or SortMergeJoin over doc_map or
-    doc_meta on the page path: the page frame itself is a local relation,
-    and the metadata read is a pushed-down doc_id IN filter — on both
-    top-k paths."""
+    """No Exchange or Join on the page path: the page frame itself is a
+    local relation, and the metadata read of doc_meta (doc_map for url
+    pages) returns exactly the page's k ids — on both top-k paths."""
+    reads = _spy_reads(monkeypatch)
     for cap in (DRIVER, DISTRIBUTED):
         monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
         idx = BM25Index(spark, tiny_index[0])
-        for page in (idx.search_with_meta("haber spor", k=5),
-                     idx.search_with_urls("haber spor", k=5)):
+        for table, fn in (("doc_meta", idx.search_with_meta),
+                          ("doc_map", idx.search_with_urls)):
+            page = fn("haber spor", k=5)
             p = _plan(page)
             assert "LocalTableScan" in p
             assert "Exchange" not in p and "Join" not in p
-        ids = [r["doc_id"] for r in idx.search("haber spor", k=5).collect()]
-        for table in ("doc_map", "doc_meta"):
-            p = _plan(idx._by_ids(table, ids, ["url"]))
-            assert "Exchange" not in p and "Join" not in p
-            pushed = [ln for ln in p.splitlines() if "PushedFilters" in ln]
-            assert pushed and "In(doc_id" in pushed[0]
+            ids = [r["doc_id"] for r in page.collect()]
+            assert len(ids) == 5
+            assert reads[-1][0] == table
+            assert sorted(reads[-1][1]["doc_id"]) == sorted(ids)
 
 
-def test_driver_block_fetch_is_aqe_free_and_pruned(spark, tiny_index,
-                                                  monkeypatch):
-    """The one job of a small query reads only its terms' block partitions:
-    the frame the driver path collects prunes term_bucket directories,
-    pushes the term filter into the scan and runs without AQE."""
+class _Opened(pafs.FileSystemHandler):
+    """The local filesystem, recording every file pyarrow opens."""
+
+    def __init__(self, opened: list):
+        self.fs, self.opened = pafs.LocalFileSystem(), opened
+
+    def open_input_file(self, path):
+        self.opened.append(path)
+        return self.fs.open_input_file(path)
+
+    def open_input_stream(self, path):
+        self.opened.append(path)
+        return self.fs.open_input_stream(path)
+
+    def get_type_name(self):
+        return "opened"
+
+    def normalize_path(self, path):
+        return self.fs.normalize_path(path)
+
+    def get_file_info(self, paths):
+        return self.fs.get_file_info(paths)
+
+    def get_file_info_selector(self, selector):
+        return self.fs.get_file_info(selector)
+
+    def _read_only(self, *args):
+        raise NotImplementedError("read-only")
+
+    create_dir = delete_dir = delete_dir_contents = delete_file = move = \
+        copy_file = open_output_stream = open_append_stream = \
+        delete_root_dir_contents = _read_only
+
+
+def test_driver_block_fetch_is_job_free_and_pruned(spark, tiny_index,
+                                                   monkeypatch):
+    """A small query launches no Spark job: its one pyarrow block read
+    opens files under its terms' ``term_bucket=`` directories only, and
+    the rows it returns hold only its terms."""
+    opened: list[str] = []
+    fs = pafs.PyFileSystem(_Opened(opened))
+    monkeypatch.setattr(query_bm25, "_arrow_root", lambda root: (fs, root))
     monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", DRIVER)
     idx = BM25Index(spark, tiny_index[0])
-    idx.search("haber spor", k=5)  # fill the term memo
-    seen = _spy_to_pandas(monkeypatch, idx)
-    assert idx.search("haber spor", k=5).collect()
-    assert len(seen) == 1
-    p = seen[0][0]
-    assert "AdaptiveSparkPlan" not in p and "Exchange" not in p
-    parts = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
-    assert parts and "term_bucket" in parts[0]
-    pushed = [ln for ln in p.splitlines() if "PushedFilters" in ln]
-    assert pushed and "In(term" in pushed[0]
+    tmeta = idx._term_meta(idx.query_terms("haber spor"))
+    buckets = {b for _, _, b in tmeta}
+    assert len(tmeta) == 2 and len(buckets) < idx.term_buckets
+    reads = _spy_reads(monkeypatch)
+    opened.clear()
+    rows, n = _jobs(spark, "driver-fetch",
+                    lambda: idx.search("haber spor", k=5).collect())
+    assert rows and n == 0
+    assert [table for table, _ in reads] == ["blocks"]
+    assert set(reads[0][1]["term"]) == {t for t, _, _ in tmeta}
+    assert opened and {int(re.search(r"/term_bucket=(\d+)/", p).group(1))
+                       for p in opened} == buckets
+
+
+def test_arrow_fetch_is_bit_identical_to_spark_scan(spark, delta_index,
+                                                    tmp_path):
+    """On an index whose older blocks were packed under a smaller avgdl,
+    the pyarrow fetch returns the Spark block scan's rows, ``max_tfnorm``
+    rescale included, bit for bit. A reader opened before a later ingest
+    keeps its file list and its rows."""
+    from search_engine_tr_spark.streaming.incremental import \
+        incremental_index_update
+
+    ix = shutil.copytree(delta_index, str(tmp_path / "index"))
+    # copies of the longest pages raise avgdl above the older blocks'
+    longest = sorted(gen_pages(40, seed=53), key=lambda p: -len(p["html"]))
+    copies = [dict(p, url=f"{p['url']}-uzun{j}")
+              for p in longest[:3] for j in range(3)]
+    incremental_index_update(spark, _pages(spark, copies[:6]), ix,
+                             refresh_derived=True)
+    idx = BM25Index(spark, ix)
+    assert spark.read.parquet(ix + "/blocks").select("avgdl0") \
+        .distinct().count() > 1
+    tmeta = idx._term_meta(sorted(idx._lexicon))[::7]
+    cols = ["shard", "term", "max_doc_id", "max_tfnorm", "block"]
+    key = ["shard", "term", "max_doc_id"]
+
+    def arrow_rows(reader):
+        pdf = reader._fetch_blocks(tmeta)
+        return pdf.sort_values(key).reset_index(drop=True)
+
+    got = arrow_rows(idx)
+    want = (idx._blocks
+            .filter(F.col("term_bucket").isin(sorted({b for *_, b in tmeta})))
+            .filter(F.col("term").isin([t for t, *_ in tmeta]))
+            .select(*cols).toPandas().sort_values(key)
+            .reset_index(drop=True))
+    assert len(got) == len(want) > 0
+    for c in ("shard", "term", "max_doc_id"):
+        assert got[c].tolist() == want[c].tolist(), c
+    assert (got["max_tfnorm"].to_numpy() == want["max_tfnorm"].to_numpy()).all()
+    assert [bytes(b) for b in got["block"]] == \
+        [bytes(b) for b in want["block"]]
+    stored = spark.read.parquet(ix + "/blocks").select(*key, "max_tfnorm")
+    rescaled = want.merge(stored.toPandas(), on=key, suffixes=("", "_0"))
+    assert (rescaled["max_tfnorm"] > rescaled["max_tfnorm_0"]).any()
+
+    files = idx._datasets["blocks"].files
+    incremental_index_update(spark, _pages(spark, copies[6:]), ix,
+                             refresh_derived=True)
+    assert idx._datasets["blocks"].files == files
+    assert len(BM25Index(spark, ix)._datasets["blocks"].files) > len(files)
+    assert arrow_rows(idx).equals(got)
+
+
+def test_root_pyarrow_cannot_open_goes_distributed(spark, delta_index,
+                                                   monkeypatch):
+    """Driver-local roots resolve to the local filesystem, ``s3a://`` to
+    none. A reader whose root pyarrow cannot open answers every query,
+    page and batch as a normal reader does, with zero pyarrow reads."""
+    assert query_bm25._arrow_root("s3a://bucket/index") is None
+    for root in ("file:/x/index", "file:///x/index",
+                 "file://localhost/x/index"):
+        fs, path = query_bm25._arrow_root(root)
+        assert isinstance(fs, pafs.LocalFileSystem) and path == "/x/index"
+    normal = BM25Index(spark, delta_index)
+    monkeypatch.setattr(query_bm25, "_arrow_root", lambda root: None)
+    remote = BM25Index(spark, delta_index)
+    reads = _spy_reads(monkeypatch)
+    for q in QUERIES + [NO_HIT]:
+        for fn in (lambda i: i.search(q, k=10, mode="wand"),
+                   lambda i: i.search(q, k=10, mode="exhaustive"),
+                   lambda i: i.search_with_meta(q, k=7),
+                   lambda i: i.search_with_urls(q, k=7)):
+            assert fn(remote).collect() == fn(normal).collect()
+    for k in (1, 10):
+        assert remote.search_many(BATCH, k=k).collect() == \
+            normal.search_many(BATCH, k=k).collect()
+    assert reads and not remote._datasets  # the normal reader read
+    reads.clear()
+    remote.search_with_meta("haber spor").collect()
+    remote.search_many(BATCH).collect()
+    assert reads == []
 
 
 def test_term_memo_is_a_bounded_lru(spark, tiny_index, monkeypatch):
@@ -218,10 +342,9 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     """A memory-mode reader answers term lookups from its driver lexicon:
     never-seen terms — an absent one and, on the delta index, terms with a
     base and a delta row — cost no Spark job and resolve exactly as pruned
-    mode's lookup job resolves them. A page of never-seen terms costs at
-    most two jobs (block fetch, metadata fetch); a batch of them under the
-    cap one block fetch, plus the broadcast side of a block filter over
-    more than ``_ISIN_MAX`` terms."""
+    mode's lookup job resolves them. A page of never-seen terms on a
+    reader that has served nothing yet costs no job, and neither does a
+    batch of them under the cap."""
     ix = tiny_index[0] if which == "tiny" else delta_index
     idx = BM25Index(spark, ix)
     pruned = BM25Index(spark, ix, tstats_mode="pruned")
@@ -239,18 +362,16 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     assert got == pruned._term_meta(terms)
 
     fresh = BM25Index(spark, ix)
-    fresh.search_with_meta(vocab[0]).collect()  # open the doc_meta reader
-    unseen = [t for t in dict.fromkeys(multi + vocab) if t != vocab[0]]
+    unseen = list(dict.fromkeys(multi + vocab))
     page = " ".join(unseen[:2])
     rows, n = _jobs(spark, "lexicon-page-" + which,
                     lambda: fresh.search_with_meta(page).collect())
-    assert rows and n <= 2
+    assert rows and n == 0
     qs = [" ".join(unseen[i:i + 2]) for i in range(2, len(unseen), 2)]
-    batch_terms = {t for q in qs for t in fresh.query_terms(q)}
     assert _bounds(fresh, qs, 10)[1] <= BM25Index._DRIVER_MAX_POSTINGS
     rows, n = _jobs(spark, "lexicon-batch-" + which,
                     lambda: fresh.search_many(qs, k=10).collect())
-    assert rows and n <= 1 + (len(batch_terms) > BM25Index._ISIN_MAX)
+    assert rows and n == 0
 
 
 def test_memory_reader_persists_nothing(spark, delta_index, tmp_path):
@@ -305,14 +426,31 @@ def _spy_to_pandas(monkeypatch, idx) -> list:
     return seen
 
 
-def _regime(seen) -> str:
-    """Which regime a ``search_many`` call took, from its collects: none
-    (the lazy Window plan), the per-shard applyInPandas merge, or the block
-    fetch of driver scoring."""
-    if not seen:
+def _spy_reads(monkeypatch) -> list:
+    """Record (table, rows) of every reader's pyarrow read from now on."""
+    read = BM25Index._read
+    seen = []
+
+    def spy(self, table, columns, where):
+        out = read(self, table, columns, where)
+        seen.append((table, out))
+        return out
+
+    monkeypatch.setattr(BM25Index, "_read", spy)
+    return seen
+
+
+def _regime(reads, collects) -> str:
+    """Which regime a ``search_many`` call took: the one pyarrow block read
+    of driver scoring, the collect of the per-shard applyInPandas merge, or
+    neither (the lazy Window plan)."""
+    if reads:
+        assert [t for t, _ in reads] == ["blocks"] and not collects
+        return "driver"
+    if not collects:
         return "window"
-    assert len(seen) == 1
-    return "merge" if "FlatMapGroupsInPandas" in seen[0][0] else "driver"
+    assert len(collects) == 1 and "FlatMapGroupsInPandas" in collects[0][0]
+    return "merge"
 
 
 @pytest.mark.parametrize("which", ["tiny", "delta"])
@@ -328,6 +466,7 @@ def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
     idx = BM25Index(spark, ix)
     idx.search_many(BATCH, k=1).collect()  # fill the term memo
     seen = _spy_to_pandas(monkeypatch, idx)
+    reads = _spy_reads(monkeypatch)
     got = {}
     for mode in ("wand", "exhaustive"):
         for k in (3, 10):
@@ -335,8 +474,9 @@ def test_batch_driver_merge_matches_window_plan(spark, tiny_index,
             for regime, cap in _regime_caps(idx, BATCH, k).items():
                 monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
                 seen.clear()
+                reads.clear()
                 df = idx.search_many(BATCH, k=k, mode=mode)
-                assert _regime(seen) == regime
+                assert _regime(reads, seen) == regime
                 per[regime] = [tuple(r) for r in df.collect()]
             assert per["driver"] == per["merge"] == per["window"], (mode, k)
             got[(mode, k)] = per["driver"]
@@ -382,15 +522,14 @@ def test_batch_merge_plan_shapes(spark, tiny_index, monkeypatch):
 
 
 def test_batch_merge_rows_stay_under_the_cap(spark, tiny_index, monkeypatch):
-    """The driver never collects, nor scores, more rows than the cap:
-    small caps send the batch to the Window plan, larger ones to the
+    """The driver never collects, reads, nor scores more rows than the
+    cap: small caps send the batch to the Window plan, larger ones to the
     applyInPandas merge or to driver scoring, and the answer is the same
     either way."""
-    from search_engine_tr_spark.operators import query_bm25
-
     idx = BM25Index(spark, tiny_index[0])
     qs = [q for q in BATCH if q != NO_HIT]
     seen = _spy_to_pandas(monkeypatch, idx)
+    reads = _spy_reads(monkeypatch)
     batch_topk = query_bm25.batch_topk
     scored = []
 
@@ -405,10 +544,12 @@ def test_batch_merge_rows_stay_under_the_cap(spark, tiny_index, monkeypatch):
     for cap in caps:
         monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", cap)
         seen.clear()
+        reads.clear()
         scored.clear()
         rows = idx.search_many(qs, k=10)
-        regimes.append(_regime(seen))
+        regimes.append(_regime(reads, seen))
         assert all(n <= cap for _, n in seen), (cap, seen)
+        assert all(len(pdf) <= cap for _, pdf in reads), cap
         assert all(0 < n <= cap for n in scored), (cap, scored)
         assert bool(scored) == (regimes[-1] == "driver")
         answers.add(tuple(map(tuple, rows.collect())))
@@ -419,11 +560,10 @@ def test_batch_merge_rows_stay_under_the_cap(spark, tiny_index, monkeypatch):
 
 def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
                                                 monkeypatch):
-    """A memo-hit batch over more than ``_ISIN_MAX`` terms scored on the
-    driver runs at most two Spark jobs (the broadcast build of its block
-    filter and the block fetch), makes no broadcast variable, and fetches
-    with a JVM-only plan: no Python-worker stage, no shuffle. A batch on
-    the applyInPandas regime destroys its query broadcast once the call
+    """A batch over more than ``_ISIN_MAX`` terms scored on the driver
+    launches no Spark job and makes no broadcast variable: its one pyarrow
+    block read returns the rows of its terms only. A batch on the
+    applyInPandas regime destroys its query broadcast once the call
     returns — also when the call raises."""
     out, _ = tiny_index
     idx = BM25Index(spark, out)
@@ -444,20 +584,18 @@ def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
 
     monkeypatch.setattr(sc, "broadcast", spy)
     seen = _spy_to_pandas(monkeypatch, idx)
+    reads = _spy_reads(monkeypatch)
     rows, n = _jobs(spark, "batch-hit",
                     lambda: idx.search_many(qs, k=10).collect())
-    assert rows and n <= 2 and made == []
-    assert _regime(seen) == "driver"
-    p = seen[0][0]
-    assert "FlatMapGroupsInPandas" not in p and "ArrowEvalPython" not in p
-    assert "BroadcastExchange" in p
-    assert not [ln for ln in p.splitlines()
-                if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert rows and n == 0 and made == []
+    assert _regime(reads, seen) == "driver"
+    assert set(reads[0][1]["term"]) == set(terms)
     monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS",
                         _regime_caps(idx, qs, 1)["merge"])
     seen.clear()
+    reads.clear()
     assert idx.search_many(qs, k=1).collect()
-    assert _regime(seen) == "merge"
+    assert _regime(reads, seen) == "merge"
     assert len(made) == 1 and not made[0]._jbroadcast.isValid()
     # a failing collect still releases the broadcast
     monkeypatch.setattr(type(idx._blocks), "toPandas",
