@@ -38,6 +38,10 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
    Result pages then fetch the k hits' url/title/description with ONE
    ``doc_id ∈ ids`` pyarrow read (J3 pattern): k rows, zero Spark jobs,
    never a broadcast or shuffle of the whole table.
+6. every answer computed on the driver is returned as driver rows:
+   ``collect()`` reads them directly, other uses build the LocalRelation
+   once (``_DriverFrame``) — no ``createDataFrame`` and no
+   ``collectToPython`` round trip on the path that only collects.
 
 The driver reads go through ``pyarrow.dataset``s opened once per reader.
 An index root pyarrow cannot open (``_arrow_root``) sends every query and
@@ -50,9 +54,12 @@ import posixpath
 from collections import OrderedDict
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+# the row constructor Spark's collect unpickles its rows with
+from pyspark.sql.types import _create_row
 
 import numpy as np
 import pyarrow as pa
@@ -108,6 +115,53 @@ def _kernel(mode: str):
     if mode == "exhaustive":
         return exhaustive_topk
     raise ValueError(f"unknown mode {mode!r}")
+
+
+class _DriverFrame(ClassicDataFrame):
+    """A reader-session frame over driver rows ``pdf``. ``collect`` reads
+    them directly: no Spark call, no job. Every other use goes through
+    ``_jdf``, which builds the LocalRelation on first access and keeps it.
+    Arrow turns a NON-empty pandas frame into a LocalRelation; an empty one
+    (like a list of rows) would become a Python-RDD scan and cost a job, so
+    an empty result is a one-row range under ``limit(0)``, which the
+    optimizer folds to an empty LocalTableScan.
+
+    Subclasses PySpark's classic (JVM-backed) frame: ``pyspark.sql.DataFrame``
+    is a facade whose ``__new__`` returns the classic class, so it cannot be
+    subclassed itself."""
+
+    def __new__(cls, pdf: pd.DataFrame, session: SparkSession):
+        return object.__new__(cls)
+
+    def __init__(self, pdf: pd.DataFrame, session: SparkSession):
+        self._pdf = pdf
+        super().__init__(None, session)  # the relation is built on demand
+
+    @property
+    def _jdf(self):
+        if self._relation is None:
+            pdf = self._pdf
+            schema = T.StructType([T.StructField(c, _COL_TYPES[c])
+                                   for c in pdf.columns])
+            if len(pdf):
+                df = self._session.createDataFrame(pdf, schema)
+            else:
+                df = self._session.range(1).select(
+                    *[F.lit(None).cast(f.dataType).alias(f.name)
+                      for f in schema]).limit(0)
+            self._relation = df._jdf
+        return self._relation
+
+    @_jdf.setter
+    def _jdf(self, jdf):
+        self._relation = jdf
+
+    def collect(self) -> list[Row]:
+        """The driver rows as Spark's collect gives them: ``tolist`` turns
+        each column into Python int, float, str and None values."""
+        names = list(self._pdf.columns)
+        cols = [s.tolist() for _, s in self._pdf.items()]
+        return [_create_row(names, values) for values in zip(*cols)]
 
 
 def _top_frame(rows: list) -> pd.DataFrame:
@@ -320,19 +374,10 @@ class BM25Index:
         return df.join(F.broadcast(vdf), col)
 
     def _local(self, pdf: pd.DataFrame) -> DataFrame:
-        """Driver rows → a reader-session frame whose collect launches no
-        Spark job. Arrow turns a NON-empty pandas frame into a
-        LocalRelation; an empty one (like a list of rows) would become a
-        Python-RDD scan and cost a job, so an empty result is a one-row
-        range under ``limit(0)``, which the optimizer folds to an empty
-        LocalTableScan."""
-        schema = T.StructType([T.StructField(c, _COL_TYPES[c])
-                               for c in pdf.columns])
-        if len(pdf):
-            return self._qspark.createDataFrame(pdf, schema)
-        return self._qspark.range(1).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
-        ).limit(0)
+        """Driver rows → a reader-session frame of them (``_DriverFrame``):
+        ``collect()`` reads them directly, other uses build the
+        LocalRelation once. Neither launches a Spark job."""
+        return _DriverFrame(pdf, self._qspark)
 
     def _read(self, table: str, columns: list[str],
               where: ds.Expression) -> pd.DataFrame:
@@ -404,7 +449,8 @@ class BM25Index:
 
         Queries at most ``_DRIVER_MAX_POSTINGS`` postings long are answered
         EAGERLY (zero Spark jobs: a pyarrow block read, kernel on the
-        driver) and come back as a LocalRelation frame; so does a query
+        driver) and come back as driver rows: ``collect()`` reads them
+        directly, other uses build the LocalRelation once; so does a query
         with no indexed term. Larger queries, and every query on a root
         pyarrow cannot open, return the lazy distributed plan."""
         top = self._topk(raw_query, k, mode)
@@ -477,12 +523,13 @@ class BM25Index:
            weighed once per posting, and every query is scored exactly in
            one vectorized pass (``wand.batch_topk``) — both modes share
            this exact scorer, as WAND is exact too. No broadcast variable,
-           no Python worker; the result is a LocalRelation frame.
+           no Python worker; the result is driver rows: ``collect()`` reads
+           them directly, other uses build the LocalRelation once.
         2. above that, while the per-shard candidates Σ_q min(n_shards·k,
            Σdf_q) fit under the same bound: one applyInPandas pass per shard
            runs every query's kernel against the blocks it holds, its
            output is collected with Arrow, merged by a pandas sort and
-           returned as a LocalRelation frame.
+           returned as driver rows, as in regime 1.
         3. above both: the lazy plan ranks per query with a Window over the
            shuffled candidates and sorts the result with ``orderBy``.
 
@@ -614,8 +661,8 @@ class BM25Index:
     def search_with_urls(self, raw_query: str, k: int = 10,
                          mode: str = "wand") -> DataFrame:
         """Top-k + url → (doc_id, score, url), (score desc, doc_id asc),
-        as a LocalRelation frame: the url is fetched for the k hits
-        only."""
+        as driver rows: ``collect()`` reads them directly, other uses build
+        the LocalRelation once. The url is fetched for the k hits only."""
         return self._local(self._attach(self._page(raw_query, k, mode),
                                         "doc_map", ["url"]))
 
@@ -627,7 +674,8 @@ class BM25Index:
         too, so the whole page is one k-row pyarrow read of it after the
         top-k; a page under ``_DRIVER_MAX_POSTINGS`` costs zero Spark jobs
         (in pruned mode, plus the lookup job for memo misses), and so does
-        a no-hit one."""
+        a no-hit one. The page comes back as driver rows: ``collect()``
+        reads them directly, other uses build the LocalRelation once."""
         page = self._attach(self._page(raw_query, k, mode), "doc_meta",
                             ["url", "title", "description"])
         return self._local(

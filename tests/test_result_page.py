@@ -7,7 +7,9 @@ caches nothing in Spark; pruned mode's per-term memo is a bounded LRU.
 Batches (``search_many``) take one of three regimes by the same cap —
 driver scoring, a driver merge of per-shard candidates, or the Window plan
 — and all three return the same rows. A root pyarrow cannot open sends
-every query to the distributed regimes."""
+every query to the distributed regimes. Frames built from driver rows
+answer ``collect()`` from those rows, Row- and type-identical to the
+LocalRelation that any other use builds once."""
 
 import contextlib
 import io
@@ -17,7 +19,9 @@ import shutil
 import numpy as np
 import pyarrow.fs as pafs
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from search_engine_tr_spark.operators import query_bm25
 from search_engine_tr_spark.operators.query_bm25 import BM25Index
@@ -45,6 +49,15 @@ def _jobs(spark, group: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collect_built(df):
+    """``df.collect()``, checked equal to the collect of the relation its
+    Spark plan gives (a driver frame's lazily built LocalRelation), so a
+    job count over it covers both."""
+    rows = df.collect()
+    assert ClassicDataFrame.collect(df) == rows
+    return rows
 
 
 def _pages(spark, rows):
@@ -140,13 +153,14 @@ def test_result_page_job_budget(spark, tiny_index):
     absent."""
     idx = BM25Index(spark, tiny_index[0])
     rows, n = _jobs(spark, "page-hit",
-                    lambda: idx.search_with_meta("haber spor").collect())
+                    lambda: _collect_built(idx.search_with_meta("haber spor")))
     assert rows and n == 0
     for name, fn in (
-            ("page", lambda: idx.search_with_meta(NO_HIT).collect()),
-            ("urls", lambda: idx.search_with_urls(NO_HIT).collect()),
-            ("search", lambda: idx.search(NO_HIT).collect()),
-            ("many", lambda: idx.search_many([NO_HIT, "!!!"]).collect())):
+            ("page", lambda: _collect_built(idx.search_with_meta(NO_HIT))),
+            ("urls", lambda: _collect_built(idx.search_with_urls(NO_HIT))),
+            ("search", lambda: _collect_built(idx.search(NO_HIT))),
+            ("many",
+             lambda: _collect_built(idx.search_many([NO_HIT, "!!!"])))):
         rows, n = _jobs(spark, "no-hit-" + name, fn)
         assert rows == [] and n == 0, name
 
@@ -221,7 +235,7 @@ def test_driver_block_fetch_is_job_free_and_pruned(spark, tiny_index,
     reads = _spy_reads(monkeypatch)
     opened.clear()
     rows, n = _jobs(spark, "driver-fetch",
-                    lambda: idx.search("haber spor", k=5).collect())
+                    lambda: _collect_built(idx.search("haber spor", k=5)))
     assert rows and n == 0
     assert [table for table, _ in reads] == ["blocks"]
     assert set(reads[0][1]["term"]) == {t for t, _, _ in tmeta}
@@ -365,12 +379,12 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     unseen = list(dict.fromkeys(multi + vocab))
     page = " ".join(unseen[:2])
     rows, n = _jobs(spark, "lexicon-page-" + which,
-                    lambda: fresh.search_with_meta(page).collect())
+                    lambda: _collect_built(fresh.search_with_meta(page)))
     assert rows and n == 0
     qs = [" ".join(unseen[i:i + 2]) for i in range(2, len(unseen), 2)]
     assert _bounds(fresh, qs, 10)[1] <= BM25Index._DRIVER_MAX_POSTINGS
     rows, n = _jobs(spark, "lexicon-batch-" + which,
-                    lambda: fresh.search_many(qs, k=10).collect())
+                    lambda: _collect_built(fresh.search_many(qs, k=10)))
     assert rows and n == 0
 
 
@@ -586,7 +600,7 @@ def test_batch_job_budget_and_broadcast_release(spark, tiny_index,
     seen = _spy_to_pandas(monkeypatch, idx)
     reads = _spy_reads(monkeypatch)
     rows, n = _jobs(spark, "batch-hit",
-                    lambda: idx.search_many(qs, k=10).collect())
+                    lambda: _collect_built(idx.search_many(qs, k=10)))
     assert rows and n == 0 and made == []
     assert _regime(reads, seen) == "driver"
     assert set(reads[0][1]["term"]) == set(terms)
@@ -619,3 +633,105 @@ def test_unknown_mode_is_rejected(spark, tiny_index):
             _jobs(spark, "bad-mode-" + name, fn)
         assert not spark.sparkContext.statusTracker().getJobIdsForGroup(
             "bad-mode-" + name), name
+
+
+def _spy_builds(monkeypatch) -> tuple[list, list]:
+    """Record every ``SparkSession.createDataFrame`` call and every classic
+    ``DataFrame.collect`` (a ``collectToPython`` round trip) from now on."""
+    made, collects = [], []
+    create, collect = SparkSession.createDataFrame, ClassicDataFrame.collect
+
+    def spy_create(self, *args, **kwargs):
+        made.append(args)
+        return create(self, *args, **kwargs)
+
+    def spy_collect(df):
+        collects.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy_create)
+    monkeypatch.setattr(ClassicDataFrame, "collect", spy_collect)
+    return made, collects
+
+
+def _types(rows) -> list:
+    return [(r.__fields__, [type(v) for v in r]) for r in rows]
+
+
+@pytest.mark.parametrize("which", ["tiny", "delta"])
+def test_driver_frame_collects_its_rows(spark, tiny_index, delta_index,
+                                        monkeypatch, which):
+    """A frame built from driver rows — pages and no-hit pages on both
+    top-k paths, batches of both driver regimes, an all-no-hit batch, a
+    page whose doc has no metadata row — answers ``collect()`` with no
+    ``createDataFrame``, no classic collect and no job. Its rows equal,
+    Row for Row, field for field and type for type, those of the
+    LocalRelation its first other use builds; composing it builds that
+    relation once and keeps the rows."""
+    ix = tiny_index[0] if which == "tiny" else delta_index
+    idx = BM25Index(spark, ix)
+    idx.search_many(BATCH, k=1).collect()  # fill the term memo
+    # (regime, page cap, batch cap): the driver regime everywhere, then the
+    # distributed top-k under pages and the driver merge under batches
+    regimes = (("driver", DRIVER, DRIVER),
+               ("merge", DISTRIBUTED, _regime_caps(idx, BATCH, 10)["merge"]))
+    pages = {"search": idx.search,
+             "urls": lambda q: idx.search_with_urls(q, k=7),
+             "meta": lambda q: idx.search_with_meta(q, k=7)}
+    cases = [(name, q, fn) for name, fn in pages.items()
+             for q in ("haber spor", "istanbul", NO_HIT)]
+    cases += [("many", BATCH, idx.search_many),
+              ("many", [NO_HIT, "!!!"], idx.search_many),
+              ("meta-missing", "haber spor",
+               lambda q: idx.search_with_meta(q, k=5))]
+    read, drop = BM25Index._read, [False]
+
+    def drop_a_meta_row(self, table, columns, where):
+        out = read(self, table, columns, where)
+        return out.iloc[1:] if drop[0] and table == "doc_meta" else out
+
+    monkeypatch.setattr(BM25Index, "_read", drop_a_meta_row)
+    reads = _spy_reads(monkeypatch)
+    made, collects = _spy_builds(monkeypatch)
+    regime_of, hits = {}, 0
+    for regime, page_cap, batch_cap in regimes:
+        for i, (name, q, fn) in enumerate(cases):
+            monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS",
+                                batch_cap if name == "many" else page_cap)
+            drop[0] = name == "meta-missing"
+            reads.clear()
+            frame = fn(q)
+            if not isinstance(frame, query_bm25._DriverFrame):
+                # a hit above the cap stays the lazy distributed plan
+                assert (name, regime) == ("search", "merge") and q != NO_HIT
+                continue
+            if name == "many" and q == BATCH:
+                regime_of[regime] = "driver" if reads else "merge"
+            made.clear()
+            collects.clear()
+            rows, n = _jobs(spark, f"driver-frame-{which}-{regime}-{i}",
+                            frame.collect)
+            assert (n, made, collects) == (0, [], []), name
+            assert frame._relation is None
+            want = ClassicDataFrame.collect(frame)
+            assert len(made) == (1 if rows else 0), name
+            assert rows == want and _types(rows) == _types(want), name
+            assert frame.collect() == rows
+            if name == "meta-missing":
+                bare = [r for r in rows if r["url"] is None]
+                assert len(bare) == 1 and len(rows) == 5
+                assert bare[0]["title"] is bare[0]["description"] is None
+            hits += bool(rows)
+
+            again = fn(q)  # composed from scratch: built once, same rows
+            made.clear()
+            assert again.count() == len(rows)
+            relation = again._relation
+            renamed = again.withColumnRenamed("score", "s").collect()
+            assert [tuple(r) for r in renamed] == [tuple(r) for r in rows]
+            assert "LocalTableScan" in _plan(again)
+            assert again._relation is relation
+            assert len(made) == (1 if rows else 0), name
+            assert again.collect() == rows
+    assert regime_of == {"driver": "driver", "merge": "merge"}
+    assert hits >= 10
