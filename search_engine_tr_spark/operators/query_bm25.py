@@ -11,33 +11,34 @@ Query lifecycle (Spark mapping of SURVEY.md §3.1):
 3. read ONLY the matching ``term_bucket=`` partitions of the blocks table
    (directory-level partition pruning — the scalable replacement for the
    reference's 27-table routing) with a pushed-down term filter
-4. per doc-shard: block-max WAND (or exhaustive) local top-k. A query
-   whose postings (Σdf, known from step 2) fit under
-   ``BM25Index._DRIVER_MAX_POSTINGS`` fetches its pruned blocks with one
-   filtered ``pyarrow.dataset`` read — zero Spark jobs — and runs the same
-   per-shard kernel on the driver: no Spark planning, no job and no
-   Python-worker stage in front of a few ms of kernel work. Larger queries
-   run it inside one Arrow-batched applyInPandas group per shard — each
-   head term's postings are split across all shards, so no task sees more
-   than df/n_shards postings. ``search_many`` scores a batch whose scored
-   rows (Σ over its queries of Σdf) fit under the same bound on the driver
-   too: one pyarrow read of the batch's blocks (zero Spark jobs), one
-   vectorized decode of them all, one impact per posting and one
-   vectorized exact scoring pass for every query (``wand.batch_topk``) —
-   each block is decoded once per batch, not once per query that uses it.
-   Larger batches run every query's kernel in one applyInPandas pass per
-   shard
-5. global (score desc, doc_id asc) top-k: a pandas sort of shards × k rows
-   on the driver path, ``orderBy(...).limit(k)`` → TakeOrderedAndProject
-   (no full sort) on the distributed one. ``batch_topk`` ranks every query
-   of a driver-scored batch itself; a per-shard batch is merged per query:
+4. score. Work whose postings fit under
+   ``BM25Index._DRIVER_MAX_POSTINGS`` — a query's Σdf, known from step 2,
+   or a ``search_many`` batch's scored rows, Σ over its queries of Σdf —
+   is scored on the driver: one filtered ``pyarrow.dataset`` read of the
+   pruned blocks (zero Spark jobs), one vectorized decode of them all
+   (``codec.decode_blocks``), one impact per posting and one vectorized
+   exact scoring pass for every query (``wand.batch_topk``); a single query
+   is a batch of one. Each block is decoded once per batch, not once per
+   query that uses it. ``mode="exhaustive"`` single queries keep the
+   independent oracle instead, one ``wand.exhaustive_topk`` over the same
+   blocks, so that wand == exhaustive still compares two scorers. Larger
+   queries run the per-shard block-max WAND (or exhaustive) kernel inside
+   one Arrow-batched applyInPandas group per shard — each head term's
+   postings are split across all shards, so no task sees more than
+   df/n_shards postings — and larger batches run every query's kernel in
+   one applyInPandas pass per shard
+5. global (score desc, doc_id asc) top-k: the driver scorers rank it
+   themselves; ``orderBy(...).limit(k)`` → TakeOrderedAndProject (no full
+   sort) merges a query's per-shard top-k on the distributed path, and a
+   per-shard batch is merged per query:
    the union of every shard's exact top-k holds the global top-k, so when
    that union is bounded by ``_DRIVER_MAX_POSTINGS`` rows it is collected
    and merged by a pandas sort on the driver; above the bound a per-query
    Window top-k and an ``orderBy`` do it in Spark.
    Result pages then fetch the k hits' url/title/description with ONE
    ``doc_id ∈ ids`` pyarrow read (J3 pattern): k rows, zero Spark jobs,
-   never a broadcast or shuffle of the whole table.
+   never a broadcast or shuffle of the whole table, attached to the page
+   by an index lookup of each hit's row.
 6. every answer computed on the driver is returned as driver rows:
    ``collect()`` reads them directly, other uses build the LocalRelation
    once (``_DriverFrame``) — no ``createDataFrame`` and no
@@ -162,6 +163,21 @@ class _DriverFrame(ClassicDataFrame):
         names = list(self._pdf.columns)
         cols = [s.tolist() for _, s in self._pdf.items()]
         return [_create_row(names, values) for values in zip(*cols)]
+
+
+def _blocks_by_term(pdf: pd.DataFrame) -> dict[str, list]:
+    """Block rows → term → its blocks [(max_doc_id, max_tfnorm, block)] in
+    doc order, the kernels' input. max_doc_id, not block_no, is the
+    doc-order key once delta blocks exist: a delta append restarts
+    block_no at 0 but its doc range lies strictly above every base
+    block's."""
+    pdf = pdf.sort_values(["term", "max_doc_id"], kind="mergesort")
+    per_term: dict[str, list] = {}
+    for term, max_doc, max_tfn, buf in zip(
+            pdf["term"], pdf["max_doc_id"], pdf["max_tfnorm"], pdf["block"]):
+        per_term.setdefault(term, []).append(
+            (int(max_doc), float(max_tfn), bytes(buf)))
+    return per_term
 
 
 def _top_frame(rows: list) -> pd.DataFrame:
@@ -334,19 +350,20 @@ class BM25Index:
     _ISIN_MAX = 256
 
     # rows the driver handles per call: a single query whose postings (Σdf
-    # over its terms) are at most this many runs its top-k kernel on the
-    # driver (module docstring, step 4), a batch whose scored rows (Σ_q
-    # Σdf_q, which also bounds its distinct terms' postings) are at most
-    # this many is decoded and scored on the driver (step 4), and a larger
-    # batch whose per-shard candidates (Σ_q min(n_shards·k, Σdf_q)) are at
-    # most this many is merged on the driver (step 5). The driver regimes
-    # read with pyarrow: zero Spark jobs. Measured on 4 vCPU at 5000 pages
-    # (CHANGES.md), the single-query driver path is faster up to 114k
-    # postings (837 vs 1117 ms) and slower from 150k (1954 vs 1396 ms);
-    # with the Spark block fetch that crossover lay between 59.6k and
-    # 89.3k. The cap stays below it until a serve workload with head-term
-    # queries measures it. It bounds driver work per call independently
-    # of corpus size
+    # over its terms) are at most this many, and a batch whose scored rows
+    # (Σ_q Σdf_q, which also bounds its distinct terms' postings) are at
+    # most this many, are decoded and scored on the driver by ``batch_topk``
+    # (module docstring, step 4; a single query is a batch of one), and a
+    # larger batch whose per-shard candidates (Σ_q min(n_shards·k, Σdf_q))
+    # are at most this many is merged on the driver (step 5). The driver
+    # regimes read with pyarrow: zero Spark jobs. Measured on 4 vCPU at
+    # 5000 pages (CHANGES.md), the single-query driver path with the batch
+    # scorer is faster at every size up to 247k postings (179 vs 12492 ms),
+    # 69% of that corpus's postings, so the crossover lies beyond what that
+    # corpus can measure; with the per-shard driver cursor it lay between
+    # 114k and 150k postings. The cap stays until a serve workload with
+    # head-term queries measures it. It bounds driver work per call
+    # independently of corpus size
     _DRIVER_MAX_POSTINGS = 1 << 16
 
     # term memo entries kept (least recently used evicted first)
@@ -448,11 +465,12 @@ class BM25Index:
         (p50 533 → 812 ms at sf0.1).
 
         Queries at most ``_DRIVER_MAX_POSTINGS`` postings long are answered
-        EAGERLY (zero Spark jobs: a pyarrow block read, kernel on the
-        driver) and come back as driver rows: ``collect()`` reads them
-        directly, other uses build the LocalRelation once; so does a query
-        with no indexed term. Larger queries, and every query on a root
-        pyarrow cannot open, return the lazy distributed plan."""
+        EAGERLY (zero Spark jobs: a pyarrow block read, then ``batch_topk``
+        on the driver as a batch of one, or ``exhaustive_topk`` for
+        ``mode="exhaustive"``) and come back as driver rows: ``collect()``
+        reads them directly, other uses build the LocalRelation once; so
+        does a query with no indexed term. Larger queries, and every query
+        on a root pyarrow cannot open, return the lazy distributed plan."""
         top = self._topk(raw_query, k, mode)
         if isinstance(top, pd.DataFrame):
             return self._local(top)
@@ -462,7 +480,10 @@ class BM25Index:
               mode: str) -> pd.DataFrame | DataFrame:
         """The top-k rows: a driver pandas frame for small queries (and for
         no hit), the lazy distributed frame above the postings cap or
-        without a pyarrow root."""
+        without a pyarrow root. On the driver, "wand" is a batch of one
+        through ``_score_batch`` and "exhaustive" one ``exhaustive_topk``
+        call over the same blocks; the per-shard ``shard_topk`` kernel runs
+        only inside the distributed plan."""
         kernel = _kernel(mode)
         tmeta = self._term_meta(self.query_terms(raw_query))
         if not tmeta:
@@ -470,36 +491,32 @@ class BM25Index:
         idfs = {t: bm25_idf(self.n_docs, df) for t, df, _ in tmeta}
         term_list = [t for t, _, _ in tmeta]
         avgdl = self.avgdl
-        term_order = {t: i for i, t in enumerate(term_list)}
+        postings = sum(df for _, df, _ in tmeta)
+        if self._arrow is not None and postings <= self._DRIVER_MAX_POSTINGS:
+            if mode == "wand":
+                return self._score_batch(tmeta, {raw_query: term_list}, idfs,
+                                         k)[["doc_id", "score"]]
+            # the oracle over every fetched block at once, its terms in
+            # query-term order: a doc has at most one posting per term, so
+            # its impacts are summed in query-term order across shards too
+            per_term = _blocks_by_term(self._fetch_blocks(tmeta))
+            return _top_frame(exhaustive_topk(
+                [(idfs[t], per_term[t]) for t in term_list if t in per_term],
+                k, avgdl))
 
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            # max_doc_id, not block_no, is the doc-order key once delta
-            # blocks exist: a delta append restarts block_no at 0 but its
-            # doc range lies strictly above every base block's
-            pdf = pdf.sort_values(["term", "max_doc_id"], kind="mergesort")
-            per_term: dict[str, list] = {}
-            for term, max_doc, max_tfn, buf in zip(
-                    pdf["term"], pdf["max_doc_id"], pdf["max_tfnorm"], pdf["block"]):
-                per_term.setdefault(term, []).append(
-                    (int(max_doc), float(max_tfn), bytes(buf)))
-            tb = sorted(per_term.items(), key=lambda kv: term_order[kv[0]])
-            top = kernel([(idfs[t], blks) for t, blks in tb], k, avgdl)
+            per_term = _blocks_by_term(pdf)
+            top = kernel([(idfs[t], per_term[t]) for t in term_list
+                          if t in per_term], k, avgdl)
             return pd.DataFrame(top, columns=["doc_id", "score"])
 
-        if (self._arrow is None
-                or sum(df for _, df, _ in tmeta) > self._DRIVER_MAX_POSTINGS):
-            blocks = (self._blocks
-                      .filter(F.col("term_bucket").isin(
-                          sorted({b for _, _, b in tmeta})))
-                      .filter(F.col("term").isin(term_list)))
-            local = blocks.groupBy("shard").applyInPandas(shard_topk,
-                                                          _RESULT_SCHEMA)
-            return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        pdf = self._fetch_blocks(tmeta)
-        rows = [r for _, g in pdf.groupby("shard")
-                for r in shard_topk(g).itertuples(index=False)]
-        rows.sort(key=lambda r: (-r[1], r[0]))  # score desc, doc_id asc
-        return _top_frame(rows[:k])
+        blocks = (self._blocks
+                  .filter(F.col("term_bucket").isin(
+                      sorted({b for _, _, b in tmeta})))
+                  .filter(F.col("term").isin(term_list)))
+        local = blocks.groupBy("shard").applyInPandas(shard_topk,
+                                                      _RESULT_SCHEMA)
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_many(self, raw_queries: list[str], k: int = 10,
                     mode: str = "wand") -> DataFrame:
@@ -574,14 +591,7 @@ class BM25Index:
         def shard_topk_many(pdf: pd.DataFrame) -> pd.DataFrame:
             payload = batch_bc.value
             b_live, b_idfs = payload["live"], payload["idfs"]
-            # doc-order by max_doc_id: correct across base + delta blocks
-            pdf = pdf.sort_values(["term", "max_doc_id"], kind="mergesort")
-            per_term: dict[str, list] = {}
-            for term, max_doc, max_tfn, buf in zip(
-                    pdf["term"], pdf["max_doc_id"], pdf["max_tfnorm"],
-                    pdf["block"]):
-                per_term.setdefault(term, []).append(
-                    (int(max_doc), float(max_tfn), bytes(buf)))
+            per_term = _blocks_by_term(pdf)
             out = []
             for q, terms in b_live.items():
                 tb = [(b_idfs[t], per_term[t]) for t in terms if t in per_term]
@@ -613,7 +623,8 @@ class BM25Index:
     def _score_batch(self, tmeta: list[tuple[str, int, int]],
                      live: dict[str, list[str]], idfs: dict[str, float],
                      k: int) -> pd.DataFrame:
-        """``search_many``'s driver regime: the blocks of the batch's terms
+        """The driver scorer of ``search_many`` and of single "wand"
+        queries (a batch of one): the blocks of the batch's terms
         ``tmeta`` fetched in one pyarrow read and decoded at once, each
         posting's impact computed once (the same elementwise ops as per
         term, so the same bits), every query of ``live`` scored by
@@ -642,7 +653,9 @@ class BM25Index:
         ``top`` by doc_id, keeping their order: ONE ``doc_id ∈ ids`` pyarrow
         read of the page's ids — k rows, zero Spark jobs. On a root pyarrow
         cannot open, the same k rows come from a pushed-down Spark
-        ``doc_id IN (...)`` read. An empty page reads nothing."""
+        ``doc_id IN (...)`` read. Either read's rows are looked up by doc_id
+        position; a hit without a row and a stored null both come back as
+        None. An empty page reads nothing."""
         if top.empty:
             return top.assign(**{c: None for c in cols})
         ids = top["doc_id"].tolist()
@@ -653,10 +666,11 @@ class BM25Index:
             rows = self._isin(
                 self._qspark.read.parquet(getattr(self.paths, table)),
                 "doc_id", ids).select("doc_id", *cols).toPandas()
-        out = top.merge(rows, on="doc_id", how="left")
-        # a hit without a row gets null, as the outer join gave it
-        out[cols] = out[cols].astype(object).where(out[cols].notna(), None)
-        return out
+        # each hit's row position; -1 (no row) picks the appended None, the
+        # null a left join gives
+        at = pd.Index(rows["doc_id"]).get_indexer(ids)
+        return top.assign(**{c: np.append(rows[c].to_numpy(object), None)[at]
+                             for c in cols})
 
     def search_with_urls(self, raw_query: str, k: int = 10,
                          mode: str = "wand") -> DataFrame:

@@ -1,9 +1,11 @@
 """The result-page path of BM25Index: small queries read their blocks with
-pyarrow, run their top-k kernel on the driver and return rows identical to
-the distributed plan's; pages attach metadata with one k-row ``doc_id ∈
-ids`` pyarrow read; such pages and no-hit pages launch no Spark job; a
-memory-mode reader looks terms up on its driver lexicon with no job and
-caches nothing in Spark; pruned mode's per-term memo is a bounded LRU.
+pyarrow, are scored on the driver — "wand" by the batch scorer as a batch
+of one, "exhaustive" by the independent oracle — and return rows identical
+to the distributed plan's; pages attach metadata with one k-row ``doc_id ∈
+ids`` pyarrow read, stored nulls kept; such pages and no-hit pages launch
+no Spark job; a memory-mode reader looks terms up on its driver lexicon
+with no job and caches nothing in Spark; pruned mode's per-term memo is a
+bounded LRU.
 Batches (``search_many``) take one of three regimes by the same cap —
 driver scoring, a driver merge of per-shard candidates, or the Window plan
 — and all three return the same rows. A root pyarrow cannot open sends
@@ -17,13 +19,17 @@ import re
 import shutil
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from search_engine_tr_spark.operators import query_bm25
+from search_engine_tr_spark.oracle.refscore import bm25_idf
 from search_engine_tr_spark.operators.query_bm25 import BM25Index
 from search_engine_tr_spark.sources.synth import (gen_pages, pages_schema,
                                                   reference_queries)
@@ -144,6 +150,91 @@ def test_page_columns_and_nulls(spark, tiny_index):
     got = idx._attach(idx._page("haber", 3, "wand").assign(doc_id=-1)[:1],
                       "doc_meta", ["url", "title"])
     assert got[["url", "title"]].values.tolist() == [[None, None]]
+
+
+def test_attach_keeps_stored_nulls(spark, tiny_index, tmp_path):
+    """A stored null title or description comes back as None, next to the
+    row's stored values and in page order, with the Row types of the
+    LocalRelation the frame builds; ``search_blended(with_meta=True)``
+    returns the rows a Spark left join of the same doc_meta gives."""
+    ix = shutil.copytree(tiny_index[0], str(tmp_path / "index"))
+    before = BM25Index(spark, ix).search_with_meta("haber spor",
+                                                   k=10).collect()
+    meta_dir = tmp_path / "index" / "doc_meta"
+    table = pq.read_table(str(meta_dir))
+    ids = table["doc_id"].to_numpy()
+    for c, nulled in (("title", ids % 2 == 0), ("description", ids % 3 == 0)):
+        table = table.set_column(
+            table.schema.get_field_index(c), c,
+            pc.if_else(pa.array(nulled), pa.scalar(None, pa.string()),
+                       table[c]))
+    for f in meta_dir.glob("*.parquet"):
+        f.unlink()
+    pq.write_table(table, str(meta_dir / "part-0.parquet"))
+
+    idx = BM25Index(spark, ix)
+    frame = idx.search_with_meta("haber spor", k=10)
+    rows = frame.collect()
+    want = ClassicDataFrame.collect(frame)
+    assert rows == want and _types(rows) == _types(want)
+    assert [r["doc_id"] for r in rows] == [r["doc_id"] for r in before]
+    for got, old in zip(rows, before):
+        assert got["url"] == old["url"] and got["score"] == old["score"]
+        assert got["title"] == (None if got["doc_id"] % 2 == 0
+                                else old["title"])
+        assert got["description"] == (None if got["doc_id"] % 3 == 0
+                                      else old["description"])
+    # both kinds of stored null, and a stored value, on this page
+    assert any(r["title"] is None and r["description"] is not None
+               for r in rows)
+    assert any(r["title"] is r["description"] is None for r in rows)
+    assert any(r["title"] is not None for r in rows)
+
+    blended = idx.search_blended("haber spor", k=10, with_meta=True)
+    meta = spark.read.parquet(str(meta_dir)).select("doc_id", "title",
+                                                    "description")
+    joined = (idx.search_blended("haber spor", k=10)
+              .join(meta, "doc_id", "left")
+              .orderBy(F.desc("score"), F.asc("doc_id")).collect())
+    got = blended.collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in joined]
+    assert got and any(r["title"] is None for r in got)
+
+
+def test_driver_single_query_scorers(spark, tiny_index, monkeypatch):
+    """Under the cap a "wand" query is a batch of one through
+    ``batch_topk`` and never runs the per-shard ``wand_topk`` cursor; an
+    "exhaustive" query is one ``exhaustive_topk`` call over its terms in
+    query-term order and never runs ``batch_topk``, so wand == exhaustive
+    compares two scorers. Neither launches a Spark job."""
+    monkeypatch.setattr(BM25Index, "_DRIVER_MAX_POSTINGS", DRIVER)
+    idx = BM25Index(spark, tiny_index[0])
+    tmeta = idx._term_meta(idx.query_terms("haber spor"))
+    assert len(tmeta) == 2
+    calls: dict[str, list] = {}
+    for name in ("batch_topk", "wand_topk", "exhaustive_topk"):
+        def spy(*args, _name=name, _real=getattr(query_bm25, name)):
+            calls.setdefault(_name, []).append(args)
+            return _real(*args)
+        monkeypatch.setattr(query_bm25, name, spy)
+    got = {}
+    for mode in ("wand", "exhaustive"):
+        calls.clear()
+        got[mode], n = _jobs(
+            spark, "single-" + mode,
+            lambda: _collect_built(idx.search("haber spor", k=5, mode=mode)))
+        assert got[mode] and n == 0, mode
+        if mode == "wand":
+            assert list(calls) == ["batch_topk"]
+            [(_, _, _, queries, k)] = calls["batch_topk"]
+            assert len(queries) == 1 and len(queries[0]) == 2 and k == 5
+        else:
+            assert list(calls) == ["exhaustive_topk"]
+            [(term_blocks, k, _)] = calls["exhaustive_topk"]
+            assert [idf for idf, _ in term_blocks] == \
+                [bm25_idf(idx.n_docs, df) for _, df, _ in tmeta]
+            assert all(blocks for _, blocks in term_blocks) and k == 5
+    assert got["wand"] == got["exhaustive"]
 
 
 def test_result_page_job_budget(spark, tiny_index):
