@@ -59,8 +59,8 @@ def main() -> None:
     # round 1; the new link-graph stages are timed separately below
     t0 = time.monotonic()
     metrics = build_index(spark, pages, OUT, n_shards=CPUS,
-                          term_buckets=64, collect_metrics=False,
-                          write_meta=False, write_links=False)
+                          term_buckets=64, write_meta=False,
+                          write_links=False)
     timings["index_build"] = time.monotonic() - t0
     extras["docs_per_sec"] = N_PAGES / timings["index_build"]
     extras["postings_per_sec"] = metrics["total_postings"] / timings["index_build"]

@@ -72,7 +72,7 @@ def worker(cores: int, pages_path: str, out_dir: str) -> None:
     shutil.rmtree(out_dir, ignore_errors=True)
     t0 = time.monotonic()
     metrics = build_index(spark, pages, out_dir, n_shards=max(cores, 8),
-                          term_buckets=64, collect_metrics=False)
+                          term_buckets=64)
     build_sec = time.monotonic() - t0
     idx = BM25Index(spark, out_dir)
     idx.search("haber").collect()  # warm

@@ -213,8 +213,7 @@ class BM25Index:
     reader to observe a later generation."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 tstats_mode: str = "memory",
-                 reader_shuffle_partitions: int | None = None):
+                 tstats_mode: str = "memory"):
         """``tstats_mode``:
 
         - "memory" (default, single-node/bench): the committed term_stats
@@ -228,21 +227,13 @@ class BM25Index:
           buckets, not the vocabulary — and an LRU memo of looked-up terms
           spares repeated terms that job.
 
-        ``reader_shuffle_partitions``: reduce-side task count for the
-        DISTRIBUTED query path only — the per-shard WAND stage of single
-        queries and of ``search_many`` batches above
-        ``_DRIVER_MAX_POSTINGS`` (postings, resp. scored rows), and the
-        top-k windows of batches whose candidate rows exceed that bound;
-        small queries and batches are scored on the driver and shuffle
-        nothing. Default: HALF
-        the parent session's shuffle partitions, floor 8 — a top-k
-        query's reduce side is shards × k tiny rows plus a ms-scale
-        kernel per shard, so two shards per task halves the scheduling
-        overhead that dominates short queries (measured at sf0.1:
-        p50 451→352 ms, batch1000 268→325 qps; BENCH notes r5). Pass the
-        parent's value (or n_shards) when per-shard kernel work is the
-        bottleneck instead — e.g. scans of very hot terms on huge
-        corpora."""
+        The reader's sibling session runs with HALF the parent session's
+        shuffle partitions, floor 8: only the distributed regimes (queries
+        and batches above ``_DRIVER_MAX_POSTINGS``) shuffle, and a top-k
+        reduce side is shards × k tiny rows plus a ms-scale kernel per
+        shard, so two shards per task halves the scheduling overhead that
+        dominates short queries (measured at sf0.1: p50 451→352 ms,
+        batch1000 268→325 qps; BENCH notes r5)."""
         self.spark = spark
         self.paths = IndexPaths(index_dir)
         self.meta = fsio.read_json(spark, self.paths.meta)
@@ -259,14 +250,12 @@ class BM25Index:
         # is re-read, and cross-session joins with caller frames work.
         self._qspark = spark.newSession()
         self._qspark.conf.set("spark.sql.adaptive.enabled", "false")
-        if reader_shuffle_partitions is None:
-            try:
-                parent = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except (TypeError, ValueError):
-                parent = 200
-            reader_shuffle_partitions = max(8, parent // 2)
+        try:
+            parent = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            parent = 200
         self._qspark.conf.set("spark.sql.shuffle.partitions",
-                              str(int(reader_shuffle_partitions)))
+                              str(max(8, parent // 2)))
         # the committed snapshot bound (see class docstring); None for a
         # pre-delta meta, where no uncommitted generation can exist
         self._committed_max = (int(self.meta["derived_max_doc_id"])
@@ -709,8 +698,8 @@ class BM25Index:
         ``bm25 * (1 + alpha * ln(1 + authority))`` — a multiplicative boost
         so zero-authority domains keep their BM25 order and alpha=0 is
         exactly plain BM25. Missing scores table → authority 0 everywhere
-        (detected by attempting the read — not a local-FS isdir probe — so
-        hdfs://, s3:// index roots blend too; the fallback is logged).
+        (detected by a ``plans.fsio.exists`` probe — a Hadoop-FS call, so
+        hdfs://, s3a:// index roots blend too; the fallback is logged).
 
         → (doc_id, url, score, bm25, authority), (score desc, doc_id asc).
         The candidate set is k-bounded, the scores table is one row per
@@ -721,21 +710,17 @@ class BM25Index:
         top = self.search_with_urls(raw_query, c, mode) \
             .withColumnRenamed("score", "bm25")
         if self._domain_scores is None:
-            # attempt the read and catch ONLY the missing-path error (works
-            # for any Hadoop filesystem, unlike an os.path.isdir probe):
-            # a corrupt or unreadable table must RAISE, not silently serve
-            # authority=0. Not memoized as missing: the table may appear
-            # after a later backlinks_job run and the next query picks it up
-            from pyspark.errors import AnalysisException
-            try:
+            # probe with one Hadoop-FS call (any filesystem, unlike an
+            # os.path.isdir probe) before reading: a missing table costs no
+            # Spark read and no JVM stack trace. Not memoized as missing:
+            # the table may appear after a later backlinks_job run and the
+            # next query picks it up. A corrupt or unreadable table RAISES
+            # here rather than silently serving authority=0
+            if fsio.exists(self.spark, self.paths.domain_scores):
                 scores_df = self._qspark.read.parquet(self.paths.domain_scores)
                 scores_df.schema  # force resolution now, not at join time
                 self._domain_scores = scores_df
-            except AnalysisException as e:
-                cond = (e.getCondition() if hasattr(e, "getCondition")
-                        else e.getErrorClass())
-                if (cond or "") != "PATH_NOT_FOUND":
-                    raise
+            else:
                 import logging
                 logging.getLogger(__name__).warning(
                     "domain_scores table missing at %s — search_blended "

@@ -99,11 +99,14 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     id when ``input_ref`` is a catalog table (sources.catalog), else a
     content fingerprint — and a RESUME against different input raises
     instead of silently mixing two snapshots' postings.
+
+    The finalize step packs and writes blocks and term_stats with
+    ``index_build.write_derived``, the same writer as ``build_index``, so
+    both builds lay out the derived tables identically.
     """
     from .docids import assign_doc_ids
-    from .index_build import IndexPaths, build_blocks, occurrences_from_pages, \
-        postings_from_occurrences
-    from .stats import corpus_stats, doc_lengths, term_stats
+    from .index_build import IndexPaths, occurrences_from_pages, \
+        postings_from_occurrences, write_derived
 
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -154,28 +157,17 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
         postings = spark.read.option("basePath", paths.postings).parquet(
             *[os.path.join(paths.postings, f"chunk={c}") for c in range(n_chunks)]
         ).drop("chunk")
-        doclens = doc_lengths(postings)
-        doclens.write.mode("overwrite").parquet(paths.doclens)
-        doclens = spark.read.parquet(paths.doclens)
-        stats = corpus_stats(doclens)
-        tstats = (term_stats(postings)
-                  .withColumn("term_bucket",
-                              F.pmod(F.xxhash64("term"),
-                                     F.lit(term_buckets)).cast("int")))
-        tstats.write.mode("overwrite").partitionBy("term_bucket") \
-            .parquet(paths.term_stats)
-        blocks = build_blocks(postings, doclens, stats.avgdl, n_shards, term_buckets)
-        blocks.write.mode("overwrite").partitionBy("term_bucket").parquet(paths.blocks)
-        dm = spark.read.parquet(paths.doc_map)
-        _dm_max = dm.agg(F.max("doc_id")).collect()[0][0]
+        stats = write_derived(spark, postings, paths, n_shards, term_buckets)
+        dm = doc_map.agg(F.count("*").alias("n"),
+                         F.max("doc_id").alias("mx")).collect()[0]
         meta = {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
             "total_postings": stats.total_postings,
-            "n_pages_mapped": dm.count(),
+            "n_pages_mapped": int(dm["n"]),
             # keep the delta-refresh contract keys consistent with
             # build_index/rebuild_derived, or the first incremental update
             # on a resumable-built index degrades to a full rebuild
-            "derived_max_doc_id": -1 if _dm_max is None else int(_dm_max),
+            "derived_max_doc_id": -1 if dm["mx"] is None else int(dm["mx"]),
             "n_shards": n_shards, "term_buckets": term_buckets,
             "k1": 1.2, "b": 0.75,
         }

@@ -5,7 +5,6 @@ indexer.py:28-38):
 
 - ``doc_map``     (url, doc_id)                    dense stable ids (docids.py)
 - ``postings``    (doc_id, term, tf, positions, tags)   flat logical index
-- ``doclens``     (doc_id, dl)
 - ``term_stats``  (term, df, term_bucket)          exact df for BM25 idf
 - ``blocks``      (term, shard, block_no, n, max_doc_id, max_tfnorm,
                    avgdl0, block)
@@ -17,10 +16,11 @@ Skew strategy (north rule): every term's posting list is doc-sharded into
 ``n_shards`` sub-lists (shard = pmod(xxhash64(doc_id), S)) that are merged
 at score time by the global top-k — this IS the "split a head term's
 postings into term#salt sub-lists" salting: a Zipfian head term occupying
-50% of documents costs any single task at most df/S postings, and the block
-builder groups by (term_bucket, shard) so no pandas group ever holds more
-than one bucket of one shard. Skew ratios (max/mean postings per bucket and
-per shard) are measured and reported in the build metrics.
+50% of documents costs any single task at most df/S postings. The block
+packer repartitions by (term_bucket, shard), sorts within partitions and
+streams each term run into blocks, so no task ever holds more than one
+term run of one shard. Skew ratios (max/mean postings per bucket and per
+shard) are read off the written blocks and reported in the build metrics.
 
 Scale notes (100 TB / 1000 executors):
 - tokenize+explode is a map-only stage (no shuffle) feeding a partial-agg
@@ -33,9 +33,9 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
@@ -50,7 +50,7 @@ from ..functions.text import (extract_links_udf, extract_meta_udf,
 from ..oracle.refscore import BM25_B, BM25_K1
 from . import fsio
 from .docids import assign_doc_ids
-from .stats import corpus_stats, doc_lengths
+from .stats import CorpusStats, corpus_stats, doc_lengths
 
 
 @dataclass
@@ -61,8 +61,6 @@ class IndexPaths:
     def doc_map(self) -> str: return os.path.join(self.root, "doc_map")
     @property
     def postings(self) -> str: return os.path.join(self.root, "postings")
-    @property
-    def doclens(self) -> str: return os.path.join(self.root, "doclens")
     @property
     def term_stats(self) -> str: return os.path.join(self.root, "term_stats")
     @property
@@ -219,67 +217,15 @@ _BLOCK_SCHEMA = T.StructType([
 ])
 
 
-def _block_packer(avgdl: float, k1: float = BM25_K1, b: float = BM25_B):
-    """applyInPandas fn: one (term_bucket, shard) group → packed blocks.
-
-    max_tfnorm is the term-independent part of the BM25 impact upper bound;
-    at query time block max impact = idf(term) * max_tfnorm (exact bound).
-    """
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-        docs = pdf["doc_id"].to_numpy(np.int64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        dls = pdf["dl"].to_numpy(np.int64)
-        tfnorm = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        bucket = int(pdf["term_bucket"].iloc[0])
-        shard = int(pdf["shard"].iloc[0])
-        rows = []
-        # term boundaries in the sorted frame
-        terms = pdf["term"].to_numpy()
-        starts = np.nonzero(np.concatenate(([True], terms[1:] != terms[:-1])))[0]
-        ends = np.concatenate((starts[1:], [len(terms)]))
-        for s, e in zip(starts, ends):
-            term = terms[s]
-            for bno, off in enumerate(range(s, e, BLOCK_SIZE)):
-                hi = min(off + BLOCK_SIZE, e)
-                blk_docs = docs[off:hi].astype(np.uint64)
-                blk = encode_block(blk_docs, tfs[off:hi].astype(np.uint64),
-                                   dls[off:hi].astype(np.uint64))
-                rows.append((term, bucket, shard, bno, int(hi - off),
-                             int(docs[hi - 1]), float(tfnorm[off:hi].max()),
-                             float(avgdl), blk))
-        return pd.DataFrame(rows, columns=[f.name for f in _BLOCK_SCHEMA.fields])
-
-    return pack
-
-
-def _enrich_for_blocks(postings: DataFrame, doclens: DataFrame,
-                       n_shards: int, term_buckets: int) -> DataFrame:
-    return (postings.select("doc_id", "term", "tf")
-            .join(doclens, "doc_id")
-            .withColumn("shard",
-                        F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
-            .withColumn("term_bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")))
-
-
-def build_blocks(postings: DataFrame, doclens: DataFrame, avgdl: float,
-                 n_shards: int, term_buckets: int) -> DataFrame:
-    """Group-at-a-time packing: one pandas group per (term_bucket, shard).
-    Simple and fast, but a task holds its whole group in memory — bounded
-    by salting (≤ 1/(B·S) of all postings), which the builder must size."""
-    enriched = _enrich_for_blocks(postings, doclens, n_shards, term_buckets)
-    return (enriched
-            .groupBy("term_bucket", "shard")
-            .applyInPandas(_block_packer(avgdl), schema=_BLOCK_SCHEMA))
-
-
 def _sorted_stream_packer(avgdl: float, k1: float = BM25_K1, b: float = BM25_B):
     """mapInPandas fn over a (term_bucket, shard)-hashed, fully sorted
     partition: streams Arrow batches, emitting each term's blocks as its
     sorted run completes. Peak memory = one Arrow batch + one term's
-    in-flight run (df/S postings) — NOT the whole group."""
+    in-flight run (df/S postings) — NOT the whole group.
+
+    max_tfnorm is the term-independent part of the BM25 impact upper bound;
+    at query time block max impact = idf(term) * max_tfnorm (exact bound).
+    """
     cols = [f.name for f in _BLOCK_SCHEMA.fields]
 
     def pack(batches):
@@ -341,25 +287,70 @@ def _sorted_stream_packer(avgdl: float, k1: float = BM25_K1, b: float = BM25_B):
     return pack
 
 
-def build_blocks_sorted(postings: DataFrame, doclens: DataFrame, avgdl: float,
-                        n_shards: int, term_buckets: int) -> DataFrame:
+def build_blocks(postings: DataFrame, doclens: DataFrame, avgdl: float,
+                 n_shards: int, term_buckets: int) -> DataFrame:
     """The north-rule multi-pass sorted merge: repartition on the block key
     and SORT WITHIN PARTITIONS, then stream-pack — Spark's external sort
     spills arbitrarily large partitions to disk, and the packer never holds
-    more than one term run, so this path survives groups (and terms) that
-    exceed task memory. Output is bit-identical to ``build_blocks``."""
-    enriched = _enrich_for_blocks(postings, doclens, n_shards, term_buckets)
-    return (enriched
+    more than one term run, so task memory stays bounded however large a
+    (term_bucket, shard) group or a single term grows."""
+    return (postings.select("doc_id", "term", "tf")
+            .join(doclens, "doc_id")
+            .withColumn("shard",
+                        F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
+            .withColumn("term_bucket",
+                        F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"))
             .repartition("term_bucket", "shard")
             .sortWithinPartitions("term_bucket", "shard", "term", "doc_id")
             .mapInPandas(_sorted_stream_packer(avgdl), schema=_BLOCK_SCHEMA))
 
 
-def _skew_ratio(df: DataFrame, key: str) -> float:
-    row = (df.groupBy(key).count()
-           .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
-           .collect()[0])
-    return float(row["mx"] / row["mean"]) if row["mean"] else 0.0
+def write_derived(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
+                  n_shards: int, term_buckets: int) -> CorpusStats:
+    """Overwrite ``blocks`` and ``term_stats`` from ``postings``; returns
+    the corpus stats the blocks were packed under. The one writer of the
+    full derived tables (build_index, rebuild_derived and the resumable
+    build's finalize); refresh_derived_delta appends deltas instead.
+
+    The blocks are clustered by term_bucket before the partitioned write
+    (guide §6): the packer's output partitions each hold many buckets, so
+    a direct partitionBy write sprays one file per (task × bucket) —
+    measured 891 files for a 12k-page build — where clustering writes ONE
+    file per bucket.
+
+    term_stats is derived FROM the written blocks (guide §2.3): every
+    posting of a term lands in exactly one block, so df = Σ block.n —
+    grouping the blocks table (one row per term×shard×block, ≪ postings
+    rows) replaces a second full-postings aggregate, and term_stats can
+    never disagree with the blocks it serves. Partitioned by term_bucket:
+    a query's df/idf lookup prunes to its terms' buckets instead of
+    scanning every term row."""
+    # doclens is derived (dl is packed into the blocks; the query path never
+    # reads a doclens table) — cache instead of a write+read round-trip
+    doclens = doc_lengths(postings).cache()
+    stats = corpus_stats(doclens)
+    (build_blocks(postings, doclens, stats.avgdl, n_shards, term_buckets)
+     .repartition("term_bucket")
+     .write.mode("overwrite")
+     .partitionBy("term_bucket")
+     .parquet(paths.blocks))
+    doclens.unpersist()
+    (spark.read.parquet(paths.blocks)
+     .groupBy("term", "term_bucket")
+     .agg(F.sum("n").cast("long").alias("df"))
+     .select("term", "df", "term_bucket")
+     .write.mode("overwrite")
+     .partitionBy("term_bucket")
+     .parquet(paths.term_stats))
+    return stats
+
+
+def _max_over_mean(counts: dict) -> float:
+    """max/mean of the per-key posting counts (keys with no postings are
+    absent, as in a groupBy of the postings themselves)."""
+    if not counts:
+        return 0.0
+    return max(counts.values()) / (sum(counts.values()) / len(counts))
 
 
 def materialize_doc_meta(pages: DataFrame, doc_map: DataFrame,
@@ -394,10 +385,14 @@ def materialize_links(pages: DataFrame, out_path: str,
 
 def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
                 n_shards: int = 32, term_buckets: int = 64,
-                collect_metrics: bool = True, write_text: bool = True,
-                write_meta: bool = True, write_links: bool = True,
-                packer: str = "group") -> dict:
+                write_text: bool = True, write_meta: bool = True,
+                write_links: bool = True) -> dict:
     """Full build. Writes all index tables under ``out_dir``; returns metrics.
+
+    doc_map and postings are written here; blocks and term_stats by
+    ``write_derived`` (the sorted-merge packer). The metrics, also written
+    to meta.json, carry the corpus stats and the skew ratios
+    ``skew_term_bucket``/``skew_shard`` (max/mean postings per key).
 
     ``write_text=True`` also materializes the input_hint contract column —
     the byte-identical extracted ``text`` per url — as a pages_text table
@@ -460,40 +455,7 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
         if text_err:
             raise text_err[0]
 
-    # doclens is derived (dl is packed into the blocks; the query path never
-    # reads a doclens table) — cache instead of a write+read round-trip
-    doclens = doc_lengths(postings).cache()
-    stats = corpus_stats(doclens)
-
-    block_fn = {"group": build_blocks, "sorted": build_blocks_sorted}[packer]
-    blocks = block_fn(postings, doclens, stats.avgdl, n_shards, term_buckets)
-    # repartition ON the partitionBy key before the write (guide §6): the
-    # packer's output partitions each hold many term_buckets, so a direct
-    # partitionBy write sprays one file per (task × bucket) — measured 891
-    # files for a 12k-page build. Clustering by term_bucket first writes
-    # ONE file per bucket (packed block bytes, a cheap exchange of the
-    # already-compact payload), which every pruned query read and the
-    # term_stats derivation below then benefit from.
-    (blocks.repartition("term_bucket")
-     .write.mode("overwrite")
-     .partitionBy("term_bucket")
-     .parquet(paths.blocks))
-    doclens.unpersist()
-
-    # term_stats derived FROM the written blocks table (round 6, guide
-    # §2.3): every posting of a term lands in exactly one block, so
-    # df = Σ block.n — grouping the blocks table (one row per
-    # term×shard×block, ≪ postings rows) replaces a second full-postings
-    # aggregate pass, and term_stats can never disagree with the blocks it
-    # serves. Partitioned by term_bucket: a query's df/idf lookup prunes
-    # to its terms' buckets instead of scanning every term row (at 10^12
-    # docs term_stats is itself hundreds of millions of rows).
-    tstats = (spark.read.parquet(paths.blocks)
-              .groupBy("term", "term_bucket")
-              .agg(F.sum("n").cast("long").alias("df"))
-              .select("term", "df", "term_bucket"))
-    tstats.write.mode("overwrite").partitionBy("term_bucket") \
-        .parquet(paths.term_stats)
+    stats = write_derived(spark, postings, paths, n_shards, term_buckets)
 
     elapsed = time.monotonic() - t0
     n_pages = stats.n_docs  # every non-empty page is a doc
@@ -523,16 +485,17 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
         "docs_per_sec": n_pages / elapsed if elapsed else 0.0,
         "postings_per_sec": stats.total_postings / elapsed if elapsed else 0.0,
     }
-    if collect_metrics:
-        p = read_postings(spark, paths.postings)
-        metrics["skew_term_bucket"] = _skew_ratio(
-            p.withColumn("term_bucket",
-                         F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")),
-            "term_bucket")
-        metrics["skew_shard"] = _skew_ratio(
-            p.withColumn("shard",
-                         F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")),
-            "shard")
+    # skew ratios (max/mean postings per term bucket and per shard) from one
+    # ≤ term_buckets × n_shards-row aggregate of the written blocks: every
+    # posting lies in exactly one block, so Σn per key is its postings count
+    per_bucket, per_shard = Counter(), Counter()
+    for r in (spark.read.parquet(paths.blocks)
+              .groupBy("term_bucket", "shard").agg(F.sum("n").alias("n"))
+              .collect()):
+        per_bucket[r["term_bucket"]] += r["n"]
+        per_shard[r["shard"]] += r["n"]
+    metrics["skew_term_bucket"] = _max_over_mean(per_bucket)
+    metrics["skew_shard"] = _max_over_mean(per_shard)
     fsio.write_json(spark, paths.meta, metrics)
     return metrics
 

@@ -1,10 +1,10 @@
-"""Corpus statistics for BM25: N, avgdl, per-term document frequency.
+"""Corpus statistics for BM25: N, avgdl, total postings, per-doc lengths.
 
 Replaces the reference's candidate-relative counts (document_score_
 calculator.py:43-49, SURVEY.md Q2) with true corpus-level stats for the
 engine's BM25 mode. All single-pass hash aggregates (map-side partials free
-from Catalyst); ``df`` is exact (postings are already one row per
-(doc, term)), not approximate, because it feeds scoring.
+from Catalyst). The exact per-term ``df`` is Σn of the written blocks
+(``index_build.write_derived``), not a postings aggregate.
 """
 
 from __future__ import annotations
@@ -25,11 +25,6 @@ class CorpusStats:
 def doc_lengths(postings: DataFrame) -> DataFrame:
     """(doc_id, dl) — dl = Σ tf = kept-token count per doc (tokenizer spec)."""
     return postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-
-
-def term_stats(postings: DataFrame) -> DataFrame:
-    """(term, df) — exact document frequency per term."""
-    return postings.groupBy("term").agg(F.count("*").alias("df"))
 
 
 def corpus_stats(doclens: DataFrame) -> CorpusStats:

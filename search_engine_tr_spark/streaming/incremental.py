@@ -312,7 +312,9 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
 def rebuild_derived(spark: SparkSession, index_dir: str,
                     n_shards: int | None = None,
                     term_buckets: int | None = None) -> dict:
-    """Rebuild term_stats/blocks/meta.json from the (appended) postings.
+    """Rebuild term_stats/blocks/meta.json from the (appended) postings,
+    with ``index_build.write_derived`` — the writer ``build_index`` uses,
+    so a rebuild lays out blocks and term_stats as a fresh build does.
 
     Also records ``n_pages_mapped`` — the doc_map row count — which is the
     staleness sentinel ``stream_ingest_index`` compares against. It must
@@ -328,8 +330,7 @@ def rebuild_derived(spark: SparkSession, index_dir: str,
     ingest replay rolls back + re-appends the same ids (ADVICE r5). The
     surviving ``_ingest_intent.json`` stays live so the replay still
     performs its file-exact rollback."""
-    from ..plans.index_build import build_blocks
-    from ..plans.stats import corpus_stats, doc_lengths
+    from ..plans.index_build import write_derived
 
     paths = IndexPaths(index_dir)
     meta = fsio.read_json(spark, paths.meta)
@@ -342,23 +343,7 @@ def rebuild_derived(spark: SparkSession, index_dir: str,
     committed_max = -1 if _dm_max is None else int(_dm_max)
     postings = (read_postings(spark, paths.postings)
                 .filter(F.col("doc_id") <= F.lit(committed_max)))
-    doclens = doc_lengths(postings).cache()
-    stats = corpus_stats(doclens)
-    blocks = build_blocks(postings, doclens, stats.avgdl, n_shards, term_buckets)
-    # cluster by the partition key before the write — one file per bucket
-    # instead of one per (task × bucket); see build_index
-    blocks.repartition("term_bucket") \
-        .write.mode("overwrite").partitionBy("term_bucket").parquet(paths.blocks)
-    doclens.unpersist()
-    # term_stats derived from the written blocks (df = Σ block.n — one
-    # pass over the compact blocks table instead of a second full-postings
-    # aggregate; see build_index)
-    ts = (spark.read.parquet(paths.blocks)
-          .groupBy("term", "term_bucket")
-          .agg(F.sum("n").cast("long").alias("df"))
-          .select("term", "df", "term_bucket"))
-    ts.write.mode("overwrite").partitionBy("term_bucket") \
-        .parquet(paths.term_stats)
+    stats = write_derived(spark, postings, paths, n_shards, term_buckets)
     n_pages_mapped = int(_dm_row["n"])
     meta.update({"n_docs": stats.n_docs, "avgdl": stats.avgdl,
                  "total_postings": stats.total_postings,
@@ -384,8 +369,9 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
     - **term_stats**: one delta row per touched term, appended;
       ``BM25Index`` sums df across a term's rows — once, into its driver
       lexicon, in memory mode; per lookup job in pruned mode.
-    - **blocks**: packed from the delta postings only, under the UPDATED
-      corpus avgdl, and appended. Readers order a term's blocks by
+    - **blocks**: packed from the delta postings only by the build's
+      sorted-merge packer (``index_build.build_blocks``), under the
+      UPDATED corpus avgdl, and appended. Readers order a term's blocks by
       max_doc_id (delta ranges sit strictly above base ranges) and restore
       valid WAND bounds by scaling each block's stored max_tfnorm with
       max(1, avgdl_now/avgdl0).
@@ -394,8 +380,10 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
       Σdl / n_docs in the same double division), so scores match a
       from-scratch build exactly.
 
-    The deltas accumulate small blocks; ``rebuild_derived`` (or the
-    compaction job) remains the periodic canonicalization pass. Falls back
+    These appends (the ``gen`` column, the intent marker, the checkpointed
+    delta blocks) are why this path does not share ``write_derived``'s
+    overwrite. The deltas accumulate small blocks; ``rebuild_derived`` (or
+    the compaction job) remains the periodic canonicalization pass. Falls back
     to ``rebuild_derived`` for metas predating the delta keys. Exact-score
     parity with a from-scratch build is pinned by test_stream_ingest.
 

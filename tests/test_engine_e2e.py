@@ -159,6 +159,29 @@ def test_blended_fallback_only_on_missing_table(spark, tiny_index, tmp_path):
     shutil.rmtree(scores_dir)
 
 
+def test_blended_missing_table_reads_no_parquet(spark, tiny_index,
+                                                monkeypatch):
+    """A missing domain_scores table is found by one filesystem probe: the
+    blended call makes no Spark parquet read of it (which would log a JVM
+    FileNotFoundException trace per call) and serves authority 0."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out, _ = tiny_index
+    idx = BM25Index(spark, out)
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    for _ in range(2):  # not memoized as missing: each call probes again
+        rows = idx.search_blended("haber", k=3).collect()
+        assert rows and all(r["authority"] == 0.0 for r in rows)
+    assert not [p for p in reads if "domain_scores" in str(p)]
+
+
 def test_build_metrics_sane(tiny_index):
     _, metrics = tiny_index
     assert metrics["n_docs"] > 0

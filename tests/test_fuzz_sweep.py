@@ -27,8 +27,8 @@ def test_fresh_corpus_parity(spark, tmp_path, seed):
     out = str(tmp_path / f"ix_{seed}")
     shutil.rmtree(out, ignore_errors=True)
     build_index(spark, pages_df(spark, 120, seed=seed), out, n_shards=4,
-                term_buckets=8, collect_metrics=False, write_text=False,
-                write_meta=False, write_links=False)
+                term_buckets=8, write_text=False, write_meta=False,
+                write_links=False)
 
     py_tf = {}
     for p in gen_pages(120, seed=seed):
@@ -77,7 +77,7 @@ def test_stream_ingest_split_invariance(spark, tmp_path, seed, cut):
 
     fresh = str(tmp_path / "fresh")
     build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
-                fresh, n_shards=4, term_buckets=8, collect_metrics=False)
+                fresh, n_shards=4, term_buckets=8)
 
     got_idx, want_idx = BM25Index(spark, ix), BM25Index(spark, fresh)
     checked = 0

@@ -70,6 +70,33 @@ def test_resumed_build_bit_identical(spark, tiny_pages_df, tmp_path):
     assert bl_full == bl_part
 
 
+def test_resumable_derived_tables_match_build_index(spark, tiny_pages_df,
+                                                   tiny_index, tmp_path):
+    """The resumable finalize writes blocks and term_stats with
+    build_index's writer: the same term_stats rows and blocks as
+    ``tiny_index`` (same pages, shards and buckets), one blocks file per
+    term_bucket, and no doclens table."""
+    base, _ = tiny_index
+    out = str(tmp_path / "resumable")
+    build_index_resumable(spark, tiny_pages_df, out, n_chunks=2, n_shards=4,
+                          term_buckets=8)
+
+    def rows(root, table):
+        return sorted(tuple(r) for r in spark.read.parquet(
+            os.path.join(root, table)).collect())
+
+    assert rows(out, "term_stats") == rows(base, "term_stats")
+    assert rows(out, "blocks") == rows(base, "blocks")
+    bucket_dirs = [d for d in os.listdir(os.path.join(out, "blocks"))
+                   if d.startswith("term_bucket=")]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(out, "blocks", d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert not os.path.exists(os.path.join(out, "doclens"))
+
+
 def test_resume_refuses_changed_input(spark, tiny_pages_df, tmp_path):
     """The manifest records an input-snapshot fingerprint; resuming the same
     out_dir against a DIFFERENT input must raise, not mix snapshots."""

@@ -18,7 +18,7 @@ def two_indexes(spark, tmp_path_factory):
     for shards in (1, 6):
         out = str(tmp_path_factory.mktemp(f"salt{shards}"))
         build_index(spark, pages, out, n_shards=shards, term_buckets=4,
-                    collect_metrics=False, write_text=False)
+                    write_text=False)
         outs.append(out)
     pages.unpersist()
     return outs
