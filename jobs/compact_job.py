@@ -25,7 +25,7 @@ import json
 import os
 
 _PARTITIONED = {"blocks": ["term_bucket"], "term_stats": ["term_bucket"]}
-_DEFAULT_TABLES = ["postings", "doc_map", "doclens", "doc_meta", "links",
+_DEFAULT_TABLES = ["postings", "doc_map", "doc_meta", "links",
                    "term_stats", "blocks", "domain_scores"]
 
 

@@ -10,7 +10,10 @@ the Spark expression remains the writer side, so a mismatch would fail
 loudly in the parity test rather than mis-route queries.
 
 Spark's XXH64 (catalyst.expressions.XXH64) is the reference xxHash64
-algorithm over the string's UTF-8 bytes with little-endian lane reads.
+algorithm over the string's UTF-8 bytes with little-endian lane reads; a
+long is hashed as its 8 little-endian bytes (``XXH64.hashLong``), which
+lets the driver-side delta refresh route postings to ``shard``s as
+``pmod(xxhash64(doc_id), n_shards)`` does in the build.
 """
 
 from __future__ import annotations
@@ -84,3 +87,9 @@ def xxh64(data: bytes, seed: int = 42) -> int:
 def term_bucket(term: str, n_buckets: int, seed: int = 42) -> int:
     """Driver-side twin of ``pmod(xxhash64(term), n_buckets)``."""
     return xxh64(term.encode("utf-8"), seed) % n_buckets
+
+
+def doc_shard(doc_id: int, n_shards: int, seed: int = 42) -> int:
+    """Driver-side twin of ``pmod(xxhash64(doc_id), n_shards)`` for a long
+    ``doc_id``."""
+    return xxh64(doc_id.to_bytes(8, "little", signed=True), seed) % n_shards

@@ -53,24 +53,26 @@ from __future__ import annotations
 
 import posixpath
 from collections import OrderedDict
+from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 # the row constructor Spark's collect unpickles its rows with
 from pyspark.sql.types import _create_row
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
-import pyarrow.fs as pafs
 
 from ..functions.codec import decode_blocks
 from ..functions.text import normalize_query
 from ..oracle.refscore import bm25_idf
 from ..plans import fsio
+from ..plans.fsio import arrow_root as _arrow_root
 from ..plans.index_build import IndexPaths
 from .wand import batch_topk, exhaustive_topk, impacts_for, wand_topk
 
@@ -86,7 +88,15 @@ _COL_TYPES = {"query": T.StringType(), "doc_id": T.LongType(),
               "authority": T.DoubleType(), "url": T.StringType(),
               "title": T.StringType(), "description": T.StringType()}
 
-_TSTATS_SCHEMA = ("term string, df bigint, gen bigint, term_bucket int")
+# term_stats as the reader reads it, in Spark and in pyarrow. One explicit
+# schema: the optional ``gen`` column (absent in base-rebuild files, present
+# in delta files) resolves as null rather than depending on which footer is
+# sampled
+_TSTATS_SCHEMA = T.StructType([
+    T.StructField("term", T.StringType()), T.StructField("df", T.LongType()),
+    T.StructField("gen", T.LongType()),
+    T.StructField("term_bucket", T.IntegerType())])
+_TSTATS_ARROW = to_arrow_schema(_TSTATS_SCHEMA)
 
 # the blocks table as the driver reads it. One explicit schema: a file
 # without ``avgdl0`` reads it as null, which rescales by 1.0, as in Spark
@@ -95,18 +105,6 @@ _BLOCKS_ARROW = pa.schema([
     ("n", pa.int32()), ("max_doc_id", pa.int64()),
     ("max_tfnorm", pa.float64()), ("avgdl0", pa.float64()),
     ("block", pa.binary()), ("term_bucket", pa.int32())])
-
-
-def _arrow_root(root: str) -> tuple[pafs.FileSystem, str] | None:
-    """(pyarrow filesystem, path) of an index root, or None when pyarrow
-    cannot open it (``s3a://``, or ``hdfs://`` without libhdfs)."""
-    local = fsio.local_path(root)
-    if local is not None:
-        return pafs.LocalFileSystem(), local
-    try:
-        return pafs.FileSystem.from_uri(root)
-    except (pa.ArrowInvalid, OSError):
-        return None
 
 
 def _kernel(mode: str):
@@ -220,6 +218,9 @@ class BM25Index:
           are read ONCE here into a driver dict term → (df, term_bucket),
           so every term lookup is a dict probe — zero Spark jobs, nothing
           cached in Spark. Fine while the vocabulary fits on the driver.
+          On a root pyarrow can open the read is a pyarrow one, so the
+          open launches no Spark job either; on other roots (``s3a://``)
+          it is one Spark collect.
         - "pruned" (the 10^12-doc path): term_stats stays on disk
           (partitioned by term_bucket at build time); each query's unseen
           terms cost one lookup job that reads ONLY their buckets'
@@ -233,7 +234,9 @@ class BM25Index:
         reduce side is shards × k tiny rows plus a ms-scale kernel per
         shard, so two shards per task halves the scheduling overhead that
         dominates short queries (measured at sf0.1: p50 451→352 ms,
-        batch1000 268→325 qps; BENCH notes r5)."""
+        batch1000 268→325 qps; BENCH notes r5). The Spark blocks frame
+        those regimes scan is built on their first use (``_blocks``), not
+        here."""
         self.spark = spark
         self.paths = IndexPaths(index_dir)
         self.meta = fsio.read_json(spark, self.paths.meta)
@@ -260,18 +263,38 @@ class BM25Index:
         # pre-delta meta, where no uncommitted generation can exist
         self._committed_max = (int(self.meta["derived_max_doc_id"])
                                if "derived_max_doc_id" in self.meta else None)
-        # build the readers once: the partitioned-dir file listing and
-        # parquet footers are amortized across queries
+        # the driver regimes' datasets: blocks now, doc_meta / doc_map on
+        # first use. Opening lists the files once, which freezes them as
+        # Spark's file index does
+        self._arrow = _arrow_root(index_dir)
+        self._datasets: dict[str, ds.Dataset] = {}
+        if self._arrow is not None:
+            fs, root = self._arrow
+            self._datasets["blocks"] = ds.dataset(
+                posixpath.join(root, "blocks"), schema=_BLOCKS_ARROW,
+                format="parquet", filesystem=fs, partitioning="hive")
         self.tstats_mode = tstats_mode
         if tstats_mode == "memory":
-            pdf = (self._read_term_stats()
-                   .select("term", "df", "term_bucket").toPandas())
             self._lexicon: dict[str, tuple[int, int]] | None = \
-                _sum_df(pdf.itertuples(index=False, name=None))
+                _sum_df(self._lexicon_rows())
         elif tstats_mode == "pruned":
             self._lexicon = None
         else:
             raise ValueError(f"unknown tstats_mode {tstats_mode!r}")
+        self._domain_scores = None
+        # pruned mode's per-term (df, bucket) LRU memo — a BM25Index is a
+        # snapshot reader (n_docs/avgdl frozen at construction), so term
+        # stats are immutable for its lifetime; repeated terms skip the
+        # lookup job entirely, and the cap keeps a long run of distinct
+        # queries from growing the driver without bound
+        self._term_memo: OrderedDict[str, tuple[int, int] | None] = \
+            OrderedDict()
+
+    @cached_property
+    def _blocks(self) -> DataFrame:
+        """The committed blocks as a Spark frame, for the distributed
+        regimes: built on first use, so an open whose queries stay on the
+        driver resolves no blocks schema through Spark."""
         blocks = self._qspark.read.parquet(self.paths.blocks)
         if self._committed_max is not None:
             # excludes exactly an in-flight refresh's delta blocks (every
@@ -294,31 +317,11 @@ class BM25Index:
                 * F.greatest(F.lit(1.0),
                              F.lit(float(self.meta["avgdl"]))
                              / F.col("avgdl0")))
-        self._blocks = blocks
-        # the driver regimes' datasets: blocks now, doc_meta / doc_map on
-        # first use. Opening lists the files once, which freezes them as
-        # Spark's file index does
-        self._arrow = _arrow_root(index_dir)
-        self._datasets: dict[str, ds.Dataset] = {}
-        if self._arrow is not None:
-            fs, root = self._arrow
-            self._datasets["blocks"] = ds.dataset(
-                posixpath.join(root, "blocks"), schema=_BLOCKS_ARROW,
-                format="parquet", filesystem=fs, partitioning="hive")
-        self._domain_scores = None
-        # pruned mode's per-term (df, bucket) LRU memo — a BM25Index is a
-        # snapshot reader (n_docs/avgdl frozen at construction), so term
-        # stats are immutable for its lifetime; repeated terms skip the
-        # lookup job entirely, and the cap keeps a long run of distinct
-        # queries from growing the driver without bound
-        self._term_memo: OrderedDict[str, tuple[int, int] | None] = \
-            OrderedDict()
+        return blocks
 
     def _read_term_stats(self) -> DataFrame:
-        """term_stats scan bounded to the committed generation. The
-        explicit schema forces the optional ``gen`` column (absent in
-        base-rebuild files, present in delta files) to resolve as null
-        rather than depending on which footer Spark samples."""
+        """term_stats scan bounded to the committed generation, with the
+        explicit schema ``_TSTATS_SCHEMA``."""
         scan = (self._qspark.read.schema(_TSTATS_SCHEMA)
                 .parquet(self.paths.term_stats))
         if self._committed_max is not None:
@@ -326,6 +329,27 @@ class BM25Index:
                 F.col("gen").isNull()
                 | (F.col("gen") <= F.lit(self._committed_max)))
         return scan
+
+    def _lexicon_rows(self):
+        """(term, df, term_bucket) rows of the committed term_stats for the
+        memory-mode lexicon: one filtered pyarrow read (hive partitions,
+        ``_TSTATS_ARROW``, the same generation bound), zero Spark jobs; on
+        a root pyarrow cannot open, one Arrow ``toPandas`` of the Spark
+        scan."""
+        cols = ["term", "df", "term_bucket"]
+        if self._arrow is None:
+            pdf = self._read_term_stats().select(*cols).toPandas()
+            return pdf.itertuples(index=False, name=None)
+        fs, root = self._arrow
+        where = None
+        if self._committed_max is not None:
+            where = (ds.field("gen").is_null()
+                     | (ds.field("gen") <= self._committed_max))
+        table = ds.dataset(
+            posixpath.join(root, "term_stats"), schema=_TSTATS_ARROW,
+            format="parquet", filesystem=fs,
+            partitioning="hive").to_table(columns=cols, filter=where)
+        return zip(*(table[c].to_pylist() for c in cols))
 
     # -- query plumbing ----------------------------------------------------
     def query_terms(self, raw_query: str) -> list[str]:

@@ -104,6 +104,7 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     ``index_build.write_derived``, the same writer as ``build_index``, so
     both builds lay out the derived tables identically.
     """
+    from . import fsio
     from .docids import assign_doc_ids
     from .index_build import IndexPaths, occurrences_from_pages, \
         postings_from_occurrences, write_derived
@@ -158,20 +159,19 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
             *[os.path.join(paths.postings, f"chunk={c}") for c in range(n_chunks)]
         ).drop("chunk")
         stats = write_derived(spark, postings, paths, n_shards, term_buckets)
-        dm = doc_map.agg(F.count("*").alias("n"),
-                         F.max("doc_id").alias("mx")).collect()[0]
+        dm_max, dm_rows = fsio.column_max_count(spark, paths.doc_map,
+                                                "doc_id")
         meta = {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
             "total_postings": stats.total_postings,
-            "n_pages_mapped": int(dm["n"]),
+            "n_pages_mapped": dm_rows,
             # keep the delta-refresh contract keys consistent with
             # build_index/rebuild_derived, or the first incremental update
             # on a resumable-built index degrades to a full rebuild
-            "derived_max_doc_id": -1 if dm["mx"] is None else int(dm["mx"]),
+            "derived_max_doc_id": -1 if dm_max is None else dm_max,
             "n_shards": n_shards, "term_buckets": term_buckets,
             "k1": 1.2, "b": 0.75,
         }
-        from . import fsio
         fsio.write_json(spark, paths.meta, meta)
         manifest.mark_step("finalize", **{k: v for k, v in meta.items()
                                           if isinstance(v, (int, float))})

@@ -462,17 +462,15 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
     # n_pages_mapped counts doc_map rows, which INCLUDES zero-token pages
     # (in doc_map but never in postings) — it is the convergent staleness
     # sentinel for incremental ingest, where postings-derived n_docs is not
-    _dm_row = doc_map.agg(F.count("*").alias("n"),
-                          F.max("doc_id").alias("mx")).collect()[0]
-    n_pages_mapped = int(_dm_row["n"])
-    _dm_max = _dm_row["mx"]
+    _dm_max, n_pages_mapped = fsio.column_max_count(spark, paths.doc_map,
+                                                    "doc_id")
     metrics = {
         "n_docs": stats.n_docs,
         "n_pages_mapped": n_pages_mapped,
         # high-water mark of doc_ids covered by the derived tables: later
         # appends carry strictly larger ids, so a delta refresh reads only
         # postings with doc_id > this (row-group stats prune base files)
-        "derived_max_doc_id": -1 if _dm_max is None else int(_dm_max),
+        "derived_max_doc_id": -1 if _dm_max is None else _dm_max,
         "n_pages": n_pages,
         "avgdl": stats.avgdl,
         "total_postings": stats.total_postings,

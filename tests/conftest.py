@@ -64,3 +64,28 @@ def oracle_index(tiny_pages):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def refresh_regime(monkeypatch):
+    """→ ``use(regime)``: send every delta refresh of the test to
+    ``regime`` — "driver" (pyarrow and pandas, no Spark job) or "spark" —
+    through the driver regime's postings cap. ``use`` returns the list of
+    driver-regime writes the test then makes, so the test can check that
+    the regime really ran."""
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    def use(regime: str) -> list:
+        cap = {"driver": 1 << 62, "spark": -1}[regime]
+        monkeypatch.setattr(inc, "_DRIVER_MAX_DELTA_POSTINGS", cap)
+        writes = []
+        real = inc._write_delta_driver
+
+        def spy(*args):
+            writes.append(args)
+            return real(*args)
+
+        monkeypatch.setattr(inc, "_write_delta_driver", spy)
+        return writes
+
+    return use

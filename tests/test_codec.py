@@ -85,14 +85,16 @@ def test_empty_streams():
 
 
 def test_xxh64_matches_spark(spark):
-    """Driver-side bucket routing (functions.xxh) must match the JVM
-    F.xxhash64 bit-for-bit — every length class (empty, <4, <8, <32,
-    stripes + tails) and multi-byte UTF-8."""
+    """Driver-side bucket and shard routing (functions.xxh) must match the
+    JVM F.xxhash64 bit-for-bit — for strings every length class (empty,
+    <4, <8, <32, stripes + tails) and multi-byte UTF-8, for long doc ids
+    the edge values and random ids of every magnitude."""
     import random
 
     from pyspark.sql import functions as F
 
-    from search_engine_tr_spark.functions.xxh import term_bucket, xxh64
+    from search_engine_tr_spark.functions.xxh import doc_shard, term_bucket, \
+        xxh64
 
     rng = random.Random(5)
     pool = ["", "a", "ab", "abc", "abcd", "istanbul", "İZMİR", "😀emoji",
@@ -107,3 +109,15 @@ def test_xxh64_matches_spark(spark):
     for r in rows:
         assert xxh64(r["s"].encode("utf-8")) == r["h"], repr(r["s"])
         assert term_bucket(r["s"], 64) == r["b"], repr(r["s"])
+
+    ids = [0, 1, 2**31, 2**40, 2**63 - 1]
+    ids += [rng.randrange(2 ** rng.randrange(1, 64)) for _ in range(300)]
+    rows = (spark.createDataFrame([(i,) for i in ids], "d long")
+            .select("d", F.xxhash64("d").alias("h"),
+                    *[F.pmod(F.xxhash64("d"), F.lit(n)).cast("int")
+                      .alias(f"s{n}") for n in (4, 32, 7)])
+            .collect())
+    for r in rows:
+        assert xxh64(r["d"].to_bytes(8, "little", signed=True)) == r["h"]
+        for n in (4, 32, 7):
+            assert doc_shard(r["d"], n) == r[f"s{n}"], (r["d"], n)

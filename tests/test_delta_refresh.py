@@ -40,7 +40,7 @@ def _long_pages(base_ts, n, seed=5):
     return rows
 
 
-def test_three_generation_stack_and_avgdl_rescale(spark, tmp_path):
+def _three_generation_stack_and_avgdl_rescale(spark, tmp_path):
     """Bootstrap + TWO delta generations, the second one long-doc-heavy so
     avgdl rises well above both earlier generations' avgdl0. Search must
     stay exact: WAND == exhaustive (a broken bound rescale would prune
@@ -81,6 +81,22 @@ def test_three_generation_stack_and_avgdl_rescale(spark, tmp_path):
     assert any(want[q] for q in QUERIES)
 
 
+def test_three_generation_stack_and_avgdl_rescale(spark, tmp_path,
+                                                  refresh_regime):
+    writes = refresh_regime("driver")
+    _three_generation_stack_and_avgdl_rescale(spark, tmp_path)
+    assert len(writes) == 2
+
+
+def test_three_generation_stack_and_avgdl_rescale_spark_regime(
+        spark, tmp_path, refresh_regime):
+    """The three generations with both delta refreshes on the Spark
+    path."""
+    writes = refresh_regime("spark")
+    _three_generation_stack_and_avgdl_rescale(spark, tmp_path)
+    assert not writes
+
+
 def test_rebuild_derived_canonicalizes_deltas(spark, tmp_path):
     """rebuild_derived is the periodic compaction of the delta scheme:
     afterwards term_stats holds ONE row per term again, blocks are a
@@ -109,8 +125,7 @@ def test_rebuild_derived_canonicalizes_deltas(spark, tmp_path):
     assert _results(spark, ix, QUERIES) == before
 
 
-def test_reader_mid_refresh_is_consistent_snapshot(spark, tmp_path,
-                                                   monkeypatch):
+def _reader_mid_refresh_is_consistent_snapshot(spark, tmp_path, monkeypatch):
     """ADVICE r5: a BM25Index constructed BETWEEN a delta refresh's
     appends and its meta commit must not serve a torn state (new blocks
     visible, old n_docs/avgdl for idf and the avgdl0 rescale). The
@@ -160,3 +175,19 @@ def test_reader_mid_refresh_is_consistent_snapshot(spark, tmp_path,
     build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
                 fresh, n_shards=4, term_buckets=8)
     assert _results(spark, ix, QUERIES) == _results(spark, fresh, QUERIES)
+
+
+def test_reader_mid_refresh_is_consistent_snapshot(spark, tmp_path,
+                                                   monkeypatch,
+                                                   refresh_regime):
+    writes = refresh_regime("driver")
+    _reader_mid_refresh_is_consistent_snapshot(spark, tmp_path, monkeypatch)
+    assert len(writes) == 2
+
+
+def test_reader_mid_refresh_is_consistent_snapshot_spark_regime(
+        spark, tmp_path, monkeypatch, refresh_regime):
+    """The torn state and its healing written by the Spark path."""
+    writes = refresh_regime("spark")
+    _reader_mid_refresh_is_consistent_snapshot(spark, tmp_path, monkeypatch)
+    assert not writes

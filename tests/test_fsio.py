@@ -55,3 +55,31 @@ def test_jvm_branch_large_payload(spark, tmp_path, monkeypatch):
     text = "ğüşiöç" * 40000  # ~480 KB utf-8
     fsio.write_text(spark, p, text)
     assert fsio.read_text(spark, p) == text
+
+
+@pytest.mark.parametrize("branch", ["local", "jvm"])
+def test_column_stats_both_branches(spark, tmp_path, monkeypatch, branch):
+    """Per-file (max, rows) of a column, from footers on a local root and
+    from one Spark aggregate otherwise: a file without statistics is read
+    for the column, a file without the column has max None, and hidden or
+    ``_temporary`` files, torn ones included, are not data."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / branch
+    os.makedirs(root / "_temporary" / "0")
+    ids = pa.array(list(range(10)), pa.int64())
+    pq.write_table(pa.table({"doc_id": ids}), str(root / "a.parquet"))
+    pq.write_table(pa.table({"doc_id": pa.array([20, None, 24], pa.int64())}),
+                   str(root / "b.parquet"), write_statistics=False)
+    pq.write_table(pa.table({"x": [1, 2, 3]}), str(root / "c.parquet"))
+    for torn in (root / ".d.parquet.tmp", root / "_temporary/0/e.parquet"):
+        torn.write_bytes(b"PAR1 torn")
+    if branch == "jvm":
+        monkeypatch.setattr(fsio, "local_path", lambda p: None)
+    got = {os.path.basename(f): v
+           for f, v in fsio.column_stats(spark, str(root), "doc_id").items()}
+    assert got == {"a.parquet": (9, 10), "b.parquet": (24, 3),
+                   "c.parquet": (None, 3)}
+    assert fsio.column_max_count(spark, str(root), "doc_id") == (24, 16)
+    assert fsio.column_stats(spark, str(tmp_path / "missing"), "doc_id") == {}

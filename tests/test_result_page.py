@@ -449,7 +449,9 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     base and a delta row — cost no Spark job and resolve exactly as pruned
     mode's lookup job resolves them. A page of never-seen terms on a
     reader that has served nothing yet costs no job, and neither does a
-    batch of them under the cap."""
+    batch of them under the cap. Opening a memory-mode reader costs no
+    job either: its lexicon is a pyarrow read, and the Spark blocks frame
+    is built only when a distributed regime needs it."""
     ix = tiny_index[0] if which == "tiny" else delta_index
     idx = BM25Index(spark, ix)
     pruned = BM25Index(spark, ix, tstats_mode="pruned")
@@ -466,7 +468,9 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     assert len(got) == len(terms) - 1
     assert got == pruned._term_meta(terms)
 
-    fresh = BM25Index(spark, ix)
+    fresh, n = _jobs(spark, "lexicon-open-" + which,
+                     lambda: BM25Index(spark, ix))
+    assert n == 0 and fresh._lexicon == idx._lexicon
     unseen = list(dict.fromkeys(multi + vocab))
     page = " ".join(unseen[:2])
     rows, n = _jobs(spark, "lexicon-page-" + which,
@@ -477,6 +481,66 @@ def test_memory_lexicon_lookups_launch_no_job(spark, tiny_index, delta_index,
     rows, n = _jobs(spark, "lexicon-batch-" + which,
                     lambda: _collect_built(fresh.search_many(qs, k=10)))
     assert rows and n == 0
+
+
+def test_driver_refresh_writes_sparks_files(spark, delta_index, tmp_path,
+                                           monkeypatch, refresh_regime):
+    """A driver refresh and a Spark refresh of the same ingest, on copies
+    of one index, write the same index: blocks equal in every field and
+    in their bytes, the same term_stats rows and meta, the same types from
+    ``spark.read.parquet`` of the mixed base and delta directories, and
+    the same answers from ``search``, ``search_with_meta`` and
+    ``search_many`` in the driver and in the distributed regimes."""
+    import json
+
+    from search_engine_tr_spark.operators.query_bm25 import _TSTATS_SCHEMA
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    pre = shutil.copytree(delta_index, str(tmp_path / "pre"))
+    new_docs = inc.incremental_index_update(
+        spark, _pages(spark, gen_pages(12, seed=61)), pre)["new_docs"]
+    assert new_docs > 0
+    ixs = {}
+    for regime in ("driver", "spark"):
+        ixs[regime] = shutil.copytree(pre, str(tmp_path / regime))
+        writes = refresh_regime(regime)
+        assert inc.refresh_derived_delta(spark, ixs[regime])[
+            "delta_docs"] == new_docs
+        assert bool(writes) == (regime == "driver")
+    drv, spk = ixs["driver"], ixs["spark"]
+
+    def blocks(ix):
+        pdf = spark.read.parquet(ix + "/blocks").toPandas()
+        pdf["block"] = pdf["block"].map(bytes)
+        return pdf.sort_values(["term", "shard", "max_doc_id"]) \
+            .reset_index(drop=True)
+
+    def term_stats(ix):
+        return (spark.read.schema(_TSTATS_SCHEMA).parquet(ix + "/term_stats")
+                .toPandas().sort_values(["term", "gen"])
+                .reset_index(drop=True))
+
+    got = blocks(drv)
+    assert got.equals(blocks(spk)) and got["max_doc_id"].max() > \
+        blocks(delta_index)["max_doc_id"].max()
+    assert term_stats(drv).equals(term_stats(spk))
+    with open(drv + "/meta.json") as a, open(spk + "/meta.json") as b:
+        assert json.load(a) == json.load(b)
+    # term_stats only merged: unmerged, Spark takes the schema of whichever
+    # footer it samples, a base file's (no gen) or a delta file's
+    for table, merge in (("blocks", "false"), ("blocks", "true"),
+                         ("term_stats", "true")):
+        assert (spark.read.option("mergeSchema", merge)
+                .parquet(f"{drv}/{table}").dtypes
+                == spark.read.option("mergeSchema", merge)
+                .parquet(f"{spk}/{table}").dtypes), (table, merge)
+
+    for cap in (DRIVER, DISTRIBUTED):
+        assert _answers(spark, drv, cap, monkeypatch) == \
+            _answers(spark, spk, cap, monkeypatch)
+        batches = [BM25Index(spark, ix).search_many(BATCH, k=10).collect()
+                   for ix in (drv, spk)]
+        assert batches[0] == batches[1] and batches[0]
 
 
 def test_memory_reader_persists_nothing(spark, delta_index, tmp_path):

@@ -28,7 +28,7 @@ def _results(spark, index_dir, queries, k=50):
 QUERIES = ["haber", "istanbul spor", "ankara"]
 
 
-def test_stream_ingest_end_to_end(spark, tmp_path):
+def _stream_ingest_end_to_end(spark, tmp_path):
     pages = gen_pages(60, seed=11)
     src = str(tmp_path / "pages")
     ix = str(tmp_path / "ix")
@@ -83,6 +83,20 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
     assert _link_rows(ix) == _link_rows(fresh_ix)
     wave2_urls = {p["url"] for p in pages[40:60]}
     assert wave2_urls & {s for (s, *_) in _link_rows(ix)}  # non-vacuous
+
+
+def test_stream_ingest_end_to_end(spark, tmp_path, refresh_regime):
+    writes = refresh_regime("driver")
+    _stream_ingest_end_to_end(spark, tmp_path)
+    assert writes
+
+
+def test_stream_ingest_end_to_end_spark_regime(spark, tmp_path,
+                                               refresh_regime):
+    """The end-to-end drains with every delta refresh on the Spark path."""
+    writes = refresh_regime("spark")
+    _stream_ingest_end_to_end(spark, tmp_path)
+    assert not writes
 
 
 def test_stream_ingest_heals_stale_derived(spark, tmp_path):
@@ -220,7 +234,7 @@ def test_zero_token_pages_do_not_loop_rebuilds(spark, tmp_path):
     assert s2["new_docs"] == 0 and "n_docs" not in s2
 
 
-def test_crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch):
+def _crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch):
     """Crash inside refresh_derived_delta AFTER its term_stats/blocks
     appends but BEFORE the meta commit. A naive replay would fold the same
     delta twice — doubling every touched term's df and scoring the delta
@@ -255,6 +269,15 @@ def test_crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch):
     assert os.path.exists(os.path.join(ix, "_derived_intent.json"))
     assert spark.read.parquet(os.path.join(ix, "doc_map")).count() == 50
 
+    _assert_replay_exact(spark, ix, pages, tmp_path)
+
+
+def _assert_replay_exact(spark, ix, pages, tmp_path):
+    """The replayed refresh of a crashed one folded the 10-page batch
+    exactly once: its intent is gone, every posting sits in one block, df
+    is not doubled, and search equals a from-scratch build of ``pages``."""
+    from search_engine_tr_spark.streaming import incremental as inc
+
     m = inc.refresh_derived_delta(spark, ix)
     assert m["delta_docs"] == 10
     assert not os.path.exists(os.path.join(ix, "_derived_intent.json"))
@@ -280,7 +303,109 @@ def test_crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch):
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
 
 
-def test_delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
+def test_crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch,
+                                                refresh_regime):
+    writes = refresh_regime("driver")
+    _crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch)
+    assert writes
+
+
+def test_crash_in_delta_refresh_no_double_count_spark_regime(
+        spark, tmp_path, monkeypatch, refresh_regime):
+    """The crashed refresh and its replay on the Spark path."""
+    writes = refresh_regime("spark")
+    _crash_in_delta_refresh_no_double_count(spark, tmp_path, monkeypatch)
+    assert not writes
+
+
+def _ingest_unrefreshed(spark, tmp_path, seed=29):
+    """A 40-page build plus a committed 10-page ingest whose derived
+    refresh has not run. → (index dir, all 50 pages)."""
+    from search_engine_tr_spark.streaming.incremental import \
+        incremental_index_update
+
+    pages = gen_pages(50, seed=seed)
+    ix = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pages[:40],
+                                             schema=pages_schema()),
+                ix, n_shards=4, term_buckets=8)
+    incremental_index_update(
+        spark, spark.createDataFrame(pages[40:], schema=pages_schema()), ix)
+    return ix, pages
+
+
+def test_crash_between_driver_blocks_and_term_stats(spark, tmp_path,
+                                                    monkeypatch,
+                                                    refresh_regime):
+    """A driver-regime refresh that crashes after publishing its blocks
+    files and before its first term_stats file leaves delta blocks above
+    the committed mark and no delta term_stats row. The replay rolls the
+    blocks back by their footers and refolds exactly."""
+    import pytest
+
+    from search_engine_tr_spark.plans.index_build import load_meta
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    writes = refresh_regime("driver")
+    ix, pages = _ingest_unrefreshed(spark, tmp_path)
+    real_publish = inc._publish
+
+    def failing(arrow, table_dir, bucket, table):
+        if table_dir.endswith("term_stats"):
+            raise RuntimeError("injected crash before term_stats")
+        return real_publish(arrow, table_dir, bucket, table)
+
+    monkeypatch.setattr(inc, "_publish", failing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        inc.refresh_derived_delta(spark, ix)
+    monkeypatch.setattr(inc, "_publish", real_publish)
+
+    dmax = load_meta(ix, spark)["derived_max_doc_id"]
+    assert spark.read.parquet(os.path.join(ix, "blocks")) \
+        .agg({"max_doc_id": "max"}).collect()[0][0] > dmax
+    assert "gen" not in spark.read.option("mergeSchema", "true") \
+        .parquet(os.path.join(ix, "term_stats")).columns
+    _assert_replay_exact(spark, ix, pages, tmp_path)
+    assert len(writes) == 2
+
+
+def test_leftover_temp_file_is_not_data(spark, tmp_path, monkeypatch,
+                                        refresh_regime):
+    """A driver-regime refresh that crashes while writing a file leaves
+    that file under its temporary name. Spark and pyarrow readers skip
+    it, the replay's rollback does not parse it as data (a torn parquet
+    file would fail to open) but removes it as debris, and the refold is
+    exact."""
+    import pytest
+
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    writes = refresh_regime("driver")
+    ix, pages = _ingest_unrefreshed(spark, tmp_path)
+    before = _results(spark, ix, QUERIES)
+    real_write = inc.pq.write_table
+
+    def torn(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise RuntimeError("injected crash mid-write")
+
+    monkeypatch.setattr(inc.pq, "write_table", torn)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        inc.refresh_derived_delta(spark, ix)
+    monkeypatch.setattr(inc.pq, "write_table", real_write)
+
+    tmps = [os.path.join(d, f) for d, _, fs in os.walk(ix) for f in fs
+            if inc._is_tmp(f)]
+    assert len(tmps) == 1 and "/blocks/term_bucket=" in tmps[0]
+    assert spark.read.parquet(os.path.join(ix, "blocks")).count() > 0
+    assert _results(spark, ix, QUERIES) == before
+    _assert_replay_exact(spark, ix, pages, tmp_path)
+    assert not os.path.exists(tmps[0])
+    assert len(writes) == 2
+
+
+def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
                                                     monkeypatch):
     """A DIRECT refresh_derived_delta call while a crashed ingest's intent
     is still live must not fold the crashed batch's orphan postings (ids
@@ -324,6 +449,22 @@ def test_delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
     build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
                 fresh_ix, n_shards=4, term_buckets=8)
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
+
+
+def test_delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
+                                                    monkeypatch,
+                                                    refresh_regime):
+    writes = refresh_regime("driver")
+    _delta_refresh_ignores_uncommitted_postings(spark, tmp_path, monkeypatch)
+    assert writes
+
+
+def test_delta_refresh_ignores_uncommitted_postings_spark_regime(
+        spark, tmp_path, monkeypatch, refresh_regime):
+    """The uncommitted-postings bound on the Spark path."""
+    writes = refresh_regime("spark")
+    _delta_refresh_ignores_uncommitted_postings(spark, tmp_path, monkeypatch)
+    assert not writes
 
 
 def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
