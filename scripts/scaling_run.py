@@ -47,9 +47,10 @@ def cpu_microbench() -> dict[int, float]:
 
 
 def worker(cores: int, pages_path: str, out_dir: str) -> None:
-    from search_engine_tr_spark.functions.text import tokenize_udf
     from search_engine_tr_spark.operators.query_bm25 import BM25Index
-    from search_engine_tr_spark.plans.index_build import build_index
+    from search_engine_tr_spark.plans.index_build import (
+        build_index, postings_from_pages)
+    from search_engine_tr_spark.plans.docids import assign_doc_ids
     from search_engine_tr_spark.session import get_spark
     from search_engine_tr_spark.sources.synth import reference_queries
 
@@ -68,7 +69,8 @@ def worker(cores: int, pages_path: str, out_dir: str) -> None:
     pages = spark.read.parquet(pages_path)
     # warm JVM + python workers before timing (on a real cluster executor
     # startup amortizes over the job stream; we measure steady-state)
-    pages.limit(1000).select(tokenize_udf("html")).count()
+    head = pages.limit(1000)
+    postings_from_pages(head, assign_doc_ids(head)).count()
     shutil.rmtree(out_dir, ignore_errors=True)
     t0 = time.monotonic()
     metrics = build_index(spark, pages, out_dir, n_shards=max(cores, 8),

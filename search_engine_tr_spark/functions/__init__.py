@@ -1,6 +1,5 @@
 from .text import (  # noqa: F401
     extract_text_udf,
-    tokenize_udf,
     extract_meta_udf,
     extract_links_udf,
     normalize_query,

@@ -19,7 +19,6 @@ from pyspark.sql.functions import pandas_udf
 from ..oracle.htmltext import extract_links as _o_links
 from ..oracle.htmltext import extract_text as _o_extract
 from ..oracle.htmltext import parse_document as _o_parse
-from ..oracle.htmltext import tokenize as _o_tokenize
 
 
 def _decode(b) -> str:
@@ -34,19 +33,6 @@ def _decode(b) -> str:
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """html binary → byte-identical extracted text (crawler.py:113-168)."""
     return html.map(lambda b: _o_extract(_decode(b)))
-
-
-_TOKEN_TYPE = T.ArrayType(T.StructType([
-    T.StructField("word", T.StringType(), False),
-    T.StructField("loc", T.IntegerType(), False),
-    T.StructField("tag", T.StringType(), False),
-]))
-
-
-@pandas_udf(_TOKEN_TYPE)
-def tokenize_udf(html: pd.Series) -> pd.Series:
-    """html binary → positional occurrences (crawler.py:217-245)."""
-    return html.map(lambda b: _o_tokenize(_decode(b)))
 
 
 _META_TYPE = T.StructType([

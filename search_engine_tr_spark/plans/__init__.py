@@ -2,8 +2,7 @@ from .docids import assign_doc_ids  # noqa: F401
 from .index_build import (  # noqa: F401
     build_index,
     extract_pages,
-    occurrences_from_pages,
-    postings_from_occurrences,
+    postings_from_pages,
     IndexPaths,
 )
 from .stats import corpus_stats  # noqa: F401

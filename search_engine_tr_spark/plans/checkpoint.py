@@ -88,27 +88,32 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
                           input_ref: str | None = None) -> dict:
     """Chunked, resumable variant of plans.index_build.build_index.
 
-    Chunking key = pmod(xxhash64(url), n_chunks): a document's postings are
-    computed entirely within its chunk (groupBy(doc_id, term) never crosses
-    chunks), so chunks are independent and idempotent. docID assignment runs
-    over the FULL snapshot first (its own checkpointed step) so ids are
-    identical regardless of chunk interleaving — the resume-bit-identical
-    invariant (SURVEY.md §7.3).
+    Chunking key = pmod(xxhash64(url), n_chunks). Each chunk runs
+    ``index_build.postings_from_pages`` — the build's own map-only kernel,
+    so a document's postings come from its one page row and chunks are
+    independent and idempotent — and writes them under
+    ``postings/chunk=N``. docID assignment runs over the FULL snapshot
+    first (its own checkpointed step) so ids are identical regardless of
+    chunk interleaving — the resume-bit-identical invariant (SURVEY.md
+    §7.3). Row counts for the manifest come from the parquet footers.
 
     Lineage: the manifest records the input snapshot — the Iceberg snapshot
     id when ``input_ref`` is a catalog table (sources.catalog), else a
     content fingerprint — and a RESUME against different input raises
     instead of silently mixing two snapshots' postings.
 
-    The finalize step packs and writes blocks and term_stats with
-    ``index_build.write_derived``, the same writer as ``build_index``, so
-    both builds lay out the derived tables identically.
+    The finalize step writes blocks and term_stats with
+    ``index_build.write_derived`` and meta.json with
+    ``index_build.write_build_meta``, the writers ``build_index`` uses, so
+    both builds give the same postings, derived tables and meta keys
+    (``build_sec`` is this call's wall time).
     """
     from . import fsio
     from .docids import assign_doc_ids
-    from .index_build import IndexPaths, occurrences_from_pages, \
-        postings_from_occurrences, write_derived
+    from .index_build import IndexPaths, postings_from_pages, \
+        write_build_meta, write_derived
 
+    t0 = time.monotonic()
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     manifest = Manifest(os.path.join(out_dir, "manifest.json"))
@@ -137,7 +142,8 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     if not manifest.step_done("doc_map"):
         dm = assign_doc_ids(pages)
         dm.write.mode("overwrite").parquet(paths.doc_map)
-        manifest.mark_step("doc_map", rows=spark.read.parquet(paths.doc_map).count())
+        manifest.mark_step("doc_map", rows=fsio.column_max_count(
+            spark, paths.doc_map, "doc_id")[1])
     doc_map = spark.read.parquet(paths.doc_map)
 
     chunked = pages.withColumn(
@@ -145,12 +151,9 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     def do_chunk(cid: int) -> dict:
         part = chunked.filter(F.col("_chunk") == cid).drop("_chunk")
-        occ = occurrences_from_pages(part)
-        postings = postings_from_occurrences(occ, doc_map)
-        (postings.write.mode("overwrite")
-         .parquet(os.path.join(paths.postings, f"chunk={cid}")))
-        n = spark.read.parquet(os.path.join(paths.postings, f"chunk={cid}")).count()
-        return {"postings": n}
+        out = os.path.join(paths.postings, f"chunk={cid}")
+        postings_from_pages(part, doc_map).write.mode("overwrite").parquet(out)
+        return {"postings": fsio.column_max_count(spark, out, "doc_id")[1]}
 
     summary = run_resumable_partitions(manifest, list(range(n_chunks)), do_chunk)
 
@@ -159,20 +162,8 @@ def build_index_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
             *[os.path.join(paths.postings, f"chunk={c}") for c in range(n_chunks)]
         ).drop("chunk")
         stats = write_derived(spark, postings, paths, n_shards, term_buckets)
-        dm_max, dm_rows = fsio.column_max_count(spark, paths.doc_map,
-                                                "doc_id")
-        meta = {
-            "n_docs": stats.n_docs, "avgdl": stats.avgdl,
-            "total_postings": stats.total_postings,
-            "n_pages_mapped": dm_rows,
-            # keep the delta-refresh contract keys consistent with
-            # build_index/rebuild_derived, or the first incremental update
-            # on a resumable-built index degrades to a full rebuild
-            "derived_max_doc_id": -1 if dm_max is None else dm_max,
-            "n_shards": n_shards, "term_buckets": term_buckets,
-            "k1": 1.2, "b": 0.75,
-        }
-        fsio.write_json(spark, paths.meta, meta)
+        meta = write_build_meta(spark, paths, stats, n_shards, term_buckets,
+                                time.monotonic() - t0)
         manifest.mark_step("finalize", **{k: v for k, v in meta.items()
                                           if isinstance(v, (int, float))})
     return summary

@@ -77,7 +77,11 @@ def compact_parquet(spark: SparkSession, path: str, target_mb: int = 128,
                 "bytes": total, "skipped": True}
 
     if partition_by:
-        df = spark.read.parquet(path)
+        # mergeSchema: files of one partitioned table may carry different
+        # columns (term_stats' delta files add ``gen``, older blocks files
+        # lack ``avgdl0``); a plain read takes one footer's schema and the
+        # rewrite would drop the other files' extra columns
+        df = spark.read.option("mergeSchema", "true").parquet(path)
         writer = (df.repartition(n_out, *partition_by)
                   .write.mode("overwrite").partitionBy(*partition_by))
     else:

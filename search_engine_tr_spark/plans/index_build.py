@@ -1,4 +1,4 @@
-"""Inverted-index build: pages → occurrences → postings → posting blocks.
+"""Inverted-index build: pages → postings → posting blocks.
 
 Spark-first layout (vs the reference's one-DB-row-per-occurrence,
 indexer.py:28-38):
@@ -23,9 +23,10 @@ term run of one shard. Skew ratios (max/mean postings per bucket and per
 shard) are read off the written blocks and reported in the build metrics.
 
 Scale notes (100 TB / 1000 executors):
-- tokenize+explode is a map-only stage (no shuffle) feeding a partial-agg
-  groupBy — the only wide exchanges are groupBy(doc_id, term) and the
-  (term_bucket, shard) repartition for block packing.
+- pages → postings is one map-only stage (``postings_from_pages``: the
+  doc_map join, then tokenize and per-(doc, term) counts in one kernel);
+  the only exchange keyed on terms is the (term_bucket, shard)
+  repartition for block packing.
 - blocks parquet is written with data-change-friendly deterministic content;
   rewriting a shard is idempotent (resume support in checkpoint.py).
 """
@@ -46,7 +47,7 @@ from pyspark.sql import types as T
 
 from ..functions.codec import BLOCK_SIZE, encode_block
 from ..functions.text import (extract_links_udf, extract_meta_udf,
-                              extract_text_udf, tokenize_udf)
+                              extract_text_udf)
 from ..oracle.refscore import BM25_B, BM25_K1
 from . import fsio
 from .docids import assign_doc_ids
@@ -95,36 +96,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return pages.withColumn("text", extract_text_udf(F.col("html")))
 
 
-def occurrences_from_pages(pages: DataFrame) -> DataFrame:
-    """pages → (url, word, loc, tag), empty-body guard per indexer.py:19-22."""
-    toks = (pages
-            .filter(F.col("html").isNotNull())
-            .select("url", F.explode(tokenize_udf(F.col("html"))).alias("t")))
-    return toks.select(
-        "url",
-        F.col("t.word").alias("word"),
-        F.col("t.loc").alias("loc"),
-        F.col("t.tag").alias("tag"),
-    )
-
-
-def postings_from_occurrences(occ: DataFrame, doc_map: DataFrame) -> DataFrame:
-    """(doc_id, term, tf, positions, tags) — A1: positions sorted ascending,
-    tags aligned to positions (struct-sort keeps pairs together)."""
-    joined = occ.join(doc_map, "url")
-    return (joined
-            .groupBy("doc_id", F.col("word").alias("term"))
-            .agg(
-                F.count("*").cast("int").alias("tf"),
-                F.sort_array(F.collect_list(F.struct("loc", "tag"))).alias("_occ"),
-            )
-            .select(
-                "doc_id", "term", "tf",
-                F.col("_occ.loc").alias("positions"),
-                F.col("_occ.tag").alias("tags"),
-            ))
-
-
 _POSTINGS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
     T.StructField("term", T.StringType(), False),
@@ -138,15 +109,13 @@ def _postings_rows_batches(batches):
     """mapInPandas kernel: (doc_id, html) batches → postings rows.
 
     A document's occurrences all live in ITS OWN input row (the tokenizer
-    is per-page), so the per-(doc, term) aggregation is row-local — the
-    round-5/early-r6 shape exploded one row per occurrence and shipped the
-    whole occurrence stream (positions, tags) through a wide
-    groupBy(doc_id, term) exchange to reassemble what this kernel builds
-    in place (guide §2.4: remove shuffles outright). Occurrence order is
-    the tokenizer's global location counter (strictly increasing), so
-    per-term (loc, tag) pairs appended in emission order equal the old
-    ``sort_array(struct(loc, tag))`` output exactly. Module-level so every
-    caller pickles the identical function (plan canonicalization)."""
+    is per-page), so the per-(doc, term) aggregation is row-local: no
+    occurrence ever crosses an exchange. Occurrence order is the
+    tokenizer's global location counter (strictly increasing), so per-term
+    (loc, tag) pairs appended in emission order are sorted by position
+    (A1). Pages with a NULL body are skipped and pages with no tokens emit
+    nothing (the empty-body guard, indexer.py:19-22). Module-level so
+    every caller pickles the identical function (plan canonicalization)."""
     from ..oracle.htmltext import tokenize
 
     for pdf in batches:
@@ -183,14 +152,13 @@ def _postings_rows_batches(batches):
 
 
 def postings_from_pages(pages: DataFrame, doc_map: DataFrame) -> DataFrame:
-    """Same rows as ``postings_from_occurrences(occurrences_from_pages(
-    pages), doc_map)``: the doc_map join happens BEFORE tokenization (one
-    row per PAGE crosses the join, guide §3.3), and the per-(doc, term)
-    aggregation runs INSIDE the tokenize kernel (``_postings_rows_batches``)
-    — a document's occurrences are row-local, so the flat occurrence
-    stream never crosses an exchange at all (the pre-r6 shape shuffled
-    every (word, loc, tag) occurrence through a groupBy). Same tokenizer,
-    same empty-body guard, same (loc-ordered) positions/tags."""
+    """(doc_id, term, tf, positions, tags): the one way pages become
+    postings (build_index, the resumable build's chunks and the ingest).
+    The doc_map join happens BEFORE tokenization, so one row per PAGE
+    crosses the join (guide §3.3), and the per-(doc, term) aggregation
+    runs inside the tokenize kernel (``_postings_rows_batches``): the plan
+    is map-only, with no aggregate and no per-token shuffle. A url that
+    appears twice in ``pages`` yields one row set per copy."""
     with_ids = (pages
                 .filter(F.col("html").isNotNull())
                 .join(doc_map, "url")
@@ -353,111 +321,14 @@ def _max_over_mean(counts: dict) -> float:
     return max(counts.values()) / (sum(counts.values()) / len(counts))
 
 
-def materialize_doc_meta(pages: DataFrame, doc_map: DataFrame,
-                         out_path: str, mode: str = "overwrite") -> None:
-    """(doc_id, url, title, description, keywords) — the result-page
-    metadata the reference attaches to every hit (src/modules/pagerank.py:
-    119-126, document_search_client_CLI.py:57-61). ``mode='append'`` is
-    the incremental-ingest form (new docs only)."""
-    (pages.select("url", extract_meta_udf(F.col("html")).alias("m"))
-     .join(doc_map, "url")
-     .select("doc_id", "url",
-             F.col("m.title").alias("title"),
-             F.col("m.description").alias("description"),
-             F.col("m.keywords").alias("keywords"))
-     .write.mode(mode).parquet(out_path))
-
-
-def materialize_links(pages: DataFrame, out_path: str,
-                      mode: str = "overwrite") -> None:
-    """(source_url, link_type, target_url, anchor_text) — the backlinks
-    table the reference's crawler persists and backlink_analyser.py:29-62
-    consumes. One explode over the Arrow-batched link extractor; map-only."""
-    (pages.select(
-        F.col("url").alias("source_url"),
-        F.explode(extract_links_udf(F.col("url"), F.col("html"))).alias("l"))
-     .select("source_url",
-             F.col("l.type").alias("link_type"),
-             F.col("l.href").alias("target_url"),
-             F.col("l.anchor_text").alias("anchor_text"))
-     .write.mode(mode).parquet(out_path))
-
-
-def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
-                n_shards: int = 32, term_buckets: int = 64,
-                write_text: bool = True, write_meta: bool = True,
-                write_links: bool = True) -> dict:
-    """Full build. Writes all index tables under ``out_dir``; returns metrics.
-
-    doc_map and postings are written here; blocks and term_stats by
-    ``write_derived`` (the sorted-merge packer). The metrics, also written
-    to meta.json, carry the corpus stats and the skew ratios
-    ``skew_term_bucket``/``skew_shard`` (max/mean postings per key).
-
-    ``write_text=True`` also materializes the input_hint contract column —
-    the byte-identical extracted ``text`` per url — as a pages_text table
-    (url, text, lang). This is part of the job, not an extra: the input
-    table arrives with text=NULL and the engine must fill it.
-
-    ``write_meta``/``write_links`` materialize the result-metadata and
-    backlink tables (doc_meta, links) so the standing authority pipeline
-    (plans.backlinks.refresh_domain_scores → search_blended /
-    reference_rank) runs off this build with no hand-assembly.
-    """
-    paths = IndexPaths(out_dir)
-    t0 = time.monotonic()
-
-    # guide §2.5: an under-split pages input (e.g. one unsplittable parquet
-    # row group) would pin every UDF stage below — extract, tokenize, link
-    # parse — to one task; the widen is a no-op when pages is already
-    # split, i.e. on any real corpus
-    from ..session import ensure_scan_parallelism
-    pages = ensure_scan_parallelism(pages)
-
-    # pages_text depends only on the pages scan — run its extract+write in
-    # a driver thread CONCURRENT with the doc_map/postings chain (guide
-    # §2.6: overlap independent jobs so one job's task tail back-fills
-    # with the next job's tasks). Spark schedules concurrent jobs FIFO;
-    # errors propagate at the join below.
-    text_thread, text_err = None, []
-    if write_text:
-        import threading
-
-        def _write_text() -> None:
-            try:
-                spark.sparkContext.setJobDescription("build: pages_text")
-                (pages.select("url",
-                              extract_text_udf(F.col("html")).alias("text"),
-                              "lang")
-                 .write.mode("overwrite").parquet(paths.pages_text))
-            except BaseException as e:  # re-raised on the main thread
-                text_err.append(e)
-
-        text_thread = threading.Thread(target=_write_text,
-                                       name="build-pages-text")
-        text_thread.start()
-
-    doc_map = assign_doc_ids(pages)
-    doc_map.write.mode("overwrite").parquet(paths.doc_map)
-    doc_map = spark.read.parquet(paths.doc_map)
-
-    if write_meta:
-        materialize_doc_meta(pages, doc_map, paths.doc_meta)
-    if write_links:
-        materialize_links(pages, paths.links)
-
-    postings = postings_from_pages(pages, doc_map)
-    postings.write.mode("overwrite").parquet(paths.postings)
-    postings = read_postings(spark, paths.postings)
-
-    if text_thread is not None:
-        text_thread.join()
-        if text_err:
-            raise text_err[0]
-
-    stats = write_derived(spark, postings, paths, n_shards, term_buckets)
-
-    elapsed = time.monotonic() - t0
+def write_build_meta(spark: SparkSession, paths: IndexPaths,
+                     stats: CorpusStats, n_shards: int, term_buckets: int,
+                     elapsed: float) -> dict:
+    """Write meta.json of a full build and return it: the corpus stats
+    ``write_derived`` packed under, the delta-refresh keys, the BM25 and
+    layout parameters, throughput, and the skew ratios
+    ``skew_term_bucket``/``skew_shard`` (max/mean postings per key). The
+    one meta writer of build_index and the resumable build's finalize."""
     n_pages = stats.n_docs  # every non-empty page is a doc
     # n_pages_mapped counts doc_map rows, which INCLUDES zero-token pages
     # (in doc_map but never in postings) — it is the convergent staleness
@@ -496,6 +367,110 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
     metrics["skew_shard"] = _max_over_mean(per_shard)
     fsio.write_json(spark, paths.meta, metrics)
     return metrics
+
+
+def materialize_doc_meta(pages: DataFrame, doc_map: DataFrame,
+                         out_path: str, mode: str = "overwrite") -> None:
+    """(doc_id, url, title, description, keywords) — the result-page
+    metadata the reference attaches to every hit (src/modules/pagerank.py:
+    119-126, document_search_client_CLI.py:57-61). ``mode='append'`` is
+    the incremental-ingest form (new docs only)."""
+    (pages.select("url", extract_meta_udf(F.col("html")).alias("m"))
+     .join(doc_map, "url")
+     .select("doc_id", "url",
+             F.col("m.title").alias("title"),
+             F.col("m.description").alias("description"),
+             F.col("m.keywords").alias("keywords"))
+     .write.mode(mode).parquet(out_path))
+
+
+def materialize_links(pages: DataFrame, out_path: str,
+                      mode: str = "overwrite") -> None:
+    """(source_url, link_type, target_url, anchor_text) — the backlinks
+    table the reference's crawler persists and backlink_analyser.py:29-62
+    consumes. One explode over the Arrow-batched link extractor; map-only."""
+    (pages.select(
+        F.col("url").alias("source_url"),
+        F.explode(extract_links_udf(F.col("url"), F.col("html"))).alias("l"))
+     .select("source_url",
+             F.col("l.type").alias("link_type"),
+             F.col("l.href").alias("target_url"),
+             F.col("l.anchor_text").alias("anchor_text"))
+     .write.mode(mode).parquet(out_path))
+
+
+def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
+                n_shards: int = 32, term_buckets: int = 64,
+                write_text: bool = True, write_meta: bool = True,
+                write_links: bool = True) -> dict:
+    """Full build. Writes all index tables under ``out_dir``; returns metrics.
+
+    doc_map and postings (``postings_from_pages``) are written here;
+    blocks and term_stats by ``write_derived`` (the sorted-merge packer)
+    and meta.json by ``write_build_meta``, which also returns it.
+
+    ``write_text=True`` also materializes the input_hint contract column —
+    the byte-identical extracted ``text`` per url — as a pages_text table
+    (url, text, lang). This is part of the job, not an extra: the input
+    table arrives with text=NULL and the engine must fill it.
+
+    ``write_meta``/``write_links`` materialize the result-metadata and
+    backlink tables (doc_meta, links) so the standing authority pipeline
+    (plans.backlinks.refresh_domain_scores → search_blended /
+    reference_rank) runs off this build with no hand-assembly.
+    """
+    paths = IndexPaths(out_dir)
+    t0 = time.monotonic()
+
+    # guide §2.5: an under-split pages input (e.g. one unsplittable parquet
+    # row group) would pin every UDF stage below — extract, tokenize, link
+    # parse — to one task; the widen is a no-op when pages is already
+    # split, i.e. on any real corpus
+    from ..session import ensure_scan_parallelism
+    pages = ensure_scan_parallelism(pages)
+
+    # pages_text depends only on the pages scan — run its extract+write in
+    # a driver thread CONCURRENT with the doc_map/postings chain (guide
+    # §2.6: overlap independent jobs so one job's task tail back-fills
+    # with the next job's tasks). Spark schedules concurrent jobs FIFO;
+    # errors propagate at the join below.
+    text_thread, text_err = None, []
+    if write_text:
+        import threading
+
+        def _write_text() -> None:
+            try:
+                spark.sparkContext.setJobDescription("build: pages_text")
+                (extract_pages(pages).select("url", "text", "lang")
+                 .write.mode("overwrite").parquet(paths.pages_text))
+            except BaseException as e:  # re-raised on the main thread
+                text_err.append(e)
+
+        text_thread = threading.Thread(target=_write_text,
+                                       name="build-pages-text")
+        text_thread.start()
+
+    doc_map = assign_doc_ids(pages)
+    doc_map.write.mode("overwrite").parquet(paths.doc_map)
+    doc_map = spark.read.parquet(paths.doc_map)
+
+    if write_meta:
+        materialize_doc_meta(pages, doc_map, paths.doc_meta)
+    if write_links:
+        materialize_links(pages, paths.links)
+
+    postings = postings_from_pages(pages, doc_map)
+    postings.write.mode("overwrite").parquet(paths.postings)
+    postings = read_postings(spark, paths.postings)
+
+    if text_thread is not None:
+        text_thread.join()
+        if text_err:
+            raise text_err[0]
+
+    stats = write_derived(spark, postings, paths, n_shards, term_buckets)
+    return write_build_meta(spark, paths, stats, n_shards, term_buckets,
+                            time.monotonic() - t0)
 
 
 def load_meta(out_dir: str, spark: SparkSession | None = None) -> dict:

@@ -1,1 +1,1 @@
-from .incremental import incremental_index_update, stream_pages_to_postings  # noqa: F401
+from .incremental import incremental_index_update  # noqa: F401

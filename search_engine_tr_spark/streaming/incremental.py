@@ -8,11 +8,10 @@ The reference re-tokenizes EVERY page every 30 minutes (task_scheduler.py:
   new urls, appends their postings, and rebuilds the (cheap) derived
   tables. This is the availableNow-equivalent the north rule asks for
   (checkpoint/resume, not a long-running stream).
-- ``stream_pages_to_postings``: a true Structured Streaming pipeline
-  (readStream → tokenize/explode/aggregate per batch → append) for
-  append-only pages directories, with exactly-once bookkeeping from the
-  stream checkpoint. Per-batch groupBy(doc, term) is correct because a
-  page row is a complete document (url is unique in the table).
+- ``stream_ingest_index``: a Structured Streaming (availableNow) drain of
+  an append-only pages directory into the queryable index — each
+  micro-batch is an ``incremental_index_update``, exactly once across
+  restarts, followed by one delta refresh of the derived tables.
 """
 
 from __future__ import annotations
@@ -33,8 +32,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..plans import fsio
 from ..plans.docids import assign_doc_ids
 from ..plans.index_build import _BLOCK_SCHEMA, _POSTINGS_SCHEMA, \
-    IndexPaths, occurrences_from_pages, postings_from_occurrences, \
-    postings_from_pages, read_postings
+    IndexPaths, extract_pages, postings_from_pages, read_postings
 
 
 def _intent_path(index_dir: str) -> str:
@@ -266,9 +264,8 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     if fsio.exists(spark, paths.pages_text):
         # crashed companion rows were rolled back file-granularly above,
         # so plain appends are exact — no per-batch anti-join guard needed
-        from ..functions.text import extract_text_udf
-        fresh.select("url", extract_text_udf(F.col("html")).alias("text"),
-                     "lang").write.mode("append").parquet(paths.pages_text)
+        extract_pages(fresh).select("url", "text", "lang") \
+            .write.mode("append").parquet(paths.pages_text)
     if fsio.exists(spark, paths.doc_meta):
         from ..plans.index_build import materialize_doc_meta
         materialize_doc_meta(fresh, new_ids, paths.doc_meta, mode="append")
@@ -667,32 +664,3 @@ def stream_ingest_index(spark: SparkSession, pages_dir: str, index_dir: str,
             totals["n_domains"] = s["n_domains"]
     return totals
 
-
-def stream_pages_to_postings(spark: SparkSession, pages_dir: str,
-                             out_dir: str, checkpoint_dir: str,
-                             pages_schema=None):
-    """Structured Streaming: watch ``pages_dir`` for new parquet files,
-    tokenize each micro-batch, append postings keyed by xxhash64(url)
-    (streaming mode cannot assign dense ids without external state; the
-    batch ``incremental_index_update`` is the dense-id path).
-
-    Returns the started query; callers use trigger(availableNow) semantics:
-    the query stops when current files are processed.
-    """
-    if pages_schema is None:
-        from ..sources.synth import pages_schema as ps
-        pages_schema = ps()
-    stream = (spark.readStream.schema(pages_schema).parquet(pages_dir))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        occ = occurrences_from_pages(batch_df)
-        ids = batch_df.select("url").distinct() \
-            .withColumn("doc_id", F.xxhash64("url"))
-        postings = postings_from_occurrences(occ, ids)
-        postings.write.mode("append").parquet(os.path.join(out_dir, "postings"))
-
-    return (stream.writeStream
-            .foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())

@@ -108,3 +108,45 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
     res2 = compact_parquet(spark, path, target_mb=128,
                            partition_by=["bucket"])
     assert res2["skipped"] is True
+
+
+def test_compact_term_stats_keeps_delta_gen(spark, tmp_path):
+    """A term_stats table after delta refreshes holds the build's files
+    (no ``gen`` column) and the deltas' files (with ``gen``). Compacting
+    it keeps every row's ``gen`` — a row that lost it would read as
+    committed — and leaves search results unchanged."""
+    from collections import Counter
+
+    from search_engine_tr_spark.operators.query_bm25 import (BM25Index,
+                                                             _TSTATS_SCHEMA)
+    from search_engine_tr_spark.plans.index_build import build_index
+    from search_engine_tr_spark.sources.synth import gen_pages, pages_schema
+    from search_engine_tr_spark.streaming.incremental import \
+        incremental_index_update
+
+    pages = gen_pages(60, seed=37)
+    root = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pages[:30], schema=pages_schema()),
+                root, n_shards=2, term_buckets=4, write_text=False,
+                write_links=False)
+    for lo, hi in ((30, 45), (45, 60)):
+        incremental_index_update(
+            spark, spark.createDataFrame(pages[lo:hi], schema=pages_schema()),
+            root, refresh_derived=True)
+    ts = root + "/term_stats"
+
+    def rows():
+        return Counter(tuple(r) for r in spark.read.schema(_TSTATS_SCHEMA)
+                       .parquet(ts).collect())
+
+    def results():
+        return [(r["doc_id"], round(r["score"], 9)) for r in
+                BM25Index(spark, root).search("haber spor", k=10).collect()]
+
+    before, before_results = rows(), results()
+    assert {gen is None for _t, _df, gen, _b in before} == {True, False}
+    res = compact_parquet(spark, ts, target_mb=128,
+                          partition_by=["term_bucket"])
+    assert res["skipped"] is False
+    assert rows() == before
+    assert results() == before_results

@@ -1,4 +1,4 @@
-"""PageRank power iteration vs a numpy oracle + streaming index smoke."""
+"""PageRank power iteration vs a numpy oracle."""
 
 import numpy as np
 import pytest
@@ -39,23 +39,3 @@ def test_pagerank_converges_on_cycle(spark):
     for v in got.values():
         assert v == pytest.approx(1 / 3, rel=1e-6)
 
-
-def test_streaming_postings_availablenow(spark, tmp_path):
-    from search_engine_tr_spark.sources.synth import pages_df
-    from search_engine_tr_spark.streaming.incremental import (
-        stream_pages_to_postings)
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pages_df(spark, 30, seed=5).write.parquet(pages_dir)
-    q = stream_pages_to_postings(spark, pages_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    postings = spark.read.parquet(out_dir + "/postings")
-    assert postings.count() > 0
-    assert postings.select("doc_id").distinct().count() == 30
-    # exactly-once on restart: no new files → no duplicate postings
-    n1 = postings.count()
-    q2 = stream_pages_to_postings(spark, pages_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir + "/postings").count() == n1

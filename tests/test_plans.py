@@ -2,7 +2,7 @@
 visible in the executed plan, not just intended — top-k compiles to
 TakeOrderedAndProject (no global sort), the block reader prunes partitions
 and pushes term filters, scans prune columns, small-side joins broadcast,
-and the postings aggregation does a map-side partial pass."""
+and postings are built map-only, with no aggregate or term-keyed shuffle."""
 
 import contextlib
 import io
@@ -53,6 +53,41 @@ def test_postings_kernel_is_map_only(spark):
     assert "HashAggregate" not in p
     exchanges = [ln for ln in p.splitlines() if "Exchange" in ln]
     assert all("RoundRobinPartitioning" in ln for ln in exchanges)
+
+
+def test_postings_writers_are_map_only(spark, tiny_pages_df, tiny_index,
+                                       tmp_path, monkeypatch):
+    """The engine's page → postings plans — ``postings_from_pages`` and
+    the frame each ``build_index_resumable`` chunk writes — have no
+    aggregate and no exchange keyed on a term: a document's postings come
+    from its own page row, so no token occurrence crosses a shuffle."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from search_engine_tr_spark.plans.checkpoint import build_index_resumable
+    from search_engine_tr_spark.plans.index_build import postings_from_pages
+
+    out, _ = tiny_index
+    frames = [postings_from_pages(tiny_pages_df,
+                                  spark.read.parquet(out + "/doc_map"))]
+    written = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append((path, self._df))
+        return real(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", spy)
+        build_index_resumable(spark, tiny_pages_df, str(tmp_path / "r"),
+                              n_chunks=2, n_shards=2, term_buckets=4)
+    chunks = [df for path, df in written if "chunk=" in str(path)]
+    assert len(chunks) == 2
+    for df in frames + chunks:
+        p = _plan(df, mode="simple")
+        assert "HashAggregate" not in p
+        keyed = [ln for ln in p.splitlines() if "Exchange" in ln
+                 and ("term" in ln or "word" in ln)]
+        assert not keyed, keyed
 
 
 def test_bm25_block_read_prunes_partitions_and_pushes_terms(

@@ -72,10 +72,13 @@ def test_resumed_build_bit_identical(spark, tiny_pages_df, tmp_path):
 
 def test_resumable_derived_tables_match_build_index(spark, tiny_pages_df,
                                                    tiny_index, tmp_path):
-    """The resumable finalize writes blocks and term_stats with
-    build_index's writer: the same term_stats rows and blocks as
+    """The resumable build runs build_index's postings kernel and writers:
+    the same postings rows, term_stats rows, blocks and meta.json keys as
     ``tiny_index`` (same pages, shards and buckets), one blocks file per
     term_bucket, and no doclens table."""
+    from search_engine_tr_spark.plans.index_build import (load_meta,
+                                                          read_postings)
+
     base, _ = tiny_index
     out = str(tmp_path / "resumable")
     build_index_resumable(spark, tiny_pages_df, out, n_chunks=2, n_shards=4,
@@ -85,6 +88,14 @@ def test_resumable_derived_tables_match_build_index(spark, tiny_pages_df,
         return sorted(tuple(r) for r in spark.read.parquet(
             os.path.join(root, table)).collect())
 
+    def postings(root):
+        return sorted((r["doc_id"], r["term"], r["tf"], tuple(r["positions"]),
+                       tuple(r["tags"]))
+                      for r in read_postings(spark, root + "/postings")
+                      .collect())
+
+    assert postings(out) == postings(base)
+    assert sorted(load_meta(out)) == sorted(load_meta(base))
     assert rows(out, "term_stats") == rows(base, "term_stats")
     assert rows(out, "blocks") == rows(base, "blocks")
     bucket_dirs = [d for d in os.listdir(os.path.join(out, "blocks"))
