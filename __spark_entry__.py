@@ -966,8 +966,7 @@ def _blocks_index(spark, sf_dir: str):
             docs = _t(spark, sf_dir, "documents")
             out = _scratch_dir("graft_bm25_blocks_")
             build_index(spark, _docs_as_pages(docs), out,
-                        n_shards=8, term_buckets=16, write_text=False,
-                        write_meta=False, write_links=False)
+                        n_shards=8, term_buckets=16)
             idx = BM25Index(spark, out)
             _BLOCKS_INDEX_CACHE[sf_dir] = idx
     return idx
@@ -996,9 +995,7 @@ def _blocks_index_incremental(spark, sf_dir: str):
             pages = _docs_as_pages(docs)
             even = _docs_as_pages(docs.filter(F.col("doc_id") % 2 == 0))
             out = _scratch_dir("graft_bm25_incr_")
-            build_index(spark, even, out, n_shards=8, term_buckets=16,
-                        write_text=False, write_meta=False,
-                        write_links=False)
+            build_index(spark, even, out, n_shards=8, term_buckets=16)
             m = incremental_index_update(spark, pages, out,
                                          refresh_derived=True)
             assert m["new_docs"] > 0, "incremental half was empty"

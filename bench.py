@@ -55,27 +55,15 @@ def main() -> None:
             "overwrite").parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     shutil.rmtree(OUT, ignore_errors=True)
-    # core build timed with meta/links off — row-for-row comparable with
-    # round 1; the new link-graph stages are timed separately below
     t0 = time.monotonic()
-    metrics = build_index(spark, pages, OUT, n_shards=CPUS,
-                          term_buckets=64, write_meta=False,
-                          write_links=False)
+    metrics = build_index(spark, pages, OUT, n_shards=CPUS, term_buckets=64)
     timings["index_build"] = time.monotonic() - t0
     extras["docs_per_sec"] = N_PAGES / timings["index_build"]
     extras["postings_per_sec"] = metrics["total_postings"] / timings["index_build"]
 
     # -- link-graph pipeline stages (round 2) ------------------------------
     from search_engine_tr_spark.plans.backlinks import refresh_domain_scores
-    from search_engine_tr_spark.plans.index_build import (
-        IndexPaths, materialize_doc_meta, materialize_links)
 
-    paths = IndexPaths(OUT)
-    doc_map = spark.read.parquet(paths.doc_map)
-    t0 = time.monotonic()
-    materialize_doc_meta(pages, doc_map, paths.doc_meta)
-    materialize_links(pages, paths.links)
-    timings["meta_links_build"] = time.monotonic() - t0
     t0 = time.monotonic()
     refresh_domain_scores(spark, OUT, mode="indegree")
     timings["domain_scores"] = time.monotonic() - t0

@@ -16,6 +16,13 @@ and multi-generation blocks that refresh_derived_delta appends are folded
 back into ONE generation (single df row per term, one avgdl for every
 block bound) before the layout compaction — the periodic maintenance pass
 of the incremental scheme.
+
+The job exits non-zero, before any rewrite, while a crashed ingest or
+delta refresh has left its intent marker (``_ingest_intent.json``,
+``_derived_intent.json``): its uncommitted rows sit in files of their own,
+which the next ingest or refresh deletes whole, and a rewrite would merge
+them into files with committed rows. Run the ingest or refresh again
+first.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
 
 _PARTITIONED = {"blocks": ["term_bucket"], "term_stats": ["term_bucket"]}
 _DEFAULT_TABLES = ["postings", "doc_map", "doc_meta", "links",
@@ -42,7 +50,17 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("setr-compact").getOrCreate()
+    from search_engine_tr_spark.plans import fsio
     from search_engine_tr_spark.plans.compact import compact_parquet
+    from search_engine_tr_spark.streaming.incremental import (DERIVED_INTENT,
+                                                              INGEST_INTENT)
+
+    live = [m for m in (INGEST_INTENT, DERIVED_INTENT)
+            if fsio.exists(spark, os.path.join(args.index_dir, m))]
+    if live:
+        sys.exit(f"compaction refused: {', '.join(live)} is live in "
+                 f"{args.index_dir}; run the ingest or refresh again to "
+                 f"roll the crashed attempt back first")
 
     report = {}
     if args.canonicalize:

@@ -26,8 +26,8 @@ def main() -> None:
     ap.add_argument("--urls", action="store_true")
     ap.add_argument("--meta", action="store_true")
     ap.add_argument("--snippets", action="store_true",
-                    help="url + highlighted context window per hit "
-                         "(needs the pages_text table: write_text=True)")
+                    help="url + highlighted context window per hit, "
+                         "from the index's pages_text table")
     ap.add_argument("--window", type=int, default=8)
     ap.add_argument("--phrase", action="store_true",
                     help="consecutive-position phrase match over the "

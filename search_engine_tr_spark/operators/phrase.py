@@ -97,8 +97,8 @@ def phrase_search(spark, index_dir: str, raw_phrase: str,
         # degenerate query (punctuation/whitespace only): empty results,
         # consistent with the other search modes — never a crash
         return spark.createDataFrame([], doc_map_schema)
-    from ..plans.index_build import read_postings
-    postings = read_postings(spark, paths.postings)
+    from ..plans.index_build import read_table
+    postings = read_table(spark, paths.postings)
     hits = phrase_match(postings, terms)
     top = (hits.orderBy(F.desc("n_matches"), F.asc("doc_id")).limit(k)
            .localCheckpoint(eager=True))  # k rows; avoids recompute

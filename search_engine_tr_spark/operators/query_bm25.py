@@ -73,7 +73,7 @@ from ..functions.text import normalize_query
 from ..oracle.refscore import bm25_idf
 from ..plans import fsio
 from ..plans.fsio import arrow_root as _arrow_root
-from ..plans.index_build import IndexPaths
+from ..plans.index_build import IndexPaths, read_table
 from .wand import batch_topk, exhaustive_topk, impacts_for, wand_topk
 
 _RESULT_SCHEMA = T.StructType([
@@ -677,7 +677,7 @@ class BM25Index:
                               ds.field("doc_id").isin(ids))
         else:
             rows = self._isin(
-                self._qspark.read.parquet(getattr(self.paths, table)),
+                read_table(self._qspark, getattr(self.paths, table)),
                 "doc_id", ids).select("doc_id", *cols).toPandas()
         # each hit's row position; -1 (no row) picks the appended None, the
         # null a left join gives

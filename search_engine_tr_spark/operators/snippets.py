@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.index_build import read_table
+
 
 def _make_snippet(text: str, terms: list[str], window: int) -> str | None:
     if not text:
@@ -69,13 +71,13 @@ def with_snippets(hits: DataFrame, pages_text: DataFrame, terms: list[str],
 
 def search_with_snippets(idx, raw_query: str, k: int = 10,
                          window: int = 8, mode: str = "wand") -> DataFrame:
-    """BM25Index top-k + url + highlighted snippet. Requires the index to
-    have been built with ``write_text=True`` (the pages_text table)."""
+    """BM25Index top-k + url + highlighted snippet, from the index's
+    pages_text table (every build and ingest writes it)."""
     top = idx.search_with_urls(raw_query, k, mode)
     # read through the index's AQE-off reader session like every other
     # per-query job (tiny k-row lookup; falls back for non-BM25Index idx)
-    pages_text = getattr(idx, "_qspark", idx.spark) \
-        .read.parquet(idx.paths.pages_text)
+    pages_text = read_table(getattr(idx, "_qspark", idx.spark),
+                            idx.paths.pages_text)
     terms = idx.query_terms(raw_query)
     return (with_snippets(top, pages_text, terms, window)
             .orderBy(F.desc("score"), F.asc("doc_id")))

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..operators.pagerank import (cross_domain_edges, indegree_authority,
                                   pagerank)
 from . import fsio
-from .index_build import IndexPaths
+from .index_build import IndexPaths, read_table
 
 
 def external_links(links: DataFrame) -> DataFrame:
@@ -101,7 +101,7 @@ def refresh_domain_scores(spark: SparkSession, index_dir: str,
         # and folding them while absent from meta.files would double-count
         # them on the next delta run (ADVICE r5 #1)
         links = spark.read.parquet(*files) if files \
-            else spark.read.parquet(paths.links).limit(0)
+            else read_table(spark, paths.links).limit(0)
         scores = domain_scores_from_links(links, mode, damping, max_iter) \
             .localCheckpoint()
         # gen FIRST: poisons the write window (see docstring)

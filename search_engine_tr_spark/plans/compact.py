@@ -85,12 +85,10 @@ def compact_parquet(spark: SparkSession, path: str, target_mb: int = 128,
         writer = (df.repartition(n_out, *partition_by)
                   .write.mode("overwrite").partitionBy(*partition_by))
     else:
-        # recursiveFileLookup for layout-flat tables: partition INFERENCE
-        # on a mixed layout (resumable chunk=N subdirs + flat ingest
-        # appends) silently drops the flat files — compaction would LOSE
-        # them (same hazard as plans.index_build.read_postings)
-        df = (spark.read.option("recursiveFileLookup", "true")
-              .parquet(path))
+        # layout-flat tables may mix a chunked build's chunk=N subdirs
+        # with flat ingest appends: read_table reads every file of both
+        from .index_build import read_table
+        df = read_table(spark, path)
         writer = df.repartition(n_out).write.mode("overwrite")
     writer.parquet(tmp)
 

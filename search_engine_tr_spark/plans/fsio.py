@@ -19,7 +19,8 @@ No new dependency: the JVM classes ship with pyspark.
 Two helpers serve the driver-side table IO: ``arrow_root`` resolves a root
 for ``pyarrow`` (the driver regimes of the reader and of the delta
 refresh), and ``column_stats`` reads a column's max and the row counts of
-a parquet table from its file footers instead of with a Spark job.
+a parquet table from its file footers instead of with a Spark job;
+``row_count`` reads only the row count, from the footers on any root.
 """
 
 from __future__ import annotations
@@ -85,9 +86,11 @@ def read_text(spark, path: str) -> str:
 def write_text(spark, path: str, text: str) -> None:
     """Publish ``text`` at ``path``. Local: tmp-file + ``os.rename`` (an
     atomic all-or-nothing swap — readers never see a torn file). Remote:
-    Hadoop ``create(overwrite=True)``; visibility on close."""
+    Hadoop ``create(overwrite=True)``; visibility on close. Missing parent
+    directories are created on both branches."""
     lp = local_path(path)
     if lp is not None:
+        os.makedirs(os.path.dirname(lp) or ".", exist_ok=True)
         tmp = f"{lp}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(text)
@@ -237,3 +240,24 @@ def column_max_count(spark, table_dir: str, col: str) -> tuple:
     return (max((mx for mx, _ in stats.values() if mx is not None),
                 default=None),
             sum(n for _, n in stats.values()))
+
+
+def row_count(spark, table_dir: str) -> int:
+    """Rows of the parquet table under ``table_dir`` (the files Spark
+    reads, as in ``column_stats``) from the file footers alone: pyarrow on
+    local roots, the JVM's parquet-hadoop reader on others. No Spark job."""
+    if local_path(table_dir) is not None:
+        return sum(n for _, n in column_stats(spark, table_dir, "").values())
+    fs, jpath = _jfs(spark, table_dir)
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    root, n = fs.makeQualified(jpath).toString().rstrip("/"), 0
+    for path in list_files_recursive(spark, table_dir):
+        rel = path[len(root):]
+        if rel.endswith(".parquet") and not any(
+                p.startswith(("_", ".")) for p in rel.split("/")):
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    jvm.org.apache.hadoop.fs.Path(path), conf))
+            n += reader.getRecordCount()
+            reader.close()
+    return n

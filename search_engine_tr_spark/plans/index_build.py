@@ -11,6 +11,9 @@ indexer.py:28-38):
                   parquet partitioned BY term_bucket → query-term partition
                   pruning, the scalable replacement for the reference's
                   27-way first-letter routing (src/models/db.py:105-114)
+- ``pages_text``  (url, text, lang)                extracted text (snippets)
+- ``doc_meta``    (doc_id, url, title, description, keywords)  result page
+- ``links``       (source_url, link_type, target_url, anchor_text)  backlinks
 
 Skew strategy (north rule): every term's posting list is doc-sharded into
 ``n_shards`` sub-lists (shard = pmod(xxhash64(doc_id), S)) that are merged
@@ -27,14 +30,17 @@ Scale notes (100 TB / 1000 executors):
   doc_map join, then tokenize and per-(doc, term) counts in one kernel);
   the only exchange keyed on terms is the (term_bucket, shard)
   repartition for block packing.
-- blocks parquet is written with data-change-friendly deterministic content;
-  rewriting a shard is idempotent (resume support in checkpoint.py).
+- the build runs in url-hash chunks recorded in a lineage manifest
+  (checkpoint.py): a rerun skips finished chunks, and a rewritten chunk
+  or blocks table has deterministic content, so a resumed build is
+  bit-identical.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from collections import Counter
 from dataclasses import dataclass
@@ -50,6 +56,7 @@ from ..functions.text import (extract_links_udf, extract_meta_udf,
                               extract_text_udf)
 from ..oracle.refscore import BM25_B, BM25_K1
 from . import fsio
+from .checkpoint import Manifest, input_fingerprint, run_resumable_partitions
 from .docids import assign_doc_ids
 from .stats import CorpusStats, corpus_stats, doc_lengths
 
@@ -76,19 +83,26 @@ class IndexPaths:
     def doc_meta(self) -> str: return os.path.join(self.root, "doc_meta")
     @property
     def domain_scores(self) -> str: return os.path.join(self.root, "domain_scores")
+    @property
+    def manifest(self) -> str: return os.path.join(self.root, "manifest.json")
 
 
-def read_postings(spark: SparkSession, postings_dir: str) -> DataFrame:
-    """Layout-agnostic postings read. The resumable builder writes under
+# the tables a build writes per chunk; the rest span the whole snapshot
+_CHUNKED_TABLES = ("postings", "pages_text", "doc_meta", "links")
+
+
+def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """Layout-agnostic read of a page-derived table (postings, pages_text,
+    doc_meta, links, doc_map). A chunked build writes them under
     ``chunk=N`` subdirectories while incremental ingest appends flat
     files at the table root; partition INFERENCE on that mixed layout
     silently drops the top-level files (found in optimization round 6 —
-    an appended batch became unsearchable after a resumable bootstrap).
-    ``recursiveFileLookup`` unions every file regardless of nesting and
-    skips the synthetic ``chunk`` directory column, which no reader uses.
-    """
+    an appended batch became unsearchable after a chunked bootstrap) and
+    adds a ``chunk`` column. ``recursiveFileLookup`` unions every file
+    regardless of nesting and skips the synthetic ``chunk`` column, which
+    no reader uses."""
     return (spark.read.option("recursiveFileLookup", "true")
-            .parquet(postings_dir))
+            .parquet(table_dir))
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
@@ -153,7 +167,7 @@ def _postings_rows_batches(batches):
 
 def postings_from_pages(pages: DataFrame, doc_map: DataFrame) -> DataFrame:
     """(doc_id, term, tf, positions, tags): the one way pages become
-    postings (build_index, the resumable build's chunks and the ingest).
+    postings (build_index's chunks and the ingest).
     The doc_map join happens BEFORE tokenization, so one row per PAGE
     crosses the join (guide §3.3), and the per-(doc, term) aggregation
     runs inside the tokenize kernel (``_postings_rows_batches``): the plan
@@ -277,8 +291,8 @@ def write_derived(spark: SparkSession, postings: DataFrame, paths: IndexPaths,
                   n_shards: int, term_buckets: int) -> CorpusStats:
     """Overwrite ``blocks`` and ``term_stats`` from ``postings``; returns
     the corpus stats the blocks were packed under. The one writer of the
-    full derived tables (build_index, rebuild_derived and the resumable
-    build's finalize); refresh_derived_delta appends deltas instead.
+    full derived tables (build_index's finalize and rebuild_derived);
+    refresh_derived_delta appends deltas instead.
 
     The blocks are clustered by term_bucket before the partitioned write
     (guide §6): the packer's output partitions each hold many buckets, so
@@ -328,7 +342,7 @@ def write_build_meta(spark: SparkSession, paths: IndexPaths,
     ``write_derived`` packed under, the delta-refresh keys, the BM25 and
     layout parameters, throughput, and the skew ratios
     ``skew_term_bucket``/``skew_shard`` (max/mean postings per key). The
-    one meta writer of build_index and the resumable build's finalize."""
+    one meta writer of build_index's finalize."""
     n_pages = stats.n_docs  # every non-empty page is a doc
     # n_pages_mapped counts doc_map rows, which INCLUDES zero-token pages
     # (in doc_map but never in postings) — it is the convergent staleness
@@ -401,26 +415,34 @@ def materialize_links(pages: DataFrame, out_path: str,
 
 def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
                 n_shards: int = 32, term_buckets: int = 64,
-                write_text: bool = True, write_meta: bool = True,
-                write_links: bool = True) -> dict:
-    """Full build. Writes all index tables under ``out_dir``; returns metrics.
+                n_chunks: int = 1) -> dict:
+    """The index build: writes all seven tables under ``out_dir`` and
+    returns meta.json's dict plus the ``ran``/``skipped`` chunk lists.
+    Resumable (north rule): ``manifest.json`` (``checkpoint.Manifest``)
+    records each finished step and chunk, and a rerun skips them.
 
-    doc_map and postings (``postings_from_pages``) are written here;
-    blocks and term_stats by ``write_derived`` (the sorted-merge packer)
-    and meta.json by ``write_build_meta``, which also returns it.
+    - **input**: the manifest records the input fingerprint
+      (``checkpoint.input_fingerprint``) and ``n_chunks``/``n_shards``/
+      ``term_buckets``; a rerun with other values raises.
+    - **doc_map** runs over the FULL snapshot, so ids are identical
+      however chunks interleave (SURVEY.md §7.3).
+    - **chunks**: chunk c holds the pages with pmod(xxhash64(url),
+      n_chunks) = c and writes postings, doc_meta, links and, in a driver
+      thread beside them, pages_text (the input_hint contract column)
+      under ``<table>/chunk=c``, or at the table roots when n_chunks = 1.
+      A killed chunk is rewritten whole; the manifest takes its row
+      counts from the parquet footers (``fsio.row_count``).
+    - **finalize**: blocks and term_stats by ``write_derived``, meta.json
+      by ``write_build_meta``.
 
-    ``write_text=True`` also materializes the input_hint contract column —
-    the byte-identical extracted ``text`` per url — as a pages_text table
-    (url, text, lang). This is part of the job, not an extra: the input
-    table arrives with text=NULL and the engine must fill it.
-
-    ``write_meta``/``write_links`` materialize the result-metadata and
-    backlink tables (doc_meta, links) so the standing authority pipeline
-    (plans.backlinks.refresh_domain_scores → search_blended /
-    reference_rank) runs off this build with no hand-assembly.
+    A rerun of a finished build returns its meta.json; ``build_sec`` of a
+    resumed build is its last call's wall time.
     """
     paths = IndexPaths(out_dir)
     t0 = time.monotonic()
+    manifest = Manifest(spark, paths.manifest)
+    _check_input(manifest, pages, n_chunks=n_chunks, n_shards=n_shards,
+                 term_buckets=term_buckets)
 
     # guide §2.5: an under-split pages input (e.g. one unsplittable parquet
     # row group) would pin every UDF stage below — extract, tokenize, link
@@ -429,48 +451,87 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str,
     from ..session import ensure_scan_parallelism
     pages = ensure_scan_parallelism(pages)
 
-    # pages_text depends only on the pages scan — run its extract+write in
-    # a driver thread CONCURRENT with the doc_map/postings chain (guide
-    # §2.6: overlap independent jobs so one job's task tail back-fills
-    # with the next job's tasks). Spark schedules concurrent jobs FIFO;
-    # errors propagate at the join below.
-    text_thread, text_err = None, []
-    if write_text:
-        import threading
+    def do_chunk(cid: int) -> dict:
+        part, dirs = pages, {t: getattr(paths, t) for t in _CHUNKED_TABLES}
+        if n_chunks > 1:
+            # the chunk filter is a computed hash no scan can prune: cache
+            # the chunk's pages so its four writes below read the input
+            # once, not four times
+            part = pages.filter(
+                F.pmod(F.xxhash64("url"), F.lit(n_chunks)) == cid).cache()
+            part.count()
+            dirs = {t: os.path.join(d, f"chunk={cid}")
+                    for t, d in dirs.items()}
+        # pages_text depends only on the pages: its write runs in a driver
+        # thread CONCURRENT with the chunk's other writes (guide §2.6: one
+        # job's task tail back-fills with the next job's tasks); errors
+        # propagate after the join.
+        text_err: list = []
 
-        def _write_text() -> None:
+        def write_text() -> None:
             try:
                 spark.sparkContext.setJobDescription("build: pages_text")
-                (extract_pages(pages).select("url", "text", "lang")
-                 .write.mode("overwrite").parquet(paths.pages_text))
+                (extract_pages(part).select("url", "text", "lang")
+                 .write.mode("overwrite").parquet(dirs["pages_text"]))
             except BaseException as e:  # re-raised on the main thread
                 text_err.append(e)
 
-        text_thread = threading.Thread(target=_write_text,
+        text_thread = threading.Thread(target=write_text,
                                        name="build-pages-text")
         text_thread.start()
-
-    doc_map = assign_doc_ids(pages)
-    doc_map.write.mode("overwrite").parquet(paths.doc_map)
-    doc_map = spark.read.parquet(paths.doc_map)
-
-    if write_meta:
-        materialize_doc_meta(pages, doc_map, paths.doc_meta)
-    if write_links:
-        materialize_links(pages, paths.links)
-
-    postings = postings_from_pages(pages, doc_map)
-    postings.write.mode("overwrite").parquet(paths.postings)
-    postings = read_postings(spark, paths.postings)
-
-    if text_thread is not None:
-        text_thread.join()
+        try:
+            if not manifest.step_done("doc_map"):
+                assign_doc_ids(pages).write.mode("overwrite") \
+                    .parquet(paths.doc_map)
+                manifest.mark_step("doc_map",
+                                   rows=fsio.row_count(spark, paths.doc_map))
+            doc_map = spark.read.parquet(paths.doc_map)
+            materialize_doc_meta(part, doc_map, dirs["doc_meta"])
+            materialize_links(part, dirs["links"])
+            postings_from_pages(part, doc_map) \
+                .write.mode("overwrite").parquet(dirs["postings"])
+        finally:
+            text_thread.join()
+            if part is not pages:
+                part.unpersist()
         if text_err:
             raise text_err[0]
+        return {t: fsio.row_count(spark, d) for t, d in dirs.items()}
 
-    stats = write_derived(spark, postings, paths, n_shards, term_buckets)
-    return write_build_meta(spark, paths, stats, n_shards, term_buckets,
-                            time.monotonic() - t0)
+    summary = run_resumable_partitions(manifest, list(range(n_chunks)),
+                                       do_chunk)
+    if manifest.step_done("finalize"):
+        meta = load_meta(out_dir, spark)
+    else:
+        stats = write_derived(spark, read_table(spark, paths.postings), paths,
+                              n_shards, term_buckets)
+        meta = write_build_meta(spark, paths, stats, n_shards, term_buckets,
+                                time.monotonic() - t0)
+        manifest.mark_step("finalize", **{k: v for k, v in meta.items()
+                                          if isinstance(v, (int, float))})
+    return {**meta, **summary}
+
+
+def _check_input(manifest: Manifest, pages: DataFrame,
+                 **params: int) -> None:
+    """Record the input fingerprint and the build ``params`` in the
+    manifest's ``input_snapshot`` step, or, when the step is there, raise
+    ValueError if any recorded value differs: a resume must see the same
+    input and the same chunking, sharding and bucketing as the run it
+    continues."""
+    fp = {**input_fingerprint(pages), **params}
+    recorded = manifest.state["steps"].get("input_snapshot")
+    if recorded is None:
+        manifest.mark_step("input_snapshot", **fp)
+        return
+    # only the keys the manifest has: older manifests lack content_xor
+    # and the build parameters
+    for key in ("n_rows", "url_xor", "content_xor", *params):
+        if key in recorded and recorded[key] != fp[key]:
+            raise ValueError(
+                f"resume refused: {key} changed ({recorded[key]} → "
+                f"{fp[key]}) — the manifest at {manifest.path} belongs to "
+                f"a different input snapshot or build")
 
 
 def load_meta(out_dir: str, spark: SparkSession | None = None) -> dict:

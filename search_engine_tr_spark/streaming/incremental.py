@@ -32,11 +32,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..plans import fsio
 from ..plans.docids import assign_doc_ids
 from ..plans.index_build import _BLOCK_SCHEMA, _POSTINGS_SCHEMA, \
-    IndexPaths, extract_pages, postings_from_pages, read_postings
+    IndexPaths, extract_pages, materialize_doc_meta, materialize_links, \
+    postings_from_pages, read_table
 
-
-def _intent_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "_ingest_intent.json")
+# the crash markers of the two append protocols, at the index root: an
+# ingest's (``_ingest_core``) and a delta refresh's
+# (``refresh_derived_delta``). While one is live the index holds
+# uncommitted rows that the next run rolls back file by file.
+INGEST_INTENT = "_ingest_intent.json"
+DERIVED_INTENT = "_derived_intent.json"
 
 
 def _orphan_doc_files(spark: SparkSession, table_dir: str, base: int,
@@ -68,7 +72,7 @@ def _orphan_url_files(spark: SparkSession, table_dir: str,
     a COMMITTED batch has all its urls in doc_map (its doc_map commit
     landed), while a file from the one crashed attempt has none. One
     column-pruned scan + anti-join, recovery-only cost."""
-    rows = (spark.read.parquet(table_dir)
+    rows = (read_table(spark, table_dir)
             .select(F.input_file_name().alias("f"),
                     F.col(url_col).alias("url"))
             # a NULL url never matches the anti-join and would flag a
@@ -86,26 +90,24 @@ def _orphan_url_files(spark: SparkSession, table_dir: str,
 # serializes the whole batch otherwise (ADVICE/VERDICT r4 watch-item). At
 # the default, one commit file is ~150 MB of (url, doc_id) rows — seconds
 # to write — while every atomicity invariant stays chunk-local and exact.
-DEFAULT_COMMIT_CHUNK_ROWS = 2_000_000
+_COMMIT_CHUNK_PAGES = 2_000_000
 
 
 def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
                              index_dir: str,
-                             refresh_derived: bool = False,
-                             commit_chunk_rows: int =
-                             DEFAULT_COMMIT_CHUNK_ROWS) -> dict:
+                             refresh_derived: bool = False) -> dict:
     """Append-only index update for pages whose url is not yet in doc_map,
     with a crash-safe commit protocol.
 
     **doc_map is the commit record**: postings and the companion tables
-    (pages_text / doc_meta / links, if the index carries them) are
-    appended FIRST, and the batch's doc_map rows are appended LAST as a
-    single coalesced file (one atomic rename on a local/HDFS root). The
-    anti-join idempotence key is doc_map, so a replay after a crash
-    anywhere before the doc_map append still sees the batch as fresh —
-    no document can be half-committed into unsearchability (the round-3
-    ordering appended doc_map first, so a crash before the postings
-    append permanently anti-joined those urls away; ADVICE r4).
+    (pages_text / doc_meta / links) are appended FIRST, and the batch's
+    doc_map rows are appended LAST as a single coalesced file (one atomic
+    rename on a local/HDFS root). The anti-join idempotence key is
+    doc_map, so a replay after a crash anywhere before the doc_map append
+    still sees the batch as fresh — no document can be half-committed into
+    unsearchability (the round-3 ordering appended doc_map first, so a
+    crash before the postings append permanently anti-joined those urls
+    away; ADVICE r4).
 
     Replays are made exact by an intent sidecar + rollback: an
     ``_ingest_intent.json`` marker is published before the first append
@@ -117,7 +119,7 @@ def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
     on crash recovery; the steady-state cost is one O(1) sidecar
     write+delete per batch.
 
-    **Bulk batches**: a batch with more than ``commit_chunk_rows`` fresh
+    **Bulk batches**: a batch with more than ``_COMMIT_CHUNK_PAGES`` fresh
     pages is committed as sequential url-hash chunks, each an independent
     full protocol run — the single-file doc_map commit (the atomicity
     primitive) then never serializes more than one chunk through one
@@ -131,17 +133,17 @@ def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
     chunk.
     """
     out = _ingest_core(spark, new_pages, index_dir,
-                       max_rows=commit_chunk_rows)
+                       max_rows=_COMMIT_CHUNK_PAGES)
     overflow = out.pop("overflow", None)
     if overflow is not None:
         import logging
         import math as _math
 
-        k = _math.ceil(overflow / commit_chunk_rows)
+        k = _math.ceil(overflow / _COMMIT_CHUNK_PAGES)
         logging.getLogger(__name__).info(
             "incremental_index_update: %d fresh pages > commit chunk %d — "
             "committing as %d sequential chunks", overflow,
-            commit_chunk_rows, k)
+            _COMMIT_CHUNK_PAGES, k)
         probe_rolled = out.get("rolled_back_files", 0)
         out = {"new_docs": 0, "new_postings": 0, "commit_chunks": k}
         if probe_rolled:  # crash recovery performed by the probe pass
@@ -168,7 +170,7 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     ``max_rows``, returns ``{"overflow": n_new}`` — before publishing the
     intent or appending anything — when the fresh count exceeds it."""
     paths = IndexPaths(index_dir)
-    intent = _intent_path(index_dir)
+    intent = os.path.join(index_dir, INGEST_INTENT)
     doc_map = spark.read.parquet(paths.doc_map)
     # explicit None check: `or -1` would treat a legitimate max doc_id of 0
     # as missing and restart ids at 0, colliding with the existing doc
@@ -185,19 +187,14 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
         # batch than the crashed one (a batch-scoped anti-join guard here
         # would leave the crashed urls orphaned until re-ingested, and
         # then duplicate them; ADVICE r5)
-        for tdir in (paths.postings, paths.doc_meta):
-            for fp in _orphan_doc_files(spark, tdir, base):
-                fsio.delete(spark, fp)
-                n_rolled_back += 1
-        if fsio.exists(spark, paths.pages_text):
-            for fp in _orphan_url_files(spark, paths.pages_text, doc_map):
-                fsio.delete(spark, fp)
-                n_rolled_back += 1
-        if fsio.exists(spark, paths.links):
-            for fp in _orphan_url_files(spark, paths.links, doc_map,
-                                        url_col="source_url"):
-                fsio.delete(spark, fp)
-                n_rolled_back += 1
+        orphans = (_orphan_doc_files(spark, paths.postings, base)
+                   + _orphan_doc_files(spark, paths.doc_meta, base)
+                   + _orphan_url_files(spark, paths.pages_text, doc_map)
+                   + _orphan_url_files(spark, paths.links, doc_map,
+                                       url_col="source_url"))
+        for fp in orphans:
+            fsio.delete(spark, fp)
+        n_rolled_back = len(orphans)
     # null-url rows are dropped at ingest entry: they can never commit
     # (the doc_map anti-join idempotence key never matches NULL) and a
     # companion file containing one would break the file-granularity
@@ -243,14 +240,9 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     # frame stays 1 partition, which would pin the tokenize stage to one
     # task (guide §2.5; no-op at real scale)
     from ..session import ensure_scan_parallelism
+    # four appends re-read the html payload — materialize it once
     fresh = ensure_scan_parallelism(
-        new_pages.join(fresh_urls, "url", "left_semi"))
-    has_companions = (fsio.exists(spark, paths.pages_text)
-                      or fsio.exists(spark, paths.doc_meta)
-                      or fsio.exists(spark, paths.links))
-    if has_companions:
-        # multiple consumers re-read the html payload — materialize once
-        fresh = fresh.localCheckpoint()
+        new_pages.join(fresh_urls, "url", "left_semi")).localCheckpoint()
     fsio.write_json(spark, intent, {"base": base, "n_new": n_new})
     # single tokenize pass straight into the append; the batch's row count
     # is recovered from the written table by a footer-pruned scan of ids
@@ -259,19 +251,14 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     # count it before writing)
     postings_from_pages(fresh, new_ids) \
         .write.mode("append").parquet(paths.postings)
-    n_postings = (read_postings(spark, paths.postings)
+    n_postings = (read_table(spark, paths.postings)
                   .filter(F.col("doc_id") > F.lit(base)).count())
-    if fsio.exists(spark, paths.pages_text):
-        # crashed companion rows were rolled back file-granularly above,
-        # so plain appends are exact — no per-batch anti-join guard needed
-        extract_pages(fresh).select("url", "text", "lang") \
-            .write.mode("append").parquet(paths.pages_text)
-    if fsio.exists(spark, paths.doc_meta):
-        from ..plans.index_build import materialize_doc_meta
-        materialize_doc_meta(fresh, new_ids, paths.doc_meta, mode="append")
-    if fsio.exists(spark, paths.links):
-        from ..plans.index_build import materialize_links
-        materialize_links(fresh, paths.links, mode="append")
+    # crashed companion rows were rolled back file-granularly above, so
+    # plain appends are exact — no per-batch anti-join guard needed
+    extract_pages(fresh).select("url", "text", "lang") \
+        .write.mode("append").parquet(paths.pages_text)
+    materialize_doc_meta(fresh, new_ids, paths.doc_meta, mode="append")
+    materialize_links(fresh, paths.links, mode="append")
     # COMMIT: one coalesced doc_map file — the append becomes visible as a
     # single atomic rename, and with it the whole batch
     new_ids.coalesce(1).write.mode("append").parquet(paths.doc_map)
@@ -312,7 +299,7 @@ def rebuild_derived(spark: SparkSession, index_dir: str,
     _dm_max, n_pages_mapped = fsio.column_max_count(spark, paths.doc_map,
                                                     "doc_id")
     committed_max = -1 if _dm_max is None else _dm_max
-    postings = (read_postings(spark, paths.postings)
+    postings = (read_table(spark, paths.postings)
                 .filter(F.col("doc_id") <= F.lit(committed_max)))
     stats = write_derived(spark, postings, paths, n_shards, term_buckets)
     meta.update({"n_docs": stats.n_docs, "avgdl": stats.avgdl,
@@ -323,7 +310,7 @@ def rebuild_derived(spark: SparkSession, index_dir: str,
     fsio.write_json(spark, paths.meta, meta)
     # a full rebuild canonicalizes everything a crashed delta refresh
     # might have left behind — clear its marker
-    fsio.delete(spark, os.path.join(index_dir, "_derived_intent.json"))
+    fsio.delete(spark, os.path.join(index_dir, DERIVED_INTENT))
     return {"n_docs": stats.n_docs, "total_postings": stats.total_postings}
 
 
@@ -490,7 +477,7 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
     dmax = int(meta["derived_max_doc_id"])
     n_shards = int(meta.get("n_shards", 32))
     term_buckets = int(meta.get("term_buckets", 64))
-    intent = os.path.join(index_dir, "_derived_intent.json")
+    intent = os.path.join(index_dir, DERIVED_INTENT)
     if fsio.exists(spark, intent):
         # a prior refresh crashed between its appends and its meta commit;
         # a driver-regime crash mid-write also leaves a temporary file,
@@ -520,7 +507,7 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
         dls = driver.groupby("doc_id")["tf"].sum()
         n_new, tot = len(dls), int(dls.sum())
     else:
-        delta = (read_postings(spark, paths.postings)
+        delta = (read_table(spark, paths.postings)
                  .filter((F.col("doc_id") > dmax)
                          & (F.col("doc_id") <= F.lit(new_high))))
         doclens = doc_lengths(delta).localCheckpoint()
@@ -653,7 +640,7 @@ def stream_ingest_index(spark: SparkSession, pages_dir: str, index_dir: str,
         if fsio.column_max_count(spark, paths.doc_map,
                                  "doc_id")[1] != mapped_at_refresh:
             totals.update(refresh_derived_delta(spark, index_dir))
-        if refresh_scores and fsio.exists(spark, paths.links):
+        if refresh_scores:
             # the domain-authority twin of the derived refresh: fold only
             # the link files this drain appended (additive indegree; see
             # plans.backlinks.refresh_domain_scores delta semantics).

@@ -3,6 +3,7 @@ partition layout preserved, orphan cleanup."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from search_engine_tr_spark.plans.compact import compact_parquet
@@ -59,14 +60,14 @@ def test_compact_after_incremental_updates_keeps_queries_identical(
     doc_map; compacting them must leave BM25 results byte-identical after
     the derived tables are rebuilt."""
     from search_engine_tr_spark.operators.query_bm25 import BM25Index
-    from search_engine_tr_spark.plans.checkpoint import build_index_resumable
+    from search_engine_tr_spark.plans.index_build import build_index
     from search_engine_tr_spark.sources.synth import gen_pages, pages_schema
     from search_engine_tr_spark.streaming.incremental import (
         incremental_index_update, rebuild_derived)
 
     root = str(tmp_path / "inc")
-    build_index_resumable(spark, tiny_pages_df, root, n_chunks=2,
-                          n_shards=2, term_buckets=4)
+    build_index(spark, tiny_pages_df, root, n_shards=2, term_buckets=4,
+                n_chunks=2)
     for seed in (91, 92, 93):
         new = spark.createDataFrame(gen_pages(15, seed=seed),
                                     schema=pages_schema())
@@ -127,8 +128,7 @@ def test_compact_term_stats_keeps_delta_gen(spark, tmp_path):
     pages = gen_pages(60, seed=37)
     root = str(tmp_path / "ix")
     build_index(spark, spark.createDataFrame(pages[:30], schema=pages_schema()),
-                root, n_shards=2, term_buckets=4, write_text=False,
-                write_links=False)
+                root, n_shards=2, term_buckets=4)
     for lo, hi in ((30, 45), (45, 60)):
         incremental_index_update(
             spark, spark.createDataFrame(pages[lo:hi], schema=pages_schema()),
@@ -150,3 +150,55 @@ def test_compact_term_stats_keeps_delta_gen(spark, tmp_path):
     assert res["skipped"] is False
     assert rows() == before
     assert results() == before_results
+
+
+@pytest.mark.parametrize("marker", ["_ingest_intent.json",
+                                    "_derived_intent.json"])
+def test_compact_job_refuses_live_intent(spark, tmp_path, monkeypatch,
+                                         marker):
+    """While a crashed ingest's or delta refresh's intent marker is live,
+    the index holds uncommitted rows in files of their own that the replay
+    deletes whole. The compaction job must exit non-zero before touching
+    any table — also before ``--canonicalize`` — instead of merging those
+    rows into files with committed rows."""
+    import hashlib
+    import importlib.util
+    import sys
+
+    from search_engine_tr_spark.plans.index_build import build_index
+    from search_engine_tr_spark.sources.synth import gen_pages, pages_schema
+    from search_engine_tr_spark.streaming.incremental import \
+        incremental_index_update
+
+    pages = gen_pages(40, seed=83)
+    root = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pages[:30], schema=pages_schema()),
+                root, n_shards=2, term_buckets=4)
+    incremental_index_update(
+        spark, spark.createDataFrame(pages[30:], schema=pages_schema()),
+        root, refresh_derived=True)
+    with open(os.path.join(root, marker), "w") as f:
+        f.write("{}")
+
+    def snapshot():
+        out = {}
+        for r, _d, fs in os.walk(root):
+            for f in fs:
+                with open(os.path.join(r, f), "rb") as fh:
+                    out[os.path.join(r, f)] = hashlib.sha1(
+                        fh.read()).hexdigest()
+        return out
+
+    before = snapshot()
+    spec = importlib.util.spec_from_file_location(
+        "compact_job", os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "jobs", "compact_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    for extra in ([], ["--canonicalize"]):
+        monkeypatch.setattr(sys, "argv", ["compact_job.py", root,
+                                          "--target-mb", "1", *extra])
+        with pytest.raises(SystemExit) as exc:
+            job.main()
+        assert exc.value.code not in (0, None)
+        assert snapshot() == before

@@ -83,3 +83,12 @@ def test_column_stats_both_branches(spark, tmp_path, monkeypatch, branch):
                    "c.parquet": (None, 3)}
     assert fsio.column_max_count(spark, str(root), "doc_id") == (24, 16)
     assert fsio.column_stats(spark, str(tmp_path / "missing"), "doc_id") == {}
+    # the footer-only row count: no Spark job on either branch
+    sc, group = spark.sparkContext, f"row_count_{branch}"
+    sc.setJobGroup(group, group)
+    try:
+        assert fsio.row_count(spark, str(root)) == 16
+        assert fsio.row_count(spark, str(tmp_path / "missing")) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -27,8 +27,7 @@ def test_fresh_corpus_parity(spark, tmp_path, seed):
     out = str(tmp_path / f"ix_{seed}")
     shutil.rmtree(out, ignore_errors=True)
     build_index(spark, pages_df(spark, 120, seed=seed), out, n_shards=4,
-                term_buckets=8, write_text=False, write_meta=False,
-                write_links=False)
+                term_buckets=8)
 
     py_tf = {}
     for p in gen_pages(120, seed=seed):

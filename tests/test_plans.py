@@ -6,6 +6,7 @@ and postings are built map-only, with no aggregate or term-keyed shuffle."""
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,13 +59,14 @@ def test_postings_kernel_is_map_only(spark):
 def test_postings_writers_are_map_only(spark, tiny_pages_df, tiny_index,
                                        tmp_path, monkeypatch):
     """The engine's page → postings plans — ``postings_from_pages`` and
-    the frame each ``build_index_resumable`` chunk writes — have no
-    aggregate and no exchange keyed on a term: a document's postings come
-    from its own page row, so no token occurrence crosses a shuffle."""
+    the postings frame each chunk of a chunked ``build_index`` writes —
+    have no aggregate and no exchange keyed on a term: a document's
+    postings come from its own page row, so no token occurrence crosses a
+    shuffle."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from search_engine_tr_spark.plans.checkpoint import build_index_resumable
-    from search_engine_tr_spark.plans.index_build import postings_from_pages
+    from search_engine_tr_spark.plans.index_build import (build_index,
+                                                          postings_from_pages)
 
     out, _ = tiny_index
     frames = [postings_from_pages(tiny_pages_df,
@@ -78,9 +80,10 @@ def test_postings_writers_are_map_only(spark, tiny_pages_df, tiny_index,
 
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", spy)
-        build_index_resumable(spark, tiny_pages_df, str(tmp_path / "r"),
-                              n_chunks=2, n_shards=2, term_buckets=4)
-    chunks = [df for path, df in written if "chunk=" in str(path)]
+        build_index(spark, tiny_pages_df, str(tmp_path / "r"), n_shards=2,
+                    term_buckets=4, n_chunks=2)
+    chunks = [df for path, df in written
+              if os.path.join("postings", "chunk=") in str(path)]
     assert len(chunks) == 2
     for df in frames + chunks:
         p = _plan(df, mode="simple")

@@ -17,8 +17,7 @@ def two_indexes(spark, tmp_path_factory):
     outs = []
     for shards in (1, 6):
         out = str(tmp_path_factory.mktemp(f"salt{shards}"))
-        build_index(spark, pages, out, n_shards=shards, term_buckets=4,
-                    write_text=False)
+        build_index(spark, pages, out, n_shards=shards, term_buckets=4)
         outs.append(out)
     pages.unpersist()
     return outs

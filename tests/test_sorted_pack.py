@@ -102,8 +102,7 @@ def test_skew_ratios_equal_postings_rescan(spark, tiny_index):
 def test_index_built_with_sorted_packer_queries_identically(
         spark, tiny_pages_df, tmp_path, tiny_index):
     out_sorted = str(tmp_path / "ix_sorted")
-    build_index(spark, tiny_pages_df, out_sorted, n_shards=4, term_buckets=8,
-                write_text=False, write_meta=False, write_links=False)
+    build_index(spark, tiny_pages_df, out_sorted, n_shards=4, term_buckets=8)
     base, _ = tiny_index
     a = BM25Index(spark, base)
     b = BM25Index(spark, out_sorted)

@@ -587,8 +587,8 @@ def test_crash_replayed_with_different_batch(spark, tmp_path, monkeypatch):
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
 
 
-def test_chunked_bulk_commit(spark, tmp_path):
-    """VERDICT r4 #5: a batch above commit_chunk_rows commits as
+def test_chunked_bulk_commit(spark, tmp_path, monkeypatch):
+    """VERDICT r4 #5: a batch above the commit chunk size commits as
     sequential url-hash chunks — multiple single-file doc_map commits
     instead of one serialized coalesce(1) task — with identical results
     and one derived refresh at the end."""
@@ -600,11 +600,11 @@ def test_chunked_bulk_commit(spark, tmp_path):
                                              schema=pages_schema()),
                 ix, n_shards=4, term_buckets=8)
     files_before = len(glob.glob(os.path.join(ix, "doc_map", "*.parquet")))
-    from search_engine_tr_spark.streaming.incremental import \
-        incremental_index_update
-    m = incremental_index_update(
+    from search_engine_tr_spark.streaming import incremental
+    monkeypatch.setattr(incremental, "_COMMIT_CHUNK_PAGES", 12)
+    m = incremental.incremental_index_update(
         spark, spark.createDataFrame(pages[30:], schema=pages_schema()),
-        ix, refresh_derived=True, commit_chunk_rows=12)
+        ix, refresh_derived=True)
     assert m["new_docs"] == 40
     assert m["commit_chunks"] == 4  # ceil(40 / 12)
     assert m["delta_docs"] == 40    # one refresh folded everything
@@ -628,9 +628,11 @@ def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
     import pyspark.sql.classic.dataframe as D
     import pytest
 
+    from search_engine_tr_spark.streaming import incremental
     from search_engine_tr_spark.streaming.incremental import \
         incremental_index_update
 
+    monkeypatch.setattr(incremental, "_COMMIT_CHUNK_PAGES", 12)
     pages = gen_pages(60, seed=67)
     ix = str(tmp_path / "ix")
     build_index(spark, spark.createDataFrame(pages[:30],
@@ -649,7 +651,7 @@ def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(D.DataFrame, "coalesce", boom_second)
     with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch, ix, commit_chunk_rows=12)
+        incremental_index_update(spark, batch, ix)
     monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
 
     # chunk 1 committed, chunk 2's intent still live
@@ -657,8 +659,7 @@ def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
     dm_mid = spark.read.parquet(os.path.join(ix, "doc_map")).count()
     assert 30 < dm_mid < 60
 
-    m = incremental_index_update(spark, batch, ix, refresh_derived=True,
-                                 commit_chunk_rows=12)
+    m = incremental_index_update(spark, batch, ix, refresh_derived=True)
     assert m["new_docs"] == 60 - dm_mid
     assert not os.path.exists(os.path.join(ix, "_ingest_intent.json"))
 
