@@ -14,6 +14,9 @@ Deterministic for a given (url set, P): re-running on the same snapshot
 yields identical ids — required for resumable builds (SURVEY.md §7.3). The
 mapping is persisted as its own table by the index build so later increments
 extend rather than recompute it.
+
+``assign_doc_ids_local`` is the same rule on the driver, for the small url
+sets of an ingest's driver regime: its ids equal ``assign_doc_ids``'s.
 """
 
 from __future__ import annotations
@@ -60,3 +63,19 @@ def assign_doc_ids(pages: DataFrame, url_col: str = "url",
               .select("_pid", "_offset"))
     return (local.join(F.broadcast(counts), "_pid")
             .select("url", (F.col("_local") + F.col("_offset")).alias("doc_id")))
+
+
+def assign_doc_ids_local(urls, num_partitions: int,
+                         start: int = 0) -> dict[str, int]:
+    """Driver twin of ``assign_doc_ids`` (+ ``start``) → {url: doc_id}.
+
+    The distributed ids are the ranks of the distinct urls ordered by
+    (pmod(xxhash64(url), P), url): the offset of the url's hash partition
+    plus its rank inside it. Ranking by the same key with the driver's
+    xxhash64 (``functions.xxh``) gives the same ids; Python orders strings
+    by code point, as Spark orders them by UTF-8 bytes."""
+    from ..functions.xxh import term_bucket
+
+    ranked = sorted(set(urls),
+                    key=lambda u: (term_bucket(u, num_partitions), u))
+    return {u: start + i for i, u in enumerate(ranked)}

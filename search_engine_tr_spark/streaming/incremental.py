@@ -12,6 +12,13 @@ The reference re-tokenizes EVERY page every 30 minutes (task_scheduler.py:
   an append-only pages directory into the queryable index — each
   micro-batch is an ``incremental_index_update``, exactly once across
   restarts, followed by one delta refresh of the derived tables.
+
+Both appends have two regimes that write the same rows. A small batch (an
+ingest within ``_DRIVER_MAX_INGEST_PAGES`` / ``_DRIVER_MAX_INGEST_BYTES``,
+a delta refresh within ``_DRIVER_MAX_DELTA_POSTINGS``) on a root pyarrow
+can open runs on the DRIVER: pandas kernels and one pyarrow file per
+table, each published by rename. Larger ones and ``s3a://`` roots run in
+Spark.
 """
 
 from __future__ import annotations
@@ -20,8 +27,10 @@ import os
 import posixpath
 import uuid
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -29,11 +38,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..functions.text import page_links, page_meta, page_text
 from ..plans import fsio
-from ..plans.docids import assign_doc_ids
+from ..plans.docids import assign_doc_ids, assign_doc_ids_local
 from ..plans.index_build import _BLOCK_SCHEMA, _POSTINGS_SCHEMA, \
-    IndexPaths, extract_pages, materialize_doc_meta, materialize_links, \
-    postings_from_pages, read_table
+    IndexPaths, _postings_rows_batches, extract_pages, \
+    materialize_doc_meta, materialize_links, postings_from_pages, read_table
 
 # the crash markers of the two append protocols, at the index root: an
 # ingest's (``_ingest_core``) and a delta refresh's
@@ -101,13 +111,14 @@ def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
 
     **doc_map is the commit record**: postings and the companion tables
     (pages_text / doc_meta / links) are appended FIRST, and the batch's
-    doc_map rows are appended LAST as a single coalesced file (one atomic
-    rename on a local/HDFS root). The anti-join idempotence key is
-    doc_map, so a replay after a crash anywhere before the doc_map append
-    still sees the batch as fresh — no document can be half-committed into
-    unsearchability (the round-3 ordering appended doc_map first, so a
-    crash before the postings append permanently anti-joined those urls
-    away; ADVICE r4).
+    doc_map rows are appended LAST as a single file (one atomic rename on
+    a local/HDFS root): a coalesced Spark write, or in the driver regime a
+    url-sorted pyarrow file published by rename (see ``_ingest_core``).
+    The fresh-url idempotence key is doc_map, so a replay after a crash
+    anywhere before the doc_map append still sees the batch as fresh — no
+    document can be half-committed into unsearchability (the round-3
+    ordering appended doc_map first, so a crash before the postings
+    append permanently anti-joined those urls away; ADVICE r4).
 
     Replays are made exact by an intent sidecar + rollback: an
     ``_ingest_intent.json`` marker is published before the first append
@@ -164,14 +175,177 @@ def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
     return out
 
 
+# The driver regime of an ingest (``_ingest_core``): a batch of at most
+# _DRIVER_MAX_INGEST_PAGES pages whose collected url/html/lang columns take
+# at most _DRIVER_MAX_INGEST_BYTES of Arrow memory, on a root pyarrow can
+# open, is collected in ONE Spark job and appended with pandas and pyarrow.
+# The collect stops at the page cap + 1, so the driver holds at most that
+# many pages; the bytes cap then bounds the Arrow table the regime parses
+# (its pandas copy, extracted text and postings are a small multiple of
+# it). Measured on 4 vCPU over a 1000-page base (scripts/ingest_crossover.py,
+# ~1.1 KB pages, medians of 2): driver vs Spark append 0.34 vs 3.92 s at
+# 50 pages, 1.78 vs 3.53 s at 1000, 3.32 vs 4.40 s at 2000 and 6.26 vs
+# 5.46 s at 4000, so the page cap sits at half the last size the driver
+# won.
+_DRIVER_MAX_INGEST_PAGES = 1000
+_DRIVER_MAX_INGEST_BYTES = 64 << 20
+# doc_map rows the fresh-url check reads at most: the url column of the row
+# groups whose footer min/max can hold one of the batch's urls. A batch
+# whose candidate rows exceed it takes the Spark regime, so the check's
+# memory (~50 MB of urls) stays bounded however large doc_map grows
+_DRIVER_MAX_URL_CHECK_ROWS = 1 << 20
+
+
+def _string_field(name: str) -> T.StructField:
+    return T.StructField(name, T.StringType(), True)
+
+
+# the files the driver regime writes, typed as the Spark regime writes a
+# batch read from parquet (whose url is nullable)
+_POSTINGS_ARROW = to_arrow_schema(_POSTINGS_SCHEMA)
+_PAGES_TEXT_ARROW = to_arrow_schema(T.StructType([
+    _string_field("url"), _string_field("text"), _string_field("lang")]))
+_DOC_META_ARROW = to_arrow_schema(T.StructType([
+    T.StructField("doc_id", T.LongType(), False), _string_field("url"),
+    _string_field("title"), _string_field("description"),
+    _string_field("keywords")]))
+_LINKS_ARROW = to_arrow_schema(T.StructType([
+    _string_field("source_url"), _string_field("link_type"),
+    _string_field("target_url"), _string_field("anchor_text")]))
+_DOC_MAP_ARROW = to_arrow_schema(T.StructType([
+    _string_field("url"), T.StructField("doc_id", T.LongType(), False)]))
+
+
+def _collect_batch(new_pages: DataFrame) -> pa.Table | None:
+    """(url, html, lang) of the non-null-url pages in ONE Spark job, or
+    None when they exceed ``_DRIVER_MAX_INGEST_PAGES`` pages or
+    ``_DRIVER_MAX_INGEST_BYTES`` bytes."""
+    batch = (new_pages.select("url", "html", "lang")
+             .limit(_DRIVER_MAX_INGEST_PAGES + 1).toArrow())
+    if (batch.num_rows > _DRIVER_MAX_INGEST_PAGES
+            or batch.nbytes > _DRIVER_MAX_INGEST_BYTES):
+        return None
+    return batch
+
+
+def _fresh_rows(arrow, batch: pa.Table) -> pa.Table | None:
+    """The rows of ``batch`` whose url doc_map does not hold, or None when
+    the check would read more than ``_DRIVER_MAX_URL_CHECK_ROWS`` doc_map
+    rows.
+
+    Only the row groups whose url min/max footer statistics can hold one
+    of the batch's urls are read (a row group without them is read), found
+    by ``searchsorted`` of each row group's bounds in the sorted batch
+    urls; the footers come from ``fsio.footers``' cache. Duplicate urls
+    keep all their rows here (``_one_page_per_url_local`` then keeps one)."""
+    fs, root = arrow
+    if not batch.num_rows:
+        return batch
+    urls = np.array(sorted(set(batch["url"].to_pylist())), dtype=object)
+    mapped, rows = [], 0
+    for path, md in fsio.footers(fs, posixpath.join(root, "doc_map")).items():
+        ci = md.schema.names.index("url")
+        lo, hi = [], []
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(ci).statistics
+            has = st is not None and st.has_min_max
+            lo.append(st.min if has else urls[0])
+            hi.append(st.max if has else urls[-1])
+        hit = (np.searchsorted(urls, np.array(lo, dtype=object), "left")
+               < np.searchsorted(urls, np.array(hi, dtype=object), "right"))
+        groups = np.flatnonzero(hit).tolist()
+        rows += sum(md.row_group(rg).num_rows for rg in groups)
+        if rows > _DRIVER_MAX_URL_CHECK_ROWS:
+            return None
+        if groups:
+            mapped.append(pq.ParquetFile(path, metadata=md, filesystem=fs)
+                          .read_row_groups(groups, columns=["url"])["url"])
+    if not mapped:
+        return batch
+    known = pa.chunked_array([c for col in mapped for c in col.chunks],
+                             pa.string()).combine_chunks()
+    return batch.filter(pc.invert(pc.is_in(
+        batch["url"], value_set=known.cast(batch["url"].type))))
+
+
+def _one_page_per_url(pages: DataFrame) -> DataFrame:
+    """(url, html, lang) with one row per url: of a url's copies the one
+    with the greatest (html, lang), nulls least, as Spark orders structs.
+    A url a batch holds twice then commits one doc, not two row sets under
+    one doc_id (which doubled its postings and gave result pages two
+    metadata rows for one hit)."""
+    return (pages.groupBy("url")
+            .agg(F.max(F.struct("html", "lang")).alias("p"))
+            .select("url", "p.html", "p.lang"))
+
+
+def _one_page_per_url_local(pages: pd.DataFrame) -> pd.DataFrame:
+    """``_one_page_per_url`` on the driver: the same copy of each url."""
+    best: dict = {}
+    for url, html, lang in zip(pages["url"], pages["html"], pages["lang"]):
+        key = (html is not None, html or b"", lang is not None, lang or "")
+        if url not in best or key > best[url][0]:
+            best[url] = (key, html, lang)
+    return pd.DataFrame([(u, h, g) for u, (_, h, g) in best.items()],
+                        columns=["url", "html", "lang"])
+
+
+def _write_batch_driver(arrow, fresh: pd.DataFrame, base: int,
+                        num_partitions: int) -> int:
+    """Append the ``fresh`` pages (url, html, lang) with pyarrow → their
+    postings count. Ids are ``assign_doc_ids_local`` from ``base`` + 1, the
+    Spark regime's ids; the rows come from the kernels the Spark regime's
+    UDFs wrap. One file per table (postings, pages_text, doc_meta, links;
+    a table with no rows gets none), then the url-sorted doc_map file LAST:
+    its rename is the commit."""
+    _, root = arrow
+    ids = assign_doc_ids_local(fresh["url"], num_partitions, start=base + 1)
+    doc_ids = fresh["url"].map(ids)
+    postings = next(_postings_rows_batches(
+        [pd.DataFrame({"doc_id": doc_ids, "html": fresh["html"]})]))
+    links = pd.DataFrame(
+        [(u, typ, href, anchor)
+         for u, recs in zip(fresh["url"], page_links(fresh["url"],
+                                                     fresh["html"]))
+         for typ, _base, href, anchor in recs],
+        columns=_LINKS_ARROW.names)
+    tables = {
+        "postings": (postings, _POSTINGS_ARROW),
+        "pages_text": (pd.DataFrame({"url": fresh["url"],
+                                     "text": page_text(fresh["html"]),
+                                     "lang": fresh["lang"]}),
+                       _PAGES_TEXT_ARROW),
+        "doc_meta": (page_meta(fresh["html"]).assign(doc_id=doc_ids,
+                                                     url=fresh["url"]),
+                     _DOC_META_ARROW),
+        "links": (links, _LINKS_ARROW),
+        "doc_map": (pd.DataFrame(sorted(ids.items()),
+                                 columns=_DOC_MAP_ARROW.names),
+                    _DOC_MAP_ARROW),
+    }
+    for name, (pdf, schema) in tables.items():
+        if len(pdf):
+            _publish(arrow, posixpath.join(root, name), None,
+                     pa.Table.from_pandas(pdf, schema, preserve_index=False))
+    return len(postings)
+
+
 def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
                  max_rows: int | None = None) -> dict:
     """One protocol run (see ``incremental_index_update``). With
     ``max_rows``, returns ``{"overflow": n_new}`` — before publishing the
-    intent or appending anything — when the fresh count exceeds it."""
+    intent or appending anything — when the fresh count exceeds it.
+
+    Two regimes append the same rows. On a root pyarrow can open
+    (``fsio.arrow_root``), a batch within ``_DRIVER_MAX_INGEST_PAGES`` and
+    ``_DRIVER_MAX_INGEST_BYTES`` whose fresh-url check stays within
+    ``_DRIVER_MAX_URL_CHECK_ROWS`` runs on the DRIVER: one Arrow collect
+    (the only Spark job), the footer-addressed url check
+    (``_fresh_rows``) and one pyarrow file per table
+    (``_write_batch_driver``). Any other batch runs the Spark regime: a
+    checkpointed doc_map anti-join and partitioned Spark appends."""
     paths = IndexPaths(index_dir)
     intent = os.path.join(index_dir, INGEST_INTENT)
-    doc_map = spark.read.parquet(paths.doc_map)
     # explicit None check: `or -1` would treat a legitimate max doc_id of 0
     # as missing and restart ids at 0, colliding with the existing doc
     _max_id = fsio.column_max_count(spark, paths.doc_map, "doc_id")[0]
@@ -186,7 +360,9 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
         # reason, and correct even when the replay carries a DIFFERENT
         # batch than the crashed one (a batch-scoped anti-join guard here
         # would leave the crashed urls orphaned until re-ingested, and
-        # then duplicate them; ADVICE r5)
+        # then duplicate them; ADVICE r5). A driver-regime crash mid-write
+        # also leaves a temporary file, which is debris, not data
+        doc_map = spark.read.parquet(paths.doc_map)
         orphans = (_orphan_doc_files(spark, paths.postings, base)
                    + _orphan_doc_files(spark, paths.doc_meta, base)
                    + _orphan_url_files(spark, paths.pages_text, doc_map)
@@ -195,26 +371,31 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
         for fp in orphans:
             fsio.delete(spark, fp)
         n_rolled_back = len(orphans)
+        _delete_debris(spark, paths.postings, paths.pages_text,
+                       paths.doc_meta, paths.links, paths.doc_map)
     # null-url rows are dropped at ingest entry: they can never commit
     # (the doc_map anti-join idempotence key never matches NULL) and a
     # companion file containing one would break the file-granularity
     # rollback invariant (ADVICE r5)
     new_pages = new_pages.filter(F.col("url").isNotNull())
-    # Freshness discovery in ONE column-pruned doc_map anti-join (round-6:
-    # the r5 shape ran the url-only overflow probe AND a second full-row
-    # anti-join whose count equals the probe's — ADVICE r5 #4): the url
-    # anti-join is checkpointed and counted once, serves as the overflow
-    # probe, and the full rows are then recovered by a semi-join against
-    # the (small, already-materialized) fresh-url frame — broadcastable,
-    # never a second doc_map-sized exchange.
-    # localCheckpoint (not cache): appending to doc_map below invalidates
-    # any cached plan that READS doc_map (recacheByPath), which would make
-    # a cached anti-join silently recompute as empty — checkpointing severs
-    # the path lineage instead
-    fresh_urls = (new_pages.select("url")
-                  .join(doc_map.select("url"), "url", "left_anti")
-                  .localCheckpoint())
-    n_new = fresh_urls.count()
+    arrow = fsio.arrow_root(index_dir)
+    batch = None if arrow is None else _collect_batch(new_pages)
+    fresh = None if batch is None else _fresh_rows(arrow, batch)
+    if fresh is None:
+        # Freshness discovery in ONE column-pruned doc_map anti-join of the
+        # distinct urls, checkpointed and counted once: the count serves
+        # as the overflow probe. localCheckpoint (not cache): appending to
+        # doc_map below invalidates any cached plan that READS doc_map
+        # (recacheByPath), which would make a cached anti-join silently
+        # recompute as empty — checkpointing severs the path lineage
+        fresh_urls = (new_pages.select("url").distinct()
+                      .join(spark.read.parquet(paths.doc_map).select("url"),
+                            "url", "left_anti")
+                      .localCheckpoint())
+        n_new = fresh_urls.count()
+    else:
+        fresh = _one_page_per_url_local(fresh.to_pandas())
+        n_new = len(fresh)
     if max_rows is not None and n_new > max_rows:
         # state is clean (any crashed attempt was rolled back above),
         # so clear the stale marker — each chunk publishes its own —
@@ -229,6 +410,26 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
         # above, or its batch actually committed) — clear the marker
         fsio.delete(spark, intent)
         return {"new_docs": 0}
+    fsio.write_json(spark, intent, {"base": base, "n_new": n_new})
+    if fresh is None:
+        n_postings = _append_spark(spark, paths, new_pages, fresh_urls, base)
+    else:
+        n_postings = _write_batch_driver(
+            arrow, fresh, base, spark.sparkContext.defaultParallelism)
+    fsio.delete(spark, intent)
+    out = {"new_docs": n_new, "new_postings": n_postings}
+    if n_rolled_back:
+        out["rolled_back_files"] = n_rolled_back
+    return out
+
+
+def _append_spark(spark: SparkSession, paths: IndexPaths,
+                  new_pages: DataFrame, fresh_urls: DataFrame,
+                  base: int) -> int:
+    """The Spark regime's appends of the pages whose url is in the
+    checkpointed ``fresh_urls`` → their postings count: postings and the
+    companion tables first, then one coalesced doc_map file — the commit,
+    a single atomic rename."""
     # ids from the (small, checkpointed) fresh-url frame — assign_doc_ids
     # reads only the url column, so handing it the page rows (the pre-r6
     # shape) forced `fresh` to be materialized with its html payload even
@@ -241,18 +442,11 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     # task (guide §2.5; no-op at real scale)
     from ..session import ensure_scan_parallelism
     # four appends re-read the html payload — materialize it once
-    fresh = ensure_scan_parallelism(
-        new_pages.join(fresh_urls, "url", "left_semi")).localCheckpoint()
-    fsio.write_json(spark, intent, {"base": base, "n_new": n_new})
-    # single tokenize pass straight into the append; the batch's row count
-    # is recovered from the written table by a footer-pruned scan of ids
-    # above the old high-water mark (the pre-r6 shape localCheckpoint'd
-    # the whole postings frame — positions and tags included — only to
-    # count it before writing)
+    fresh = ensure_scan_parallelism(_one_page_per_url(
+        new_pages.join(fresh_urls, "url", "left_semi"))).localCheckpoint()
+    # single tokenize pass straight into the append
     postings_from_pages(fresh, new_ids) \
         .write.mode("append").parquet(paths.postings)
-    n_postings = (read_table(spark, paths.postings)
-                  .filter(F.col("doc_id") > F.lit(base)).count())
     # crashed companion rows were rolled back file-granularly above, so
     # plain appends are exact — no per-batch anti-join guard needed
     extract_pages(fresh).select("url", "text", "lang") \
@@ -262,11 +456,12 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     # COMMIT: one coalesced doc_map file — the append becomes visible as a
     # single atomic rename, and with it the whole batch
     new_ids.coalesce(1).write.mode("append").parquet(paths.doc_map)
-    fsio.delete(spark, intent)
-    out = {"new_docs": n_new, "new_postings": n_postings}
-    if n_rolled_back:
-        out["rolled_back_files"] = n_rolled_back
-    return out
+    # the batch's postings count from the footers: the files whose max
+    # doc_id is above the old high-water mark are exactly this attempt's,
+    # since a crashed attempt's were rolled back before it
+    return sum(n for mx, n in
+               fsio.column_stats(spark, paths.postings, "doc_id").values()
+               if mx is not None and mx > base)
 
 
 def rebuild_derived(spark: SparkSession, index_dir: str,
@@ -384,19 +579,31 @@ def _is_tmp(path: str) -> bool:
     return name.startswith(".") and name.endswith(".tmp")
 
 
-def _publish(arrow, table_dir: str, bucket: int, table: pa.Table) -> None:
-    """Write ``table`` as one parquet file of partition ``term_bucket=
-    bucket``: under a temporary name first, then renamed, so a reader or a
-    rollback never sees a partial file. No pandas or Arrow schema metadata
-    is stored, as in Spark's files."""
+def _publish(arrow, table_dir: str, bucket: int | None,
+             table: pa.Table) -> None:
+    """Write ``table`` as one parquet file under ``table_dir`` — in its
+    partition ``term_bucket=bucket`` unless ``bucket`` is None: under a
+    temporary name first, then renamed, so a reader or a rollback never
+    sees a partial file. No pandas or Arrow schema metadata is stored, as
+    in Spark's files."""
     fs, _ = arrow
-    part = posixpath.join(table_dir, f"term_bucket={bucket}")
+    part = (table_dir if bucket is None
+            else posixpath.join(table_dir, f"term_bucket={bucket}"))
     fs.create_dir(part)
     name = f"part-{uuid.uuid4().hex}.c000.snappy.parquet"
     tmp = posixpath.join(part, f".{name}.tmp")
     pq.write_table(table.replace_schema_metadata(None), tmp, filesystem=fs,
                    store_schema=False)
     fs.move(tmp, posixpath.join(part, name))
+
+
+def _delete_debris(spark: SparkSession, *table_dirs: str) -> None:
+    """Delete the ``_publish`` temporary files a crash left under
+    ``table_dirs``."""
+    for table_dir in table_dirs:
+        for fp in fsio.list_files_recursive(spark, table_dir):
+            if _is_tmp(fp):
+                fsio.delete(spark, fp)
 
 
 def _write_delta_driver(arrow, blocks: pd.DataFrame, gen: int) -> None:
@@ -488,10 +695,7 @@ def refresh_derived_delta(spark: SparkSession, index_dir: str) -> dict:
         for fp in _orphan_doc_files(spark, paths.term_stats, dmax,
                                     col="gen"):
             fsio.delete(spark, fp)
-        for fp in (fsio.list_files_recursive(spark, paths.blocks)
-                   + fsio.list_files_recursive(spark, paths.term_stats)):
-            if _is_tmp(fp):
-                fsio.delete(spark, fp)
+        _delete_debris(spark, paths.blocks, paths.term_stats)
     _dm_max, n_pages_mapped = fsio.column_max_count(spark, paths.doc_map,
                                                     "doc_id")
     new_high = max(dmax, -1 if _dm_max is None else _dm_max)

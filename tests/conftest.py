@@ -89,3 +89,33 @@ def refresh_regime(monkeypatch):
         return writes
 
     return use
+
+
+@pytest.fixture
+def ingest_regime(monkeypatch):
+    """→ ``use(regime)``: send every ingest append of the test to
+    ``regime`` — "driver" (one Arrow collect, pyarrow writes) or "spark" —
+    through the driver regime's page, bytes and url-check caps. ``use``
+    returns the list of driver-regime appends the test then makes, so the
+    test can check that the regime really ran."""
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    def use(regime: str) -> list:
+        # the page cap goes through DataFrame.limit, an int32
+        caps = {"driver": (1 << 30, 1 << 62, 1 << 62),
+                "spark": (-1, -1, -1)}[regime]
+        for name, cap in zip(("_DRIVER_MAX_INGEST_PAGES",
+                              "_DRIVER_MAX_INGEST_BYTES",
+                              "_DRIVER_MAX_URL_CHECK_ROWS"), caps):
+            monkeypatch.setattr(inc, name, cap)
+        writes = []
+        real = inc._write_batch_driver
+
+        def spy(*args):
+            writes.append(args)
+            return real(*args)
+
+        monkeypatch.setattr(inc, "_write_batch_driver", spy)
+        return writes
+
+    return use

@@ -543,6 +543,96 @@ def test_driver_refresh_writes_sparks_files(spark, delta_index, tmp_path,
         assert batches[0] == batches[1] and batches[0]
 
 
+def _page_tables(spark, ix) -> dict:
+    """The five tables an ingest appends to, as sorted row reprs."""
+    return {t: sorted(repr(tuple(r)) for r in
+                      spark.read.parquet(f"{ix}/{t}").collect())
+            for t in ("doc_map", "postings", "pages_text", "doc_meta",
+                      "links")}
+
+
+def _mixed_batch(spark):
+    """An ingest batch with urls twice (one copy identical, one with other
+    html, one with no html), a null url, a null-html page, a zero-token
+    page and a url ``delta_index`` already maps, read as a nullable-url
+    frame (as a parquet source reads)."""
+    from pyspark.sql import types as T
+
+    new = gen_pages(10, seed=67)
+    rows = new + [new[0], dict(new[4], html=new[5]["html"]),
+                  dict(new[6], html=None),
+                  dict(new[1], url=None),
+                  dict(new[2], url=new[2]["url"] + "-bos", html=None),
+                  dict(new[3], url=new[3]["url"] + "-sifir",
+                       html=b"<html><head></head><body></body></html>"),
+                  gen_pages(40, seed=53)[0]]
+    schema = T.StructType([T.StructField(f.name, f.dataType, True)
+                           for f in pages_schema().fields])
+    return spark.createDataFrame(rows, schema=schema)
+
+
+def test_driver_ingest_writes_sparks_files(spark, delta_index, tmp_path,
+                                           monkeypatch, ingest_regime):
+    """A driver ingest and a Spark ingest of the same mixed batch, on
+    copies of one index, append the same rows to all five tables, ids
+    included, in files of the same Arrow schema; ``spark.read.parquet``
+    types the mixed directories alike; after a delta refresh both answer
+    ``search``, ``search_with_meta``, ``search_with_snippets`` and
+    ``search_many`` alike. The driver append launches at most one Spark
+    job (its collect)."""
+    import os
+
+    from search_engine_tr_spark.operators.snippets import search_with_snippets
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    batch = _mixed_batch(spark)
+    base_files = {t: set(os.listdir(f"{delta_index}/{t}"))
+                  for t in ("doc_map", "postings", "pages_text", "doc_meta",
+                            "links")}
+    ixs, outs, schemas = {}, {}, {}
+    for regime in ("driver", "spark"):
+        ix = ixs[regime] = shutil.copytree(delta_index,
+                                           str(tmp_path / regime))
+        writes = ingest_regime(regime)
+        outs[regime], n = _jobs(
+            spark, "ingest-" + regime,
+            lambda: inc.incremental_index_update(spark, batch, ix))
+        assert bool(writes) == (regime == "driver")
+        if regime == "driver":
+            assert n <= 1
+        schemas[regime] = {
+            t: {pq.read_schema(f"{ix}/{t}/{f}").remove_metadata()
+                for f in set(os.listdir(f"{ix}/{t}")) - files
+                if f.endswith(".parquet")}
+            for t, files in base_files.items()}
+    # 12 fresh urls: ten pages, the null-html and the zero-token page; the
+    # null url and the mapped url are not fresh
+    assert outs["driver"] == outs["spark"] and outs["driver"]["new_docs"] == 12
+    assert schemas["driver"] == schemas["spark"]
+    assert all(len(v) == 1 for v in schemas["driver"].values())
+    drv, spk = ixs["driver"], ixs["spark"]
+    got = _page_tables(spark, drv)
+    assert got == _page_tables(spark, spk)
+    assert len(got["doc_map"]) == len(_page_tables(spark, delta_index)[
+        "doc_map"]) + 12
+    for t in base_files:
+        assert (spark.read.parquet(f"{drv}/{t}").schema
+                == spark.read.parquet(f"{spk}/{t}").schema), t
+
+    for ix in (drv, spk):
+        # the null-html and the zero-token page have no postings
+        assert inc.refresh_derived_delta(spark, ix)["delta_docs"] == 10
+    for cap in (DRIVER, DISTRIBUTED):
+        assert _answers(spark, drv, cap, monkeypatch) == \
+            _answers(spark, spk, cap, monkeypatch)
+    snippets = [[tuple(r) for q in QUERIES for r in search_with_snippets(
+        BM25Index(spark, ix), q, k=5).collect()] for ix in (drv, spk)]
+    assert snippets[0] == snippets[1] and snippets[0]
+    batches = [BM25Index(spark, ix).search_many(BATCH, k=10).collect()
+               for ix in (drv, spk)]
+    assert batches[0] == batches[1] and batches[0]
+
+
 def test_memory_reader_persists_nothing(spark, delta_index, tmp_path):
     """Opening a memory-mode reader and serving a page and a batch leaves
     the session's persistent RDDs as they were: the lexicon is a driver

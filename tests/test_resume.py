@@ -272,8 +272,8 @@ def test_result_rows_of_ingested_doc_on_chunked_build(
     assert row_of(search_with_snippets(idx, q, k=50))["snippet"]
 
 
-def test_crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
-                                                      monkeypatch):
+def _crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
+                                                   monkeypatch, regime):
     """An ingest that crashes after its companion appends, before its
     doc_map commit, on a two-chunk build: the replay's rollback finds the
     crashed root-level files beside the chunk directories, so every url is
@@ -281,17 +281,24 @@ def test_crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
     build of all pages."""
     import pyspark.sql.classic.dataframe as D
 
+    from search_engine_tr_spark.streaming import incremental as inc
+
     pages = gen_pages(40, seed=73)
     ix = str(tmp_path / "ix")
     build_index(spark, spark.createDataFrame(pages[:30], schema=pages_schema()),
                 ix, n_shards=2, term_buckets=4, n_chunks=2)
     batch = spark.createDataFrame(pages[30:], schema=pages_schema())
 
-    def boom(self, n):
-        raise RuntimeError("injected crash before doc_map commit")
+    def boom(*args):
+        if regime == "spark" or args[1].endswith("doc_map"):
+            raise RuntimeError("injected crash before doc_map commit")
+        return real(*args)
 
+    owner, name = ((D.DataFrame, "coalesce") if regime == "spark"
+                   else (inc, "_publish"))
+    real = getattr(owner, name)
     with monkeypatch.context() as m:
-        m.setattr(D.DataFrame, "coalesce", boom)
+        m.setattr(owner, name, boom)
         with pytest.raises(RuntimeError, match="injected crash"):
             incremental_index_update(spark, batch, ix)
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
@@ -305,3 +312,22 @@ def test_crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
         # a fresh build numbers the docs in its own order
         assert (_rows(spark, ix, t, drop=("doc_id",))
                 == _rows(spark, fresh, t, drop=("doc_id",))), t
+
+
+def test_crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
+                                                      monkeypatch,
+                                                      ingest_regime):
+    writes = ingest_regime("spark")
+    _crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
+                                                   monkeypatch, "spark")
+    assert not writes
+
+
+def test_crash_replay_on_chunked_build_keeps_urls_once_driver_regime(
+        spark, tmp_path, monkeypatch, ingest_regime):
+    """The crash at the driver regime's doc_map publish, whose table files
+    sit at the table roots beside the chunk directories."""
+    writes = ingest_regime("driver")
+    _crash_replay_on_chunked_build_keeps_urls_once(spark, tmp_path,
+                                                   monkeypatch, "driver")
+    assert len(writes) == 2

@@ -3,12 +3,41 @@ cold-start bootstrap, exactly-once appends across drains, duplicate-url
 replay safety, empty-drain no-op, and search parity with a from-scratch
 build over the same unique pages."""
 
+import contextlib
 import os
 
 from search_engine_tr_spark.operators.query_bm25 import BM25Index
 from search_engine_tr_spark.plans.index_build import build_index
 from search_engine_tr_spark.sources.synth import gen_pages, pages_schema
 from search_engine_tr_spark.streaming.incremental import stream_ingest_index
+
+
+@contextlib.contextmanager
+def _doc_map_commit_crashes(monkeypatch, regime, at=1):
+    """Within it, the ``at``-th and every later doc_map commit of an ingest
+    in ``regime`` raises: the Spark regime's coalesced doc_map write (the
+    CONCRETE class, Spark 4's split: patching the abstract
+    pyspark.sql.dataframe.DataFrame never fires) or the driver regime's
+    doc_map publish."""
+    import pyspark.sql.classic.dataframe as D
+
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    owner, name = ((D.DataFrame, "coalesce") if regime == "spark"
+                   else (inc, "_publish"))
+    real = getattr(owner, name)
+    calls = {"n": 0}
+
+    def crash(*args):
+        if regime == "spark" or args[1].endswith("doc_map"):
+            calls["n"] += 1
+            if calls["n"] >= at:
+                raise RuntimeError("injected crash before doc_map commit")
+        return real(*args)
+
+    with monkeypatch.context() as m:
+        m.setattr(owner, name, crash)
+        yield
 
 
 def _write_wave(spark, pages, dest):
@@ -141,19 +170,16 @@ def test_stream_ingest_heals_stale_derived(spark, tmp_path):
     assert all_urls == fresh_urls
 
 
-def test_crash_before_doc_map_commit_is_rolled_back(spark, tmp_path,
-                                                    monkeypatch):
+def _crash_before_doc_map_commit_is_rolled_back(spark, tmp_path,
+                                                 monkeypatch, regime):
     """The widest crash window of the r4 commit protocol: postings AND all
     companion tables appended, process dies just before the doc_map commit
-    (injected at the commit's coalesce call). The replay must (a) still see
-    the batch as fresh (doc_map is the anti-join key and was never
-    written), (b) roll back the orphan postings/doc_meta files and guard
-    the url-keyed companions, and (c) leave the index byte-equivalent to a
-    clean run — no lost documents (the r3 bug: doc_map-first ordering made
-    crashed docs permanently unsearchable) and no duplicated rows."""
-    # the CONCRETE class (Spark 4 split): patching the abstract
-    # pyspark.sql.dataframe.DataFrame never fires
-    import pyspark.sql.classic.dataframe as D
+    (injected at the commit). The replay must (a) still see the batch as
+    fresh (doc_map is the anti-join key and was never written), (b) roll
+    back the orphan postings/doc_meta files and guard the url-keyed
+    companions, and (c) leave the index byte-equivalent to a clean run —
+    no lost documents (the r3 bug: doc_map-first ordering made crashed docs
+    permanently unsearchable) and no duplicated rows."""
     import pytest
 
     from search_engine_tr_spark.streaming.incremental import \
@@ -166,15 +192,9 @@ def test_crash_before_doc_map_commit_is_rolled_back(spark, tmp_path,
                 ix, n_shards=4, term_buckets=8)
     batch = spark.createDataFrame(pages[40:], schema=pages_schema())
 
-    orig_coalesce = D.DataFrame.coalesce
-
-    def boom(self, n):
-        raise RuntimeError("injected crash before doc_map commit")
-
-    monkeypatch.setattr(D.DataFrame, "coalesce", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch, ix)
-    monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
+    with _doc_map_commit_crashes(monkeypatch, regime):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_index_update(spark, batch, ix)
 
     # crashed state: intent marker present, doc_map untouched
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
@@ -204,6 +224,25 @@ def test_crash_before_doc_map_commit_is_rolled_back(spark, tmp_path,
     build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
                 fresh_ix, n_shards=4, term_buckets=8)
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
+
+
+def test_crash_before_doc_map_commit_is_rolled_back(spark, tmp_path,
+                                                    monkeypatch,
+                                                    ingest_regime):
+    writes = ingest_regime("spark")
+    _crash_before_doc_map_commit_is_rolled_back(spark, tmp_path, monkeypatch,
+                                                "spark")
+    assert not writes
+
+
+def test_crash_before_doc_map_commit_is_rolled_back_driver_regime(
+        spark, tmp_path, monkeypatch, ingest_regime):
+    """The crash at the driver regime's doc_map publish: its four table
+    files are rolled back and the replay is exact."""
+    writes = ingest_regime("driver")
+    _crash_before_doc_map_commit_is_rolled_back(spark, tmp_path, monkeypatch,
+                                                "driver")
+    assert len(writes) == 2
 
 
 def test_zero_token_pages_do_not_loop_rebuilds(spark, tmp_path):
@@ -405,6 +444,103 @@ def test_leftover_temp_file_is_not_data(spark, tmp_path, monkeypatch,
     assert len(writes) == 2
 
 
+def test_torn_ingest_temp_file_is_debris(spark, tmp_path, monkeypatch,
+                                         ingest_regime):
+    """A driver-regime ingest that crashes while writing its pages_text
+    file leaves that file torn under its temporary name, after its
+    postings file. The replay deletes the temporary file as debris, rolls
+    the postings file back and commits each url once."""
+    import pytest
+
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    writes = ingest_regime("driver")
+    pages = gen_pages(50, seed=31)
+    ix = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pages[:40],
+                                             schema=pages_schema()),
+                ix, n_shards=4, term_buckets=8)
+    batch = spark.createDataFrame(pages[40:], schema=pages_schema())
+    real_write = inc.pq.write_table
+
+    def torn(table, where, **kwargs):
+        if "/pages_text/" not in where:
+            return real_write(table, where, **kwargs)
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise RuntimeError("injected crash mid-write")
+
+    with monkeypatch.context() as m:
+        m.setattr(inc.pq, "write_table", torn)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            inc.incremental_index_update(spark, batch, ix)
+    tmps = [os.path.join(d, f) for d, _, fs in os.walk(ix) for f in fs
+            if inc._is_tmp(f)]
+    assert len(tmps) == 1 and "/pages_text/" in tmps[0]
+    assert spark.read.parquet(os.path.join(ix, "doc_map")).count() == 40
+
+    m = inc.incremental_index_update(spark, batch, ix, refresh_derived=True)
+    assert m["new_docs"] == 10 and m["rolled_back_files"] == 1
+    assert not os.path.exists(tmps[0]) and len(writes) == 2
+    for table in ("doc_map", "pages_text", "doc_meta"):
+        t = spark.read.parquet(os.path.join(ix, table))
+        assert t.count() == t.select("url").distinct().count() == 50, table
+    fresh_ix = str(tmp_path / "fresh")
+    build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
+                fresh_ix, n_shards=4, term_buckets=8)
+    assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
+
+
+def _appended_rows(spark, ix) -> dict:
+    """The five tables an ingest appends to, as sorted row reprs."""
+    return {t: sorted(repr(tuple(r)) for r in
+                      spark.read.parquet(os.path.join(ix, t)).collect())
+            for t in ("doc_map", "postings", "pages_text", "doc_meta",
+                      "links")}
+
+
+def test_ingest_above_driver_caps_takes_spark_regime(spark, tmp_path,
+                                                     monkeypatch,
+                                                     ingest_regime):
+    """A batch whose fresh-url check would read more doc_map rows than
+    ``_DRIVER_MAX_URL_CHECK_ROWS``, or with more pages than
+    ``_DRIVER_MAX_INGEST_PAGES``, is appended by the Spark regime, to the
+    same rows as the driver regime's. In every regime ``new_postings`` (the
+    Spark regime's from the parquet footers) is the batch's postings row
+    count."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from search_engine_tr_spark.plans.index_build import read_table
+    from search_engine_tr_spark.streaming import incremental as inc
+
+    pages = gen_pages(50, seed=37)
+    base = str(tmp_path / "base")
+    build_index(spark, spark.createDataFrame(pages[:40],
+                                             schema=pages_schema()),
+                base, n_shards=4, term_buckets=8)
+    batch = spark.createDataFrame(pages[35:], schema=pages_schema())
+    writes = ingest_regime("driver")
+    got = {}
+    for case, cap, value in (
+            ("driver", None, None),
+            ("url check", "_DRIVER_MAX_URL_CHECK_ROWS", 39),
+            ("pages", "_DRIVER_MAX_INGEST_PAGES", 14)):
+        ix = shutil.copytree(base, str(tmp_path / case.replace(" ", "_")))
+        n_writes = len(writes)
+        with monkeypatch.context() as m:
+            if cap is not None:
+                m.setattr(inc, cap, value)
+            out = inc.incremental_index_update(spark, batch, ix)
+        assert (len(writes) > n_writes) == (cap is None), case
+        assert out["new_docs"] == 10
+        assert out["new_postings"] == read_table(spark, ix + "/postings") \
+            .filter(F.col("doc_id") > 39).count() > 0
+        got[case] = (out, _appended_rows(spark, ix))
+    assert got["url check"] == got["driver"] == got["pages"]
+
+
 def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
                                                     monkeypatch):
     """A DIRECT refresh_derived_delta call while a crashed ingest's intent
@@ -412,7 +548,6 @@ def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
     above doc_map max): the ingest replay will roll those files back and
     re-append them, so folding them early would double-count df and
     duplicate blocks (round-4 self-review finding)."""
-    import pyspark.sql.classic.dataframe as D
     import pytest
 
     from search_engine_tr_spark.streaming.incremental import (
@@ -425,15 +560,9 @@ def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
                 ix, n_shards=4, term_buckets=8)
     batch = spark.createDataFrame(pages[40:], schema=pages_schema())
 
-    orig_coalesce = D.DataFrame.coalesce
-
-    def boom(self, n):
-        raise RuntimeError("injected crash before doc_map commit")
-
-    monkeypatch.setattr(D.DataFrame, "coalesce", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch, ix)
-    monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
+    with _doc_map_commit_crashes(monkeypatch, "spark"):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_index_update(spark, batch, ix)
 
     # orphan postings exist above doc_map max, intent is live
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
@@ -453,22 +582,25 @@ def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
 
 def test_delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
                                                     monkeypatch,
-                                                    refresh_regime):
+                                                    refresh_regime,
+                                                    ingest_regime):
+    ingest_regime("spark")
     writes = refresh_regime("driver")
     _delta_refresh_ignores_uncommitted_postings(spark, tmp_path, monkeypatch)
     assert writes
 
 
 def test_delta_refresh_ignores_uncommitted_postings_spark_regime(
-        spark, tmp_path, monkeypatch, refresh_regime):
+        spark, tmp_path, monkeypatch, refresh_regime, ingest_regime):
     """The uncommitted-postings bound on the Spark path."""
+    ingest_regime("spark")
     writes = refresh_regime("spark")
     _delta_refresh_ignores_uncommitted_postings(spark, tmp_path, monkeypatch)
     assert not writes
 
 
-def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
-                                                      monkeypatch):
+def _rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
+                                                   monkeypatch, regime):
     """ADVICE r5 (medium): rebuild_derived (e.g. compact_job --canonicalize)
     running BETWEEN a crashed ingest and its replay must not fold the
     crashed batch's orphan postings — folding them would make ghost docs
@@ -476,7 +608,6 @@ def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
     re-appends those ids the next delta refresh would fold them AGAIN
     (derived_max_doc_id was set from doc_map, below the orphan ids),
     doubling df and duplicating blocks."""
-    import pyspark.sql.classic.dataframe as D
     import pytest
 
     from search_engine_tr_spark.plans.index_build import load_meta
@@ -490,15 +621,9 @@ def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
                 ix, n_shards=4, term_buckets=8)
     batch = spark.createDataFrame(pages[40:], schema=pages_schema())
 
-    orig_coalesce = D.DataFrame.coalesce
-
-    def boom(self, n):
-        raise RuntimeError("injected crash before doc_map commit")
-
-    monkeypatch.setattr(D.DataFrame, "coalesce", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch, ix)
-    monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
+    with _doc_map_commit_crashes(monkeypatch, regime):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_index_update(spark, batch, ix)
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
 
     # canonicalization between crash and replay: folds committed docs only
@@ -527,13 +652,32 @@ def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
 
 
-def test_crash_replayed_with_different_batch(spark, tmp_path, monkeypatch):
+def test_rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
+                                                      monkeypatch,
+                                                      ingest_regime):
+    writes = ingest_regime("spark")
+    _rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
+                                                  monkeypatch, "spark")
+    assert not writes
+
+
+def test_rebuild_derived_ignores_uncommitted_postings_driver_regime(
+        spark, tmp_path, monkeypatch, ingest_regime):
+    """A full rebuild between a crashed driver-regime ingest and its
+    replay folds the committed docs only."""
+    writes = ingest_regime("driver")
+    _rebuild_derived_ignores_uncommitted_postings(spark, tmp_path,
+                                                  monkeypatch, "driver")
+    assert len(writes) == 2
+
+
+def _crash_replayed_with_different_batch(spark, tmp_path, monkeypatch,
+                                         regime):
     """ADVICE r5 (low): a direct caller that crashes mid-batch A and later
     ingests a DIFFERENT batch B must still roll back A's url-keyed
     companion rows (pages_text/links) — a batch-scoped anti-join guard
     would leave them orphaned, and re-ingesting A afterwards would then
     append those urls a SECOND time, duplicating snippet/link rows."""
-    import pyspark.sql.classic.dataframe as D
     import pytest
 
     from search_engine_tr_spark.streaming.incremental import \
@@ -547,15 +691,9 @@ def test_crash_replayed_with_different_batch(spark, tmp_path, monkeypatch):
     batch_a = spark.createDataFrame(pages[40:50], schema=pages_schema())
     batch_b = spark.createDataFrame(pages[50:60], schema=pages_schema())
 
-    orig_coalesce = D.DataFrame.coalesce
-
-    def boom(self, n):
-        raise RuntimeError("injected crash before doc_map commit")
-
-    monkeypatch.setattr(D.DataFrame, "coalesce", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch_a, ix)
-    monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
+    with _doc_map_commit_crashes(monkeypatch, regime):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_index_update(spark, batch_a, ix)
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
 
     # replay with a DIFFERENT batch: A's companion orphans rolled back
@@ -587,7 +725,24 @@ def test_crash_replayed_with_different_batch(spark, tmp_path, monkeypatch):
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
 
 
-def test_chunked_bulk_commit(spark, tmp_path, monkeypatch):
+def test_crash_replayed_with_different_batch(spark, tmp_path, monkeypatch,
+                                             ingest_regime):
+    writes = ingest_regime("spark")
+    _crash_replayed_with_different_batch(spark, tmp_path, monkeypatch,
+                                         "spark")
+    assert not writes
+
+
+def test_crash_replayed_with_different_batch_driver_regime(
+        spark, tmp_path, monkeypatch, ingest_regime):
+    """A crashed driver-regime batch rolled back by a different batch."""
+    writes = ingest_regime("driver")
+    _crash_replayed_with_different_batch(spark, tmp_path, monkeypatch,
+                                         "driver")
+    assert len(writes) == 3
+
+
+def _chunked_bulk_commit(spark, tmp_path, monkeypatch):
     """VERDICT r4 #5: a batch above the commit chunk size commits as
     sequential url-hash chunks — multiple single-file doc_map commits
     instead of one serialized coalesce(1) task — with identical results
@@ -621,11 +776,26 @@ def test_chunked_bulk_commit(spark, tmp_path, monkeypatch):
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
 
 
-def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
+def test_chunked_bulk_commit(spark, tmp_path, monkeypatch, ingest_regime):
+    writes = ingest_regime("spark")
+    _chunked_bulk_commit(spark, tmp_path, monkeypatch)
+    assert not writes
+
+
+def test_chunked_bulk_commit_driver_regime(spark, tmp_path, monkeypatch,
+                                           ingest_regime):
+    """Each chunk of a bulk batch commits one driver-written doc_map
+    file."""
+    writes = ingest_regime("driver")
+    _chunked_bulk_commit(spark, tmp_path, monkeypatch)
+    assert len(writes) == 4
+
+
+def _chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch,
+                                         regime):
     """Crash during the SECOND chunk's doc_map commit: chunk 1 stays
     durably committed, chunk 2 rolls back on replay, and the replayed
     bulk ingest converges to the exact index."""
-    import pyspark.sql.classic.dataframe as D
     import pytest
 
     from search_engine_tr_spark.streaming import incremental
@@ -640,19 +810,9 @@ def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
                 ix, n_shards=4, term_buckets=8)
     batch = spark.createDataFrame(pages[30:], schema=pages_schema())
 
-    orig_coalesce = D.DataFrame.coalesce
-    calls = {"n": 0}
-
-    def boom_second(self, n):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("injected crash in chunk 2 commit")
-        return orig_coalesce(self, n)
-
-    monkeypatch.setattr(D.DataFrame, "coalesce", boom_second)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_index_update(spark, batch, ix)
-    monkeypatch.setattr(D.DataFrame, "coalesce", orig_coalesce)
+    with _doc_map_commit_crashes(monkeypatch, regime, at=2):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_index_update(spark, batch, ix)
 
     # chunk 1 committed, chunk 2's intent still live
     assert os.path.exists(os.path.join(ix, "_ingest_intent.json"))
@@ -672,6 +832,23 @@ def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch):
     build_index(spark, spark.createDataFrame(pages, schema=pages_schema()),
                 fresh_ix, n_shards=4, term_buckets=8)
     assert _results(spark, ix, QUERIES) == _results(spark, fresh_ix, QUERIES)
+
+
+def test_chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch,
+                                             ingest_regime):
+    writes = ingest_regime("spark")
+    _chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch,
+                                         "spark")
+    assert not writes
+
+
+def test_chunked_bulk_commit_crash_mid_chunk_driver_regime(
+        spark, tmp_path, monkeypatch, ingest_regime):
+    """The crash at the second chunk's driver doc_map publish."""
+    writes = ingest_regime("driver")
+    _chunked_bulk_commit_crash_mid_chunk(spark, tmp_path, monkeypatch,
+                                         "driver")
+    assert writes
 
 
 def test_stream_ingest_refresh_scores(spark, tmp_path):
