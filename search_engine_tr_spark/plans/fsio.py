@@ -16,13 +16,11 @@ VERDICT r3 item 7). Here every sidecar operation goes through:
 
 No new dependency: the JVM classes ship with pyspark.
 
-Four helpers serve the driver-side table IO: ``arrow_root`` resolves a
-root for ``pyarrow`` (the driver regimes of the reader, the delta refresh
-and the ingest), ``footers`` reads a table's parquet footers
-through a bounded cache, ``column_stats`` reads a column's max and the
-row counts of a parquet table from those footers instead of with a Spark
-job, and ``row_count`` reads only the row count, from the footers on any
-root.
+Two helpers serve the driver-side table IO: ``arrow_root`` resolves a root
+for ``pyarrow`` (the driver regimes of the reader, the delta refresh and
+the ingest), and ``column_stats`` reads a column's max and the row counts
+of a parquet table from its file footers instead of with a Spark job;
+``row_count`` reads only the row count, from the footers on any root.
 """
 
 from __future__ import annotations
@@ -188,56 +186,22 @@ def arrow_root(root: str):
         return None
 
 
-# parquet footers already read, keyed (path, size, mtime_ns) so a rewritten
-# file is read again; oldest first, at most _FOOTERS_MAX of them
-_FOOTERS: dict = {}
-_FOOTERS_MAX = 4096
-
-
-def footers(fs, table_dir: str) -> dict:
-    """{file: pyarrow FileMetaData} of the parquet files under ``table_dir``
-    (recursive: partitioned tables nest) on the pyarrow filesystem ``fs``
-    that Spark reads, i.e. not under a ``_`` or ``.`` name (``_temporary``,
-    a hidden in-flight file). A footer is read from the file once and then
-    served from a bounded cache while the file's size and mtime stay."""
-    import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
-
-    infos = fs.get_file_info(pafs.FileSelector(table_dir, recursive=True,
-                                               allow_not_found=True))
-    prefix = table_dir.rstrip("/") + "/"
-    out = {}
-    for info in sorted(infos, key=lambda i: i.path):
-        rel = info.path[len(prefix):] if info.path.startswith(prefix) \
-            else info.base_name
-        if (info.type != pafs.FileType.File
-                or not info.path.endswith(".parquet")
-                or any(p.startswith(("_", ".")) for p in rel.split("/"))):
-            continue
-        key = (info.path, info.size, info.mtime_ns)
-        md = _FOOTERS.pop(key, None)
-        if md is None:
-            md = pq.read_metadata(info.path, filesystem=fs)
-        _FOOTERS[key] = md
-        out[info.path] = md
-    while len(_FOOTERS) > _FOOTERS_MAX:
-        del _FOOTERS[next(iter(_FOOTERS))]
-    return out
-
-
 def column_stats(spark, table_dir: str, col: str) -> dict:
     """{file: (max of ``col`` or None, row count)} over the parquet files
-    under ``table_dir`` that Spark reads (see ``footers``).
+    under ``table_dir`` (recursive: partitioned tables nest) that Spark
+    reads, i.e. not under a ``_`` or ``.`` name (``_temporary``, a hidden
+    in-flight file).
 
-    Local roots read the parquet FOOTERS only (``footers``): O(#files), no
-    data scan. A file without ``col`` has max None; a file without usable
-    stats for it is read for that one column. Non-local roots run one
-    column-pruned Spark aggregate per file."""
+    Local roots read the parquet FOOTERS only: O(#files), no data scan. A
+    file without ``col`` has max None; a file without usable stats for it
+    is read for that one column. Non-local roots run one column-pruned
+    Spark aggregate per file."""
+    files = [fp for fp in list_files_recursive(spark, table_dir)
+             if fp.endswith(".parquet")]
     lp = local_path(table_dir)
     if lp is None:
-        if not any(fp.endswith(".parquet")
-                   for fp in list_files_recursive(spark, table_dir)):
-            return {}  # no table: nothing for Spark to read
+        if not files:  # no table: nothing for Spark to read
+            return {}
         from pyspark.sql import functions as F
 
         df = spark.read.option("mergeSchema", "true").parquet(table_dir)
@@ -248,11 +212,14 @@ def column_stats(spark, table_dir: str, col: str) -> dict:
         return {r["f"]: (None if r["mx"] is None else int(r["mx"]), r["n"])
                 for r in rows}
     import pyarrow.compute as pc
-    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
     out = {}
-    for fp, md in footers(pafs.LocalFileSystem(), lp).items():
+    for fp in files:
+        if any(p.startswith(("_", "."))
+               for p in os.path.relpath(fp, lp).split(os.sep)):
+            continue
+        md = pq.ParquetFile(fp).metadata
         mx = None
         if col in md.schema.names:
             ci = md.schema.names.index(col)

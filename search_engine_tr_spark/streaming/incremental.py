@@ -27,7 +27,6 @@ import os
 import posixpath
 import uuid
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -186,13 +185,19 @@ def incremental_index_update(spark: SparkSession, new_pages: DataFrame,
 # ~1.1 KB pages, medians of 2): driver vs Spark append 0.34 vs 3.92 s at
 # 50 pages, 1.78 vs 3.53 s at 1000, 3.32 vs 4.40 s at 2000 and 6.26 vs
 # 5.46 s at 4000, so the page cap sits at half the last size the driver
-# won.
+# won. The bytes cap is checked once the batch is collected, so it does
+# not bound the collect itself: that holds up to the page cap + 1 pages,
+# e.g. ~1 GB of 1 MB pages (Common Crawl's truncation size), which needs
+# spark.driver.maxResultSize and the driver heap above it or the ingest
+# fails where the Spark regime would not.
 _DRIVER_MAX_INGEST_PAGES = 1000
 _DRIVER_MAX_INGEST_BYTES = 64 << 20
-# doc_map rows the fresh-url check reads at most: the url column of the row
-# groups whose footer min/max can hold one of the batch's urls. A batch
-# whose candidate rows exceed it takes the Spark regime, so the check's
-# memory (~50 MB of urls) stays bounded however large doc_map grows
+# doc_map rows the driver regime's fresh-url check reads: the whole url
+# column on every ingest, since the build writes doc_map hash-partitioned
+# by url and no footer min/max could narrow the read. The check streams,
+# so its memory does not grow with doc_map but its time does: ~0.06 s at
+# the cap (2^20 ~45-byte urls, 4 vCPU). An index that maps more docs takes
+# the Spark regime without collecting the batch
 _DRIVER_MAX_URL_CHECK_ROWS = 1 << 20
 
 
@@ -228,44 +233,23 @@ def _collect_batch(new_pages: DataFrame) -> pa.Table | None:
     return batch
 
 
-def _fresh_rows(arrow, batch: pa.Table) -> pa.Table | None:
-    """The rows of ``batch`` whose url doc_map does not hold, or None when
-    the check would read more than ``_DRIVER_MAX_URL_CHECK_ROWS`` doc_map
-    rows.
-
-    Only the row groups whose url min/max footer statistics can hold one
-    of the batch's urls are read (a row group without them is read), found
-    by ``searchsorted`` of each row group's bounds in the sorted batch
-    urls; the footers come from ``fsio.footers``' cache. Duplicate urls
-    keep all their rows here (``_one_page_per_url_local`` then keeps one)."""
+def _fresh_rows(arrow, batch: pa.Table) -> pa.Table:
+    """The rows of ``batch`` whose url doc_map does not hold: one pyarrow
+    scan of doc_map's url column keeps the urls in the batch's set, so the
+    check holds the scan's buffers and the hits, not the column. Duplicate
+    urls keep all their rows here (``_one_page_per_url_local`` then keeps
+    one)."""
     fs, root = arrow
     if not batch.num_rows:
         return batch
-    urls = np.array(sorted(set(batch["url"].to_pylist())), dtype=object)
-    mapped, rows = [], 0
-    for path, md in fsio.footers(fs, posixpath.join(root, "doc_map")).items():
-        ci = md.schema.names.index("url")
-        lo, hi = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            has = st is not None and st.has_min_max
-            lo.append(st.min if has else urls[0])
-            hi.append(st.max if has else urls[-1])
-        hit = (np.searchsorted(urls, np.array(lo, dtype=object), "left")
-               < np.searchsorted(urls, np.array(hi, dtype=object), "right"))
-        groups = np.flatnonzero(hit).tolist()
-        rows += sum(md.row_group(rg).num_rows for rg in groups)
-        if rows > _DRIVER_MAX_URL_CHECK_ROWS:
-            return None
-        if groups:
-            mapped.append(pq.ParquetFile(path, metadata=md, filesystem=fs)
-                          .read_row_groups(groups, columns=["url"])["url"])
-    if not mapped:
-        return batch
-    known = pa.chunked_array([c for col in mapped for c in col.chunks],
-                             pa.string()).combine_chunks()
+    urls = batch["url"].combine_chunks()
+    mapped = ds.dataset(posixpath.join(root, "doc_map"),
+                        schema=_DOC_MAP_ARROW, format="parquet",
+                        filesystem=fs).to_table(
+        columns=["url"],
+        filter=ds.field("url").isin(urls.cast(pa.string())))["url"]
     return batch.filter(pc.invert(pc.is_in(
-        batch["url"], value_set=known.cast(batch["url"].type))))
+        urls, value_set=mapped.combine_chunks().cast(urls.type))))
 
 
 def _one_page_per_url(pages: DataFrame) -> DataFrame:
@@ -338,9 +322,9 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
 
     Two regimes append the same rows. On a root pyarrow can open
     (``fsio.arrow_root``), a batch within ``_DRIVER_MAX_INGEST_PAGES`` and
-    ``_DRIVER_MAX_INGEST_BYTES`` whose fresh-url check stays within
-    ``_DRIVER_MAX_URL_CHECK_ROWS`` runs on the DRIVER: one Arrow collect
-    (the only Spark job), the footer-addressed url check
+    ``_DRIVER_MAX_INGEST_BYTES``, into an index that maps at most
+    ``_DRIVER_MAX_URL_CHECK_ROWS`` docs, runs on the DRIVER: one Arrow
+    collect (the only Spark job), a url check against doc_map's url column
     (``_fresh_rows``) and one pyarrow file per table
     (``_write_batch_driver``). Any other batch runs the Spark regime: a
     checkpointed doc_map anti-join and partitioned Spark appends."""
@@ -348,7 +332,8 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     intent = os.path.join(index_dir, INGEST_INTENT)
     # explicit None check: `or -1` would treat a legitimate max doc_id of 0
     # as missing and restart ids at 0, colliding with the existing doc
-    _max_id = fsio.column_max_count(spark, paths.doc_map, "doc_id")[0]
+    _max_id, n_mapped = fsio.column_max_count(spark, paths.doc_map,
+                                              "doc_id")
     base = -1 if _max_id is None else _max_id
     n_rolled_back = 0
     if fsio.exists(spark, intent):
@@ -379,7 +364,8 @@ def _ingest_core(spark: SparkSession, new_pages: DataFrame, index_dir: str,
     # rollback invariant (ADVICE r5)
     new_pages = new_pages.filter(F.col("url").isNotNull())
     arrow = fsio.arrow_root(index_dir)
-    batch = None if arrow is None else _collect_batch(new_pages)
+    batch = (_collect_batch(new_pages) if arrow is not None
+             and n_mapped <= _DRIVER_MAX_URL_CHECK_ROWS else None)
     fresh = None if batch is None else _fresh_rows(arrow, batch)
     if fresh is None:
         # Freshness discovery in ONE column-pruned doc_map anti-join of the
@@ -456,6 +442,11 @@ def _append_spark(spark: SparkSession, paths: IndexPaths,
     # COMMIT: one coalesced doc_map file — the append becomes visible as a
     # single atomic rename, and with it the whole batch
     new_ids.coalesce(1).write.mode("append").parquet(paths.doc_map)
+    if fsio.local_path(paths.postings) is None:
+        # off the driver's disk column_stats scans the whole table in
+        # Spark; this count reads only the row groups whose stats pass
+        return read_table(spark, paths.postings) \
+            .filter(F.col("doc_id") > base).count()
     # the batch's postings count from the footers: the files whose max
     # doc_id is above the old high-water mark are exactly this attempt's,
     # since a crashed attempt's were rolled back before it

@@ -502,16 +502,18 @@ def _appended_rows(spark, ix) -> dict:
 def test_ingest_above_driver_caps_takes_spark_regime(spark, tmp_path,
                                                      monkeypatch,
                                                      ingest_regime):
-    """A batch whose fresh-url check would read more doc_map rows than
-    ``_DRIVER_MAX_URL_CHECK_ROWS``, or with more pages than
-    ``_DRIVER_MAX_INGEST_PAGES``, is appended by the Spark regime, to the
-    same rows as the driver regime's. In every regime ``new_postings`` (the
-    Spark regime's from the parquet footers) is the batch's postings row
-    count."""
+    """An ingest into an index that maps more docs than
+    ``_DRIVER_MAX_URL_CHECK_ROWS`` (without collecting the batch), or of a
+    batch with more pages than ``_DRIVER_MAX_INGEST_PAGES``, is appended
+    by the Spark regime, to the same rows as the driver regime's. In every
+    regime ``new_postings`` (the Spark regime's from the parquet footers on
+    a local root, from a filtered count through the Hadoop branch) is the
+    batch's postings row count."""
     import shutil
 
     from pyspark.sql import functions as F
 
+    from search_engine_tr_spark.plans import fsio
     from search_engine_tr_spark.plans.index_build import read_table
     from search_engine_tr_spark.streaming import incremental as inc
 
@@ -522,23 +524,30 @@ def test_ingest_above_driver_caps_takes_spark_regime(spark, tmp_path,
                 base, n_shards=4, term_buckets=8)
     batch = spark.createDataFrame(pages[35:], schema=pages_schema())
     writes = ingest_regime("driver")
+    collects = []
+    real_collect = inc._collect_batch
+    monkeypatch.setattr(inc, "_collect_batch",
+                        lambda df: collects.append(1) or real_collect(df))
     got = {}
-    for case, cap, value in (
-            ("driver", None, None),
-            ("url check", "_DRIVER_MAX_URL_CHECK_ROWS", 39),
-            ("pages", "_DRIVER_MAX_INGEST_PAGES", 14)):
+    for case, patches in (
+            ("driver", ()),
+            ("url check", ((inc, "_DRIVER_MAX_URL_CHECK_ROWS", 39),)),
+            ("pages", ((inc, "_DRIVER_MAX_INGEST_PAGES", 14),)),
+            ("hadoop", ((inc, "_DRIVER_MAX_INGEST_PAGES", 14),
+                        (fsio, "local_path", lambda p: None)))):
         ix = shutil.copytree(base, str(tmp_path / case.replace(" ", "_")))
-        n_writes = len(writes)
+        n_writes, n_collects = len(writes), len(collects)
         with monkeypatch.context() as m:
-            if cap is not None:
-                m.setattr(inc, cap, value)
+            for owner, name, value in patches:
+                m.setattr(owner, name, value)
             out = inc.incremental_index_update(spark, batch, ix)
-        assert (len(writes) > n_writes) == (cap is None), case
+        assert (len(writes) > n_writes) == (case == "driver"), case
+        assert (len(collects) > n_collects) == (case != "url check"), case
         assert out["new_docs"] == 10
         assert out["new_postings"] == read_table(spark, ix + "/postings") \
             .filter(F.col("doc_id") > 39).count() > 0
         got[case] = (out, _appended_rows(spark, ix))
-    assert got["url check"] == got["driver"] == got["pages"]
+    assert got["url check"] == got["driver"] == got["pages"] == got["hadoop"]
 
 
 def _delta_refresh_ignores_uncommitted_postings(spark, tmp_path,
